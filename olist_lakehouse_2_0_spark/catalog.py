@@ -77,6 +77,8 @@ class Catalog:
                 return spark.read.parquet(
                     _latest_version(spark, ref.path)
                 )
+            if ref.format == "parquet":
+                return read_parquet(spark, ref.path)
             return spark.read.format(ref.format).load(ref.path)
         # Unregistered names: resolve a versioned layout if one exists
         # on disk (a previous process's write_versioned), else the
@@ -1082,10 +1084,12 @@ def load(
 ) -> DataFrame:
     """Shorthand: read one driver testdata table as a DataFrame.
 
-    ``events.parquet`` is written with TIMESTAMP(NANOS), which Spark's
-    vectorized reader rejects; it is read via the nanosAsLong legacy
-    flag and converted back to a (microsecond) timestamp — lossless for
-    this data, whose sub-microsecond component is always zero.
+    Every table is read through :func:`read_parquet`, so repeated loads
+    of an unchanged table skip schema inference. ``events`` goes through
+    :func:`_load_nanos_ts`: the reference ``events.parquet`` stores
+    ``ts`` as TIMESTAMP(MICROS) and reads directly; a TIMESTAMP(NANOS)
+    file, which Spark's reader rejects, falls back to the nanosAsLong
+    legacy flag and is converted back to a (microsecond) timestamp.
 
     ``spread=True`` requests :func:`spread_scan` — use it when the
     consumer does heavy per-row compute directly on the scan output.
@@ -1094,8 +1098,70 @@ def load(
     if name == "events":
         df = _load_nanos_ts(spark, path, "ts")
     else:
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
     return spread_scan(spark, df) if spread else df
+
+
+#: Session confs that change how parquet footers map to Spark types;
+#: a schema inferred under one setting is never reused under another.
+_PARQUET_TYPE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+#: (path, type confs) -> (file versions, inferred schema). Schemas only,
+#: never data: the same thing a metastore holds for a catalog table.
+#: Process-wide on purpose: the key covers every input inference reads,
+#: so any session or thread may reuse an entry.
+_SCHEMA_MEMO: dict[tuple, tuple] = {}
+
+
+def _file_versions(path: str) -> tuple:
+    """(relative path, size, mtime_ns) of every file under ``path`` (or
+    of ``path`` itself), so any rewrite of the table changes the key."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    out = []
+    for root, _, names in os.walk(path):
+        for nm in names:
+            full = os.path.join(root, nm)
+            st = os.stat(full)
+            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per table
+    version.
+
+    A plain parquet read without a schema runs a Spark job to read
+    footers on every call. This memoises the inferred ``StructType``,
+    keyed on the path, the size and mtime of every file under it, and
+    the session confs that change parquet type mapping, then reads with
+    ``spark.read.schema(s)``. Only successful inferences are memoised,
+    so a read that raises (a TIMESTAMP(NANOS) footer without the
+    nanosAsLong flag) raises again next time. Paths that are not on the
+    local filesystem are read without the memo.
+    """
+    if not os.path.exists(path):
+        return spark.read.parquet(path)
+    key = (
+        os.path.abspath(path),
+        tuple(spark.conf.get(k, None) for k in _PARQUET_TYPE_CONFS),
+    )
+    # Versions are taken BEFORE inference: a rewrite racing the
+    # inference leaves a stale version in the entry, never a stale schema.
+    versions = _file_versions(path)
+    hit = _SCHEMA_MEMO.get(key)
+    if hit is not None and hit[0] == versions:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_MEMO[key] = (versions, df.schema)
+    return df
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
@@ -1137,13 +1203,13 @@ def _load_nanos_ts(spark: SparkSession, path: str, ts_col: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
-    # Driver testdata has shipped the events timestamp two ways: as a
-    # real parquet TIMESTAMP (readable directly) and as TIMESTAMP(NANOS)
-    # (which Spark only reads via the nanosAsLong legacy flag, as int64
-    # epoch-nanos). Probe the plain read first and only fall back to the
-    # nanos path when the column is long-typed or the footer is rejected.
+    # The reference events file stores the timestamp as a real parquet
+    # TIMESTAMP(MICROS), which reads directly. A TIMESTAMP(NANOS) file
+    # reads only via the nanosAsLong legacy flag, as int64 epoch-nanos.
+    # Probe the plain read first and only fall back to the nanos path
+    # when the column is long-typed or the footer is rejected.
     try:
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         if not isinstance(df.schema[ts_col].dataType, LongType):
             # Cast NTZ → TIMESTAMP (session tz is UTC, values unchanged)
             # so downstream watermarks/windows see event-time typing.
@@ -1160,7 +1226,7 @@ def _load_nanos_ts(spark: SparkSession, path: str, ts_col: str) -> DataFrame:
     # affects TIMESTAMP(NANOS) columns, which nothing else reads.
     key = "spark.sql.legacy.parquet.nanosAsLong"
     spark.conf.set(key, "true")
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     # `div` = integer division: epoch-nanos exceed double's 53-bit
     # mantissa, so `/ 1000` + cast would be off by ±1 microsecond.
     return df.withColumn(

@@ -55,6 +55,17 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        # --- compile once: hold the working set of generated classes ---
+        # Spark's default cache holds 100 entries. One pass over all
+        # registered queries at sf0.01 compiles 3040 distinct entries
+        # (99 of them differ on every run), so at 100 a repeated query
+        # recompiled through Janino and the JIT re-warmed the new
+        # classes. An entry is about 2.3 generated classes of about
+        # 2.7 KB bytecode each; keeping that pass's entries cost +24 MB
+        # metaspace and +13 MB heap (~12 KB an entry) against the
+        # 100-entry cache. The cache is per JVM: the driver and every
+        # executor keep their own.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

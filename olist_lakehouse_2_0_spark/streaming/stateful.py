@@ -125,35 +125,38 @@ def user_running_profile(
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming read of the driver's single-file events table.
 
-    The file stores TIMESTAMP(NANOS); the stream reads it as long via
-    the nanosAsLong legacy flag (same handling as the batch loader,
-    ``catalog._load_nanos_ts``) and converts to microsecond timestamps.
+    The reference file stores ``ts`` as TIMESTAMP(MICROS) and streams as
+    is. A TIMESTAMP(NANOS) file falls back to the nanosAsLong legacy
+    flag (same handling as the batch loader,
+    ``catalog._load_nanos_ts``) and is converted to microsecond
+    timestamps.
     """
-    from olist_lakehouse_2_0_spark.catalog import _testdata_path
+    from olist_lakehouse_2_0_spark.catalog import _testdata_path, read_parquet
 
     # Resolve single-file vs dataset-directory layout the same way the
     # batch loader does (catalog._testdata_path).
     path = _testdata_path(sf_dir, "events")
-    # The events timestamp has shipped both as a real parquet TIMESTAMP
-    # and as TIMESTAMP(NANOS) (readable only as int64 via the
-    # nanosAsLong legacy flag). Probe the plain read first; the probe
-    # itself may raise only for nanos files, so try the flag before
-    # concluding the path is unreadable.
-    # NOTE: in the nanos case the flag must stay set while the STREAM
-    # runs — the file source re-resolves the parquet footer per
+    # The plain probe reads a TIMESTAMP(MICROS) file directly. A
+    # TIMESTAMP(NANOS) file is readable only as int64 via the
+    # nanosAsLong legacy flag, and the plain probe may raise only for
+    # such files, so try the flag before concluding the path is
+    # unreadable. Both probes go through the schema memo, so a repeat
+    # read of an unchanged file runs no inference job.
+    # NOTE: in the nanos fallback the flag must stay set while the
+    # STREAM runs — the file source re-resolves the parquet footer per
     # micro-batch — so it cannot be restored here;
     # run_profile_availablenow restores it after the query terminates.
     from pyspark.sql.types import LongType
 
     key = "spark.sql.legacy.parquet.nanosAsLong"
     try:
-        schema = spark.read.parquet(path).schema
+        schema = read_parquet(spark, path).schema
         nanos = isinstance(schema["ts"].dataType, LongType)
     except Exception:
         nanos = True
     if nanos:
         spark.conf.set(key, "true")
-        schema = spark.read.parquet(path).schema  # raises if truly unreadable
+        schema = read_parquet(spark, path).schema  # raises if truly unreadable
         if not isinstance(schema["ts"].dataType, LongType):
             # Readable without the flag after all (probe failed for an
             # unrelated transient reason) — don't rewrite ts below.

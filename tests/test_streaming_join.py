@@ -17,8 +17,8 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def events_dir(spark, tmp_path_factory):
-    """Events re-staged as micros-timestamp parquet (streamable source;
-    raw testdata is TIMESTAMP(NANOS), batch-only)."""
+    """Events re-staged as a timestamp-typed parquet directory
+    (streamable source; the raw testdata is a single file)."""
     path = str(tmp_path_factory.mktemp("events_join") / "events")
     load(spark, SF, "events").write.parquet(path)
     return path

@@ -23,9 +23,8 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def events_dir(spark, tmp_path_factory):
-    """Events re-staged as micros-timestamp parquet (a streamable source
-    directory; the raw testdata is TIMESTAMP(NANOS) which needs the
-    batch-only legacy read flag)."""
+    """Events re-staged as a timestamp-typed parquet directory (a
+    streamable source; the raw testdata is a single file)."""
     path = str(tmp_path_factory.mktemp("events_stream") / "events")
     load(spark, SF, "events").write.parquet(path)
     return path
