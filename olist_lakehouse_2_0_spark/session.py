@@ -80,11 +80,7 @@ def get_spark(
     # already-aggregated frames (months, rule lists), each audited in
     # docs/PLANS.md. Both stay at ERROR; real failures still surface.
     # The suppression is session-WIDE, so a genuinely large global
-    # window added later would warn silently too (ADVICE r4): set
-    # SPARK_GRAFT_QUIET_LOGS=0 for profiling/plan-audit runs to get
-    # the warnings back (docs/PLANS.md audits run that way).
-    if os.environ.get("SPARK_GRAFT_QUIET_LOGS", "1") == "0":
-        return spark
+    # window added later would warn silently too (ADVICE r4).
     try:
         configurator = (
             spark.sparkContext._jvm.org.apache.logging.log4j.core.config

@@ -44,8 +44,8 @@ from olist_lakehouse_2_0_spark.operators.joins import (  # noqa: E402
     salted_join,
 )
 
-REPLICAS = int(os.environ.get("SKEW_BENCH_REPLICAS", "16"))
-HOT_FRACTION_MOD = int(os.environ.get("SKEW_BENCH_HOT_MOD", "5"))
+REPLICAS = 16
+HOT_FRACTION_MOD = 5
 SALT = 32
 
 
