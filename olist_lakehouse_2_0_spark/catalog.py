@@ -74,9 +74,7 @@ class Catalog:
                 # reading the files directly would silently drop it.
                 return spark.table(ref.path)
             if ref.format == "versioned":
-                return spark.read.parquet(
-                    _latest_version(spark, ref.path)
-                )
+                return read_parquet(spark, _latest_version(spark, ref.path))
             if ref.format == "parquet":
                 return read_parquet(spark, ref.path)
             return spark.read.format(ref.format).load(ref.path)
@@ -85,7 +83,7 @@ class Catalog:
         # plain parquet path.
         path = self.path_for(name, layer)
         latest = _latest_version_or_none(spark, path)
-        return spark.read.parquet(latest if latest else path)
+        return read_parquet(spark, latest or path)
 
     def _register_written(self, name: str, layer: str | None, path: str) -> str:
         key = f"{layer}.{name}" if layer else name
@@ -144,7 +142,8 @@ class Catalog:
             latest = _latest_version_or_none(spark, root)
             if latest is not None:
                 current = {
-                    f.name: f.dataType for f in spark.read.parquet(latest).schema
+                    f.name: f.dataType
+                    for f in read_parquet(spark, latest).schema
                 }
                 incoming = {f.name: f.dataType for f in df.schema}
                 missing = sorted(set(current) - set(incoming))
@@ -178,6 +177,8 @@ class Catalog:
             # (metaData.partitionColumns / add partitionValues)
             writer = writer.partitionBy(*partition_by)
         writer.parquet(staging)
+        if not partition_by:
+            remember_schema(staging, df)
         return staging
 
     def read_version(
@@ -204,7 +205,7 @@ class Catalog:
             raise FileNotFoundError(
                 f"{name} version {version} not retained; available: {retained}"
             )
-        return spark.read.parquet(target)
+        return read_parquet(spark, target)
 
     def version_history(
         self, spark: SparkSession, name: str, layer: str | None = None
@@ -345,6 +346,7 @@ class Catalog:
         if expected_version is not None and fs.exists(nested):
             fs.rename(nested, HPath(staging))
             raise _conflict()
+        _move_schema(spark, staging, final)
         survivors = [v for v in versions if v[0] < n]
         for vn, vpath in survivors[: max(0, len(survivors) - (keep - 1))]:
             fs.delete(HPath(vpath), True)
@@ -1112,7 +1114,8 @@ _PARQUET_TYPE_CONFS = (
     "spark.sql.parquet.mergeSchema",
 )
 
-#: (path, type confs) -> (file versions, inferred schema). Schemas only,
+#: (path, type confs) -> (file versions, schema inferred or recorded by
+#: the writer, :func:`remember_schema`). Schemas only,
 #: never data: the same thing a metastore holds for a catalog table.
 #: Process-wide on purpose: the key covers every input inference reads,
 #: so any session or thread may reuse an entry.
@@ -1134,6 +1137,40 @@ def _file_versions(path: str) -> tuple:
     return tuple(sorted(out))
 
 
+def _memo_key(spark: SparkSession, path: str) -> tuple:
+    return (
+        os.path.abspath(path),
+        tuple(spark.conf.get(k, None) for k in _PARQUET_TYPE_CONFS),
+    )
+
+
+def remember_schema(path: str, df: DataFrame) -> None:
+    """Record the schema of the files Spark just wrote from ``df`` under
+    ``path`` — the writer knows it, so a read-back need not infer it.
+    It is what ``spark.read.parquet`` reports: ``df``'s fields, all
+    nullable. Unpartitioned writes only: partition column types come
+    from directory names."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    if os.path.exists(path):
+        spark = df.sparkSession
+        schema = df._jdf.schema().asNullable().json()
+        _SCHEMA_MEMO[_memo_key(spark, path)] = (
+            _file_versions(path),
+            StructType.fromJson(json.loads(schema)),
+        )
+
+
+def _move_schema(spark: SparkSession, src: str, dst: str) -> None:
+    """Carry a recorded schema across the rename of ``src`` to ``dst``
+    (a rename keeps every file's relative path, size and mtime)."""
+    hit = _SCHEMA_MEMO.pop(_memo_key(spark, src), None)
+    if hit is not None and os.path.exists(dst):
+        _SCHEMA_MEMO[_memo_key(spark, dst)] = hit
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` that infers the schema once per table
     version.
@@ -1142,17 +1179,15 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     footers on every call. This memoises the inferred ``StructType``,
     keyed on the path, the size and mtime of every file under it, and
     the session confs that change parquet type mapping, then reads with
-    ``spark.read.schema(s)``. Only successful inferences are memoised,
-    so a read that raises (a TIMESTAMP(NANOS) footer without the
-    nanosAsLong flag) raises again next time. Paths that are not on the
+    ``spark.read.schema(s)``; a schema the writer recorded
+    (:func:`remember_schema`) is used the same way. Only successful
+    inferences are memoised, so a read that raises (a TIMESTAMP(NANOS)
+    footer without the nanosAsLong flag) raises again next time. Paths that are not on the
     local filesystem are read without the memo.
     """
     if not os.path.exists(path):
         return spark.read.parquet(path)
-    key = (
-        os.path.abspath(path),
-        tuple(spark.conf.get(k, None) for k in _PARQUET_TYPE_CONFS),
-    )
+    key = _memo_key(spark, path)
     # Versions are taken BEFORE inference: a rewrite racing the
     # inference leaves a stale version in the entry, never a stale schema.
     versions = _file_versions(path)

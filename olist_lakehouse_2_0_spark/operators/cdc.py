@@ -323,8 +323,7 @@ class CdcSink:
     Structured Streaming usage::
 
         sink = CdcSink(path, spec, scd_type=1)
-        stream.writeStream.foreachBatch(sink).option(
-            "checkpointLocation", ckpt).trigger(availableNow=True).start()
+        run_foreach_batch(stream, sink, ckpt)  # streaming.ingest
 
     Exactly-once: the checkpoint tracks consumed source files; the
     swap of the snapshot/history output is idempotent per batch.

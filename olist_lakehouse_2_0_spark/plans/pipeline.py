@@ -37,7 +37,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from olist_lakehouse_2_0_spark.catalog import Catalog
+from olist_lakehouse_2_0_spark.catalog import Catalog, remember_schema
 
 #: Serializes parquet APPENDs to a shared event-log directory across
 #: pipelines running in parallel driver threads (run.py's daily
@@ -245,6 +245,7 @@ class Pipeline:
                 self.catalog.promote_version(spark, name, node.layer)
             else:
                 _swap_dirs(spark, tmp, target)
+                remember_schema(target, enforced.df)
                 self.catalog.register(
                     f"{node.layer}.{name}" if node.layer else name, target
                 )

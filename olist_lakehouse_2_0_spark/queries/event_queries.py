@@ -125,15 +125,12 @@ def events_streaming_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming sessionization must produce the identical relation, so a
     session split, merged, double-emitted, or lost by the state
     machinery fails the hash. State is watermark-bounded (the 100 TB
-    property); the drain sizes its state-store partition count
-    explicitly."""
+    property); the drain sizes its state-store partition count from
+    its backlog (``streaming.ingest._drain``)."""
     import os
 
     from olist_lakehouse_2_0_spark.staging import staging_dir
-    from olist_lakehouse_2_0_spark.streaming.ingest import (
-        run_to_parquet,
-        scoped_shuffle_partitions,
-    )
+    from olist_lakehouse_2_0_spark.streaming.ingest import run_to_parquet
     from olist_lakehouse_2_0_spark.streaming.windows import sessionize
 
     feed = (
@@ -152,8 +149,7 @@ def events_streaming_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(feed.schema).parquet(landing)
     sessions = sessionize(stream.withWatermark("ts", "30 minutes"))
     out = os.path.join(root, "sessions")
-    with scoped_shuffle_partitions(spark, 4):
-        run_to_parquet(sessions, out, os.path.join(root, "ckpt"))
+    run_to_parquet(sessions, out, os.path.join(root, "ckpt"))
     back = spark.read.schema(sessions.schema).parquet(out)
     return back.filter(F.col("user_id") >= 0).orderBy(
         "user_id", "session_start"
@@ -344,10 +340,7 @@ def events_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from olist_lakehouse_2_0_spark.staging import staging_dir
-    from olist_lakehouse_2_0_spark.streaming.ingest import (
-        run_to_parquet,
-        scoped_shuffle_partitions,
-    )
+    from olist_lakehouse_2_0_spark.streaming.ingest import run_to_parquet
     from olist_lakehouse_2_0_spark.streaming.joins import stream_interval_join
 
     # ONE staging write for both feeds: the click and error slices
@@ -389,10 +382,7 @@ def events_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_ts="error_ts", upper_seconds=300,
     )
     out = os.path.join(root, "pairs")
-    # Stateful drain: state-store count is frozen per shuffle partition
-    # (see scoped_shuffle_partitions for the measured rationale).
-    with scoped_shuffle_partitions(spark, 8):
-        run_to_parquet(joined, out, os.path.join(root, "ckpt"))
+    run_to_parquet(joined, out, os.path.join(root, "ckpt"))
     # Explicit schema: a zero-pair drain leaves no data files to infer
     # from (possible at tiny scale factors).
     return spark.read.schema(joined.schema).parquet(out).select(
@@ -432,10 +422,7 @@ def events_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFram
     import os
 
     from olist_lakehouse_2_0_spark.staging import staging_dir
-    from olist_lakehouse_2_0_spark.streaming.ingest import (
-        run_to_parquet,
-        scoped_shuffle_partitions,
-    )
+    from olist_lakehouse_2_0_spark.streaming.ingest import run_to_parquet
     from olist_lakehouse_2_0_spark.streaming.joins import stream_interval_join
 
     # ONE staging write for both feeds (same single-scan
@@ -475,8 +462,7 @@ def events_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFram
             c_stream, e_stream, key="user_id", left_ts="ts",
             right_ts="error_ts", upper_seconds=300, how="leftOuter",
         )
-        with scoped_shuffle_partitions(spark, 8):
-            run_to_parquet(joined, out, ckpt)
+        run_to_parquet(joined, out, ckpt)
 
     drain()  # data batch: matches emit, unmatched clicks stay buffered
     # Far-future sentinel on BOTH feeds: the second drain's watermark
@@ -538,10 +524,7 @@ def events_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from olist_lakehouse_2_0_spark.staging import staging_dir
-    from olist_lakehouse_2_0_spark.streaming.ingest import (
-        run_to_parquet,
-        scoped_shuffle_partitions,
-    )
+    from olist_lakehouse_2_0_spark.streaming.ingest import run_to_parquet
     from olist_lakehouse_2_0_spark.streaming.windows import dedupe_stream
 
     events = (
@@ -556,10 +539,7 @@ def events_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(events.schema).parquet(landing)
     deduped = dedupe_stream(stream, keys=("event_id",), ts_col="ts")
     out = os.path.join(root, "deduped")
-    # Stateful drain: state-store count is frozen per shuffle partition
-    # (see scoped_shuffle_partitions for the measured rationale).
-    with scoped_shuffle_partitions(spark, 8):
-        run_to_parquet(deduped, out, os.path.join(root, "ckpt"))
+    run_to_parquet(deduped, out, os.path.join(root, "ckpt"))
     back = spark.read.schema(deduped.schema).parquet(out)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -591,7 +571,7 @@ def events_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     restricted to even customer keys so odd-user events MISS — the
     left-join "misses kept as NULL attributes" contract is
     load-bearing in the hash, not just asserted in tests. Stateless
-    per-batch join, so the drain needs no state-store sizing."""
+    per-batch join, so the drain keeps no state."""
     import os
 
     from olist_lakehouse_2_0_spark.staging import staging_dir
@@ -964,6 +944,7 @@ def events_gold_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         IncrementalAggTable,
     )
     from olist_lakehouse_2_0_spark.staging import staging_dir
+    from olist_lakehouse_2_0_spark.streaming.ingest import run_foreach_batch
 
     events = load(spark, sf_dir, "events").select(
         "event_type", F.col("value").cast("decimal(12,2)").alias("value")
@@ -986,13 +967,9 @@ def events_gold_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(landing)
     )
-    q = (
-        stream.writeStream.foreachBatch(table.foreach_batch_merger(spark))
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        stream, table.foreach_batch_merger(spark), os.path.join(root, "ckpt")
     )
-    q.awaitTermination()
     return table.read_final(spark)
 
 
@@ -1329,10 +1306,7 @@ def events_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from olist_lakehouse_2_0_spark.catalog import Catalog
     from olist_lakehouse_2_0_spark.staging import staging_dir
-    from olist_lakehouse_2_0_spark.streaming.ingest import (
-        run_foreach_batch,
-        scoped_shuffle_partitions,
-    )
+    from olist_lakehouse_2_0_spark.streaming.ingest import run_foreach_batch
     from olist_lakehouse_2_0_spark.streaming.upsert import VersionedMergeSink
 
     events = load(spark, sf_dir, "events", spread=True).select(
@@ -1350,8 +1324,7 @@ def events_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = VersionedMergeSink(
         cat, "user_latest", keys=("user_id",), sequence_col="event_id"
     )
-    with scoped_shuffle_partitions(spark, 8):
-        run_foreach_batch(stream, sink, os.path.join(root, "ckpt"))
+    run_foreach_batch(stream, sink, os.path.join(root, "ckpt"))
     final = cat.read(spark, "user_latest")
     return final.select(
         "user_id",
@@ -1406,15 +1379,12 @@ def events_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus the b1 literal — i.e. the exact relation a correct
     drop-everything-late policy yields. State is watermark-bounded
     (the 100 TB property under test); the drain is one availableNow
-    run with the state-store partition count sized explicitly."""
+    run with the state-store partition count sized from its backlog."""
     import glob
     import os
 
     from olist_lakehouse_2_0_spark.staging import staging_dir
-    from olist_lakehouse_2_0_spark.streaming.ingest import (
-        run_to_parquet,
-        scoped_shuffle_partitions,
-    )
+    from olist_lakehouse_2_0_spark.streaming.ingest import run_to_parquet
     from olist_lakehouse_2_0_spark.streaming.windows import (
         tumbling_window_agg,
     )
@@ -1484,12 +1454,7 @@ def events_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream.withWatermark("ts", "30 minutes"), distinct_users=False
     )
     out = os.path.join(root, "windows")
-    # 4 state partitions: 6 micro-batches x one state commit per
-    # partition; 8 partitions measured 6.1 s of drain vs 2.7 s at 4
-    # with identical results (same sizing rationale as
-    # scoped_shuffle_partitions' docstring).
-    with scoped_shuffle_partitions(spark, 4):
-        run_to_parquet(agg, out, os.path.join(root, "ckpt"))
+    run_to_parquet(agg, out, os.path.join(root, "ckpt"))
     back = spark.read.schema(agg.schema).parquet(out)
     return back.orderBy("window_start", "event_type")
 

@@ -25,9 +25,11 @@ from __future__ import annotations
 import os
 from typing import TYPE_CHECKING, Any, Iterator, Tuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -68,15 +70,17 @@ def _make_update(gap_minutes: int):
         # and corrupt the gap detection — concatenate first, sort once.
         chunks = list(pdfs)
         if chunks:
-            whole = pd.concat(chunks, ignore_index=True).sort_values("ts")
+            if len(chunks) == 1:
+                whole = chunks[0]
+            else:
+                whole = pd.concat(chunks, ignore_index=True)
             # Normalize to ns first: Arrow may hand pandas datetime64 in
             # either ns or us resolution, and a bare astype("int64")
             # would silently change units between the two.
             ts_us = (
-                whole["ts"].astype("datetime64[ns]").astype("int64") // 1000
+                whole["ts"].sort_values().astype("datetime64[ns]").astype("int64")
+                // 1000
             ).to_numpy()
-            import numpy as np
-
             n_events += len(whole)
             # floor(v*100 + 0.5): pure IEEE quantization to integer
             # hundredths, bit-identical in any engine; summed exactly.
@@ -85,10 +89,15 @@ def _make_update(gap_minutes: int):
                 .astype("int64")
                 .sum()
             )
-            for t in ts_us:
-                if last_us is None or t - last_us > gap_us:
-                    n_sessions += 1
-                last_us = int(t)
+            # A new session starts at every gap wider than gap_us: the
+            # first event against the carried last-seen time (or
+            # always, for a new key), the rest against their sorted
+            # predecessor.
+            first_opens = last_us is None or int(ts_us[0]) - last_us > gap_us
+            n_sessions += int(first_opens) + int(
+                np.count_nonzero(np.diff(ts_us) > gap_us)
+            )
+            last_us = int(ts_us[-1])
         state.update((n_events, total_cents, n_sessions, last_us))
         yield pd.DataFrame(
             {
@@ -107,13 +116,16 @@ def user_running_profile(
     events: DataFrame, gap_minutes: int = 30
 ) -> DataFrame:
     """Apply the stateful per-user profile over a streaming (or batch
-    test) events DataFrame with columns (ts, user_id, value).
+    test) events DataFrame with columns (ts, user_id, value); other
+    columns are dropped before the Python boundary.
 
     Emits one updated profile row per user per micro-batch
     (``outputMode="update"``); pair with ``foreachBatch`` or an
     update-capable sink.
     """
-    return events.groupBy("user_id").applyInPandasWithState(
+    return events.select("user_id", "ts", "value").groupBy(
+        "user_id"
+    ).applyInPandasWithState(
         _make_update(gap_minutes),
         PROFILE_SCHEMA,
         STATE_SCHEMA,
@@ -204,6 +216,7 @@ def run_profile_availablenow(
     or many.
     """
     from olist_lakehouse_2_0_spark.staging import staging_dir
+    from olist_lakehouse_2_0_spark.streaming.ingest import run_foreach_batch
 
     out_root = staging_dir("stateful_profile")
     data_dir = os.path.join(out_root, "data")
@@ -217,18 +230,16 @@ def run_profile_availablenow(
         )
 
         def sink(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.withColumn("_batch", F.lit(batch_id)).write.mode(
+            batch_df.withColumn("_batch", F.lit(batch_id).cast("long")).write.mode(
                 "append"
             ).parquet(data_dir)
 
-        q = (
-            profile.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
+        run_foreach_batch(profile, sink, ckpt_dir, mode="update")
+        # The sink wrote exactly this schema: read back without a
+        # schema-inference job.
+        written = T.StructType(
+            profile.schema.fields + [T.StructField("_batch", T.LongType())]
         )
-        q.awaitTermination()
     finally:
         # The stream has fully terminated; restore the legacy flag so
         # later batch reads of TIMESTAMP(NANOS) files in this session
@@ -240,7 +251,7 @@ def run_profile_availablenow(
 
     from pyspark.sql import Window as W
 
-    rows = spark.read.parquet(data_dir)
+    rows = spark.read.schema(written).parquet(data_dir)
     w = W.partitionBy("user_id").orderBy(F.desc("_batch"))
     return (
         rows.withColumn("_rn", F.row_number().over(w))

@@ -122,3 +122,45 @@ def test_nanos_as_long_is_part_of_the_key(spark, tmp_path):
             spark.conf.unset(NANOS_KEY)
         else:
             spark.conf.set(NANOS_KEY, saved)
+
+
+def test_versioned_write_records_the_schema_spark_reads(spark, tmp_path):
+    """A promoted unpartitioned version carries the schema its writer
+    recorded — equal to what inference reports — so reading it back
+    submits no job; a partitioned version keeps inferring."""
+    df = spark.range(5).selectExpr(
+        "id",  # non-nullable in the frame, nullable once written
+        "CAST(id AS DECIMAL(12, 2)) AS price",
+        "timestamp_seconds(id) AS ts",
+        "array(id, id + 1) AS arr",
+        "named_struct('k', CAST(id AS STRING), 'v', id * 0.5) AS st",
+        "map('a', id) AS m",
+    )
+    cat = catalog.Catalog(root=str(tmp_path / "wh"))
+    v1 = cat.write_versioned(df, spark, "t")
+    recorded = catalog._SCHEMA_MEMO[catalog._memo_key(spark, v1)][1]
+    assert recorded == spark.read.parquet(v1).schema
+    read, jobs = _jobs_run_by(spark, lambda: cat.read(spark, "t").schema)
+    assert jobs == 0 and read == recorded
+    _, jobs = _jobs_run_by(spark, lambda: cat.read_version(spark, "t", 1).schema)
+    assert jobs == 0
+
+    cat.write_versioned(df, spark, "p", partition_by=["id"])
+    _, jobs = _jobs_run_by(spark, lambda: cat.read(spark, "p").schema)
+    assert jobs >= 1
+
+
+def test_pipeline_view_read_back_uses_recorded_schema(spark, tmp_path):
+    """A materialized view swapped into place keeps the schema its
+    write recorded, so the node that reads it submits no inference job."""
+    from olist_lakehouse_2_0_spark.plans.pipeline import Pipeline, TableDef
+
+    cat = catalog.Catalog(root=str(tmp_path / "lake"))
+    src = spark.range(20).selectExpr("id", "CAST(id % 3 AS INT) AS k")
+    node = TableDef(name="silver", inputs=("src",), build=lambda ins: ins["src"])
+    Pipeline("p", cat, [node]).run(spark, external_inputs={"src": src})
+    target = cat.path_for("silver")
+    recorded = catalog._SCHEMA_MEMO[catalog._memo_key(spark, target)][1]
+    assert recorded == spark.read.parquet(target).schema
+    _, jobs = _jobs_run_by(spark, lambda: cat.read(spark, "silver").schema)
+    assert jobs == 0

@@ -226,3 +226,91 @@ def test_profile_correct_when_group_spans_arrow_chunks(spark, tmp_path):
         assert got[0]["last_ts"] == _ts(9)
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+
+
+class _State:
+    """The slice of ``GroupState`` the profile update uses."""
+
+    def __init__(self, value=None):
+        self.value = value
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = value
+
+
+def _loop_update(gap_minutes, state, pdfs):
+    """The per-event loop the vectorised update replaced: the reference
+    the randomised test compares it with."""
+    import numpy as np
+    import pandas as pd
+
+    gap_us = gap_minutes * 60_000_000
+    if state.exists:
+        n_events, total_cents, n_sessions, last_us = state.get
+    else:
+        n_events, total_cents, n_sessions, last_us = 0, 0, 0, None
+    chunks = list(pdfs)
+    if chunks:
+        whole = pd.concat(chunks, ignore_index=True).sort_values("ts")
+        ts_us = (
+            whole["ts"].astype("datetime64[ns]").astype("int64") // 1000
+        ).to_numpy()
+        n_events += len(whole)
+        total_cents += int(
+            np.floor(whole["value"].to_numpy() * 100.0 + 0.5).astype("int64").sum()
+        )
+        for t in ts_us:
+            if last_us is None or t - last_us > gap_us:
+                n_sessions += 1
+            last_us = int(t)
+    state.update((n_events, total_cents, n_sessions, last_us))
+    return state.value
+
+
+def test_vectorised_update_matches_event_loop():
+    """Randomised keys: gaps of exactly the session gap (not a new
+    session) and one microsecond more (a new one), unsorted rows split
+    into several chunks, and state carried across micro-batches —
+    including a batch that starts before the carried last-seen time."""
+    import numpy as np
+    import pandas as pd
+
+    from olist_lakehouse_2_0_spark.streaming.stateful import _make_update
+
+    gap = 30
+    update = _make_update(gap)
+    rng = np.random.default_rng(7)
+    steps_us = np.array([0, 1, 60_000_000, gap * 60_000_000, gap * 60_000_000 + 1])
+    for trial in range(200):
+        fast, slow = _State(), _State()
+        base_us = 1_700_000_000_000_000 + int(rng.integers(0, 10**9))
+        for _batch in range(int(rng.integers(1, 4))):
+            n = int(rng.integers(0, 40))
+            ts_us = base_us + np.cumsum(rng.choice(steps_us, n))
+            base_us = int(ts_us[-1]) if n else base_us
+            if rng.random() < 0.3:  # late batch: behind the carried state
+                ts_us = ts_us - 2 * gap * 60_000_000
+            order = rng.permutation(n)
+            pdf = pd.DataFrame(
+                {
+                    "user_id": np.full(n, trial, dtype="int64"),
+                    "ts": pd.to_datetime(ts_us[order], unit="us"),
+                    "value": rng.integers(0, 100_000, n) / 100.0,
+                }
+            )
+            cuts = [0, *sorted(rng.integers(0, n + 1, int(rng.integers(0, 4)))), n]
+            chunks = [pdf.iloc[a:b] for a, b in zip(cuts, cuts[1:]) if b > a]
+            got = next(update((trial,), iter(chunks), fast))
+            want = _loop_update(gap, slow, iter(chunks))
+            assert fast.value == want
+            assert got["n_sessions"].iloc[0] == want[2]
+            if want[3] is not None:
+                assert got["last_ts"].iloc[0] == pd.Timestamp(want[3], unit="us")

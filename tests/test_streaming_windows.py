@@ -278,19 +278,32 @@ def test_dedupe_stream_restamped_redelivery(spark, tmp_path):
     ).count() == 3
 
 
-def test_scoped_shuffle_partitions_restores_on_exception(spark):
-    """The stateful-drain partition scoping must restore the session
-    default even when the drain raises (a leaked override would
-    silently resize every later shuffle in the session)."""
+def test_drain_restores_shuffle_partitions_on_exception(
+    spark, tmp_path, monkeypatch
+):
+    """A drain sets its sized partition count on the session only
+    across ``start()``, and must restore the session default even when
+    the start raises (a leaked override would silently resize every
+    later shuffle in the session)."""
     import pytest
+    from pyspark.sql.streaming import DataStreamWriter
 
-    from olist_lakehouse_2_0_spark.streaming.ingest import (
-        scoped_shuffle_partitions,
-    )
+    from olist_lakehouse_2_0_spark.streaming.ingest import run_to_parquet
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
+    key = "spark.sql.shuffle.partitions"
+    landing = str(tmp_path / "landing")
+    spark.range(10).write.parquet(landing)
+    stream = spark.readStream.schema("id long").parquet(landing)
+    seen = []
+
+    def failing_start(self, *args, **kwargs):
+        seen.append(spark.conf.get(key))
+        raise RuntimeError("drain failed")
+
+    monkeypatch.setattr(DataStreamWriter, "start", failing_start)
+    before = spark.conf.get(key)
     with pytest.raises(RuntimeError):
-        with scoped_shuffle_partitions(spark, 3):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
-            raise RuntimeError("drain failed")
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+        run_to_parquet(stream.dropDuplicates(["id"]), str(tmp_path / "out"),
+                       str(tmp_path / "ckpt"))
+    assert seen == ["1"] and before != "1"
+    assert spark.conf.get(key) == before
