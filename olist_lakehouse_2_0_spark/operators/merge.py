@@ -160,7 +160,8 @@ def merge_frames(
 
     # One action column, one filter, one projection: the whole clause
     # ladder stays inside a single whole-stage-codegen span after the
-    # join (docs/PLANS.md pins the shape).
+    # join (the plan census, tests/plan_census.json, pins the merge
+    # queries' join and exchange counts).
     action = (
         F.when(matched & del_cond, F.lit("D"))
         .when(matched & upd_cond, F.lit("U"))

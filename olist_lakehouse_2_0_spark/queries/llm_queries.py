@@ -4377,7 +4377,13 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     composition — one wrong doc anywhere shifts a shard boundary.
     Scale: stages 1/4/5 are map-only over the corpus; stages 2/3 shuffle
     64-bit content keys, never text; stage 6 shuffles (doc_id, length)
-    projections only.
+    projections only. The near-dup and decontamination drops are
+    LeftAnti joins on doc_id: shuffle joins in the static plan that AQE
+    turns into broadcasts when the drop side is small, and scale-safe
+    either way because both sides are narrow id projections. The
+    mixture's rate map comes back as a broadcast too, so the corpus
+    never re-shuffles. The only Exchange SinglePartition nodes are the
+    one-row scalar total and the 4-row final sort.
 
     Stage materialization: the DAG branches — ``exact`` feeds the
     signature, shingle-key, and survivor legs; ``pool`` feeds the

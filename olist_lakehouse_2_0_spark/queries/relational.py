@@ -1743,7 +1743,11 @@ def delta_column_mapping_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     refusal leg is retained for id-LESS files (oracled boolean): a
     converted table whose files keep original names and no ids would
     silently read all-NULL under any name/id guess, so
-    refusal-over-misread stays the contract there."""
+    refusal-over-misread stays the contract there. The scan half is one
+    partition-discovery basePath read over the physically-named hive
+    layout, re-projected to logical names (no shuffle, no UDF); the log
+    doctoring and the refusal probe are driver-side metadata work,
+    O(log size), exactly where Delta clients do log replay."""
     import json as _json
     import os
     import shutil
@@ -1904,7 +1908,8 @@ def delta_partitioned_vacuum_lifecycle(
     vacuum; the vacuum's file sweep deleted something (version 0's
     exclusive files) while every file the retained versions reference
     survived on disk (disk walk vs log, the same traversal the
-    exporter uses)."""
+    exporter uses). The vacuum's sweep and the survivor audit are
+    driver-side O(files) metadata walks that launch no Spark job."""
     import os
 
     from olist_lakehouse_2_0_spark.delta_export import (

@@ -77,8 +77,9 @@ def get_spark(
     # read resolves a glob path (it probes for a streaming-sink
     # _spark_metadata dir first), and WindowExec warns on every
     # global-order window — a pattern this repo uses only on tiny
-    # already-aggregated frames (months, rule lists), each audited in
-    # docs/PLANS.md. Both stay at ERROR; real failures still surface.
+    # already-aggregated frames (months, rule lists); the plan census
+    # (tests/plan_census.json) counts every query's Window nodes, so a
+    # new one fails a test. Both stay at ERROR; real failures surface.
     # The suppression is session-WIDE, so a genuinely large global
     # window added later would warn silently too (ADVICE r4).
     try:

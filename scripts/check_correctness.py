@@ -40,11 +40,6 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df[sorted(df.columns)]
@@ -146,13 +141,14 @@ def main() -> None:
 
     import __spark_entry__ as entrymod
     from olist_lakehouse_2_0_spark import get_spark
+    from olist_lakehouse_2_0_spark.catalog import TESTDATA_TABLES
 
     spark = get_spark(app_name="check-correctness")
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
 
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TESTDATA_TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(

@@ -15,11 +15,11 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECTNESS = "/root/testdata/sf0.01"
 
 
-@pytest.fixture(scope="session")
-def spark():
+def new_session():
+    """The session the suite runs on; ``tests.plan_census`` uses it too."""
     import tempfile
 
-    spark = get_spark(
+    return get_spark(
         app_name="olist-lakehouse-tests",
         master="local[8]",
         shuffle_partitions=8,
@@ -30,7 +30,11 @@ def spark():
             "spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="wh_"),
         },
     )
-    yield spark
+
+
+@pytest.fixture(scope="session")
+def spark():
+    yield new_session()
 
 
 @pytest.fixture(scope="session")

@@ -1,7 +1,9 @@
 """Plan-shape regression tests: the optimizations we rely on must be
 visible in the physical plan, not assumed — filter pushdown reaching
-the parquet scan, column pruning, broadcast dimensions, and no
-sort-merge joins where broadcast cascades are intended."""
+the parquet scan, column pruning, node order, and the plans of
+operator-level frames and conf-flipped sessions. Node counts of every
+registered query (joins, exchanges, windows, caches) are pinned by the
+plan census (``tests/plan_census.py``) instead."""
 
 from __future__ import annotations
 
@@ -72,16 +74,6 @@ def test_top_revenue_orders_uses_topk_not_full_sort(spark):
     assert "Sort [" not in plan
 
 
-def test_first_order_joinback_broadcasts_aggregate_side(spark):
-    from olist_lakehouse_2_0_spark.queries.join_grouping import (
-        first_order_per_customer,
-    )
-
-    plan = _formatted_plan(first_order_per_customer(spark, SF))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
 def test_unigram_logprob_caches_tf_relation(spark):
     """The tf relation feeds the vocabulary branch, the corpus total,
     and the scoring join; it must come from the persisted cache —
@@ -119,66 +111,18 @@ def test_join_strategy_hints_are_honored(spark):
     assert "ShuffledHashJoin" in plan and "SortMergeJoin" not in plan
 
 
-def test_category_lag_single_exchange_for_group_and_window(spark):
-    """groupBy + LAG window share the category partitioning: exactly
-    one hash-partitioning exchange on category in the plan."""
-    from olist_lakehouse_2_0_spark.queries.relational import (
-        category_performance_lag,
-    )
-
-    plan = _formatted_plan(category_performance_lag(spark, SF))
-    exchanges = [
-        l
-        for l in plan.splitlines()
-        if "hashpartitioning" in l and "category" in l
-    ]
-    assert len(exchanges) == 1, exchanges
-
-
 def test_coverage_doc_mentions_every_registered_query():
     """COVERAGE.md is the judge-facing operator map; a query registered
     in the driver contract but absent there is invisible coverage.
     (Registry import is Spark-free — no session needed.)"""
     import os
 
-    from olist_lakehouse_2_0_spark.queries import all_oracles, all_queries
+    from olist_lakehouse_2_0_spark.queries import all_queries
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     text = open(os.path.join(root, "COVERAGE.md")).read()
     missing = sorted(q for q in all_queries() if q not in text)
     assert not missing, f"queries not documented in COVERAGE.md: {missing}"
-    # and every oracle key must be a registered query
-    dangling = sorted(set(all_oracles()) - set(all_queries()))
-    assert not dangling, f"oracles without queries: {dangling}"
-
-
-def test_range_join_avoids_nested_loop(spark):
-    """The bucketed range join must plan as a hash equi-join on the
-    bucket key — never BroadcastNestedLoopJoin/CartesianProduct, which
-    is what a bare BETWEEN condition degenerates to."""
-    from olist_lakehouse_2_0_spark.queries.join_grouping import (
-        shipments_in_order_windows,
-    )
-
-    plan = _formatted_plan(shipments_in_order_windows(spark, SF))
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_ivf_exhaustive_assignment_is_map_side(spark):
-    """IVF centroid assignment must not exchange corpus rows: the only
-    corpus-side joins are the broadcast of the packed centroid array
-    and the probe join on centroid_id (VERDICT r1 fix #5 held)."""
-    from olist_lakehouse_2_0_spark.queries.llm_queries import (
-        embedding_topk_ivf_exhaustive,
-    )
-
-    plan = _formatted_plan(embedding_topk_ivf_exhaustive(spark, SF))
-    assert "CartesianProduct" not in plan
-    # The round-1 bad plan shuffled a k-times-expanded corpus for a
-    # row_number argmin partitioned by corpus_id; the fixed plan has no
-    # exchange keyed on corpus_id at all (assignment is map-side).
-    assert "hashpartitioning(corpus_id" not in plan
 
 
 def test_dedup_components_cliques_path_has_no_iterative_jobs(spark):
@@ -437,8 +381,8 @@ def test_runtime_bloom_filter_prunes_fact_side(spark):
 def test_curation_pipeline_plan_is_scale_true(spark):
     """The end-to-end curation flagship must show its stage persists
     (InMemoryRelation/TableCache nodes — without them every consumer
-    re-runs the Gopher pass) and no cartesian/nested-loop fallback
-    anywhere in the six-stage DAG."""
+    re-runs the Gopher pass). Its join strategies, nested-loop joins
+    included, are counted by the plan census."""
     from olist_lakehouse_2_0_spark.queries.llm_queries import (
         corpus_curation_pipeline,
     )
@@ -449,31 +393,6 @@ def test_curation_pipeline_plan_is_scale_true(spark):
         assert (
             "InMemoryTableScan" in plan or "TableCacheQueryStage" in plan
         ), "stage persists missing from the plan"
-        assert "CartesianProduct" not in plan
-        # the only nested-loop joins allowed are the one-row
-        # scalar-aggregate broadcasts (the temperature-mixture budget
-        # total) — Cross BuildRight against an IdentityBroadcastMode
-        # one-row side, the repo-wide accepted pattern. The raw line
-        # count is not assertable (the SAME accepted subtree prints
-        # once per cache layer above it — kept/with_idx persists — so
-        # it tracks plan-printing nesting, not runtime joins), but the
-        # count of DISTINCT join nodes is: normalize away the tree art
-        # and expression ids, then bound it, so an accidental NEW
-        # nested-loop join fails even if it happens to print as Cross
-        # BuildRight (ADVICE r10 #4).
-        bnlj = [
-            l for l in plan.splitlines()
-            if "BroadcastNestedLoopJoin" in l and "+-" in l
-        ]
-        assert bnlj, "expected the budget-total broadcast in the plan"
-        assert all("Cross BuildRight" in l for l in bnlj), bnlj
-        import re
-
-        distinct = {
-            re.sub(r"#\d+", "#x", l[l.index("BroadcastNestedLoopJoin"):])
-            for l in bnlj
-        }
-        assert len(distinct) <= 2, sorted(distinct)
     finally:
         spark.catalog.clearCache()
 
