@@ -1,8 +1,7 @@
 """Query registry: the driver contract's queries() / oracle_sql() source.
 
 Submodules contribute (name -> callable) and (name -> DuckDB SQL) dicts;
-this module merges them. Queries without an oracle entry are checked
-rows-only by the driver (non-SQL-expressible operators).
+this module merges them in module order. Every query has an oracle.
 
 Driver-stable output canonicalization
 -------------------------------------
@@ -104,435 +103,6 @@ def _stabilized(fn: QueryFn) -> QueryFn:
     return run
 
 
-#: Queries that received a correctness row in round 1 (the driver's
-#: file window is ~50 entries in registration order; these 50 were
-#: checked, the rest never got a row).
-_R1_CHECKED = {
-    "daily_orders", "monthly_orders_lag", "orders_by_state",
-    "orders_enriched", "seller_performance", "category_performance_lag",
-    "geo_dedup", "silver_cleanse", "top_parts_per_brand",
-    "valid_orders_filter", "dq_violation_summary", "top_revenue_orders",
-    "pricing_summary", "revenue_by_nation", "orders_building_segment_semi",
-    "customers_inactive_anti", "orders_rollup", "returnflag_pivot",
-    "price_percentiles", "priority_metrics_unpivot", "orders_rollup_flags",
-    "nation_revenue_share", "discounted_revenue_disjunctive",
-    "daily_revenue_trend", "segment_spend_ranks", "parts_above_brand_avg",
-    "daily_orders_gapfill", "daily_channel_full_outer",
-    "priority_region_matrix", "orders_cube", "segment_spend_extremes",
-    "similar_name_pairs", "customer_order_distribution",
-    "first_order_per_customer", "pii_masked_customers",
-    "region_filtered_customers", "scd1_users", "scd2_users", "text_stats",
-    "doc_chunks", "doc_quality_zscore", "doc_quality_by_source",
-    "top_tokens", "exact_dedup_docs", "jaccard_dups", "minhash_dups",
-    "simhash_dups", "embedding_topk_bruteforce", "embedding_topk_ivf",
-    "embedding_neardup",
-}
-
-#: (Audit trail) The three round-1 "fail" rows: window-fronted in
-#: round 4 and all confirmed hash-green by driver rows in
-#: CORRECTNESS_r04 — no special ordering needed anymore.
-_FIXED_RED = {
-    "segment_spend_extremes", "jaccard_dups", "embedding_topk_bruteforce",
-}
-
-#: Queries first registered in round 4 — no driver row yet. (Kept for
-#: the audit trail; the ordering logic derives "never checked" from
-#: the per-round checked sets, so these sort to the front anyway.)
-_NEW_IN_R4 = {
-    "csv_audit_columns", "mv_csv_roundtrip",
-    "embedding_topk_ivf_indexed_recall", "scd2_validity_audit",
-    "events_stream_table_to_table",
-    # Second r4 batch: previously pytest-only machinery put under the
-    # hash gate (salted two-phase agg, Z-order layout, bucketed join,
-    # mergeSchema evolution, SQL-UDF masks, stream-stream join).
-    "salted_priority_agg", "zorder_pruned_revenue",
-    "bucketed_segment_revenue", "schema_evolution_metrics",
-    "sql_udf_masked_customers", "events_stream_stream_join",
-    # Product-quantization ANN (new operator family this round).
-    "embedding_topk_pq_exact", "embedding_topk_pq_recall",
-    # Third r4 batch: streaming dedup, partition-scoped gold refresh,
-    # small-file compaction roundtrip.
-    "events_streaming_dedup", "partition_overwrite_gold",
-    "compaction_roundtrip_metrics",
-    # Fourth r4 batch: SemDeDup (cluster-scoped semantic dedup, new
-    # operator family), stream-static broadcast enrichment, aggregate
-    # expectation gate, SQL entry point.
-    "semantic_dedup_survivors", "events_stream_static_enrich",
-    "dq_aggregate_gate", "sql_entry_revenue",
-    # BM25 ranked retrieval (lexical leg of the hybrid-retrieval pair).
-    "bm25_doc_ranking",
-    # Fifth r4 batch: RRF fusion of the BM25 + dense legs, raw-text
-    # source roundtrip, pipeline event-log metrics audit.
-    "hybrid_rrf_retrieval", "text_source_roundtrip",
-    "pipeline_event_log_audit", "clustered_pruned_revenue",
-    # Per-document n-gram novelty profiling (memorization-risk audit).
-    "doc_novelty_profile",
-}
-
-#: (Audit trail) Round-4 implementation changes — all re-confirmed by
-#: r4 driver rows; superseded by _CHANGED_IN_R5 for ordering.
-_CHANGED_IN_R4 = {
-    "audio_wav_stats", "audio_metadata", "cdc_fanout_consistency",
-    "embedding_topk_ivf_indexed", "scd2_users_incremental",
-    "scd1_users_incremental",
-}
-
-#: Queries that received a correctness row in round 2
-#: (CORRECTNESS_r02.json — all 50 hash-green).
-_R2_CHECKED = {
-    "daily_orders", "scalar_function_matrix", "monthly_orders_lag",
-    "datetime_function_matrix", "orders_by_state", "dq_drop_quarantine",
-    "orders_enriched", "orders_grouping_sets", "seller_performance",
-    "shipments_in_order_windows", "category_performance_lag",
-    "salted_nation_revenue", "geo_dedup", "scd2_users_incremental",
-    "silver_cleanse", "scd1_users_incremental", "top_parts_per_brand",
-    "segment_dedup", "valid_orders_filter", "bigram_logprob",
-    "dq_violation_summary", "domain_capped_corpus", "pricing_summary",
-    "bpe_pair_counts", "revenue_by_nation",
-    "embedding_topk_ivf_exhaustive", "orders_building_segment_semi",
-    "minhash_verified_dups", "customers_inactive_anti",
-    "simhash_verified_dups", "orders_rollup", "winnow_verified_dups",
-    "returnflag_pivot", "embedding_neardup_verified",
-    "nation_revenue_share", "image_metadata", "daily_revenue_trend",
-    "fingerprint_dups", "segment_spend_ranks", "image_resize",
-    "parts_above_brand_avg", "video_frame_sample", "daily_orders_gapfill",
-    "dataset_split", "daily_channel_full_outer", "source_mixture_sample",
-    "priority_region_matrix", "doc_length_buckets", "orders_cube",
-    "token_budgets",
-}
-
-#: Queries hash-green in round 4's window (CORRECTNESS_r04.json —
-#: 50/50 green).
-_R4_CHECKED = {
-    "audio_metadata", "audio_wav_stats", "bm25_doc_ranking",
-    "bucketed_segment_revenue", "cdc_fanout_consistency",
-    "clustered_pruned_revenue", "compaction_roundtrip_metrics",
-    "csv_audit_columns", "customer_order_distribution", "daily_orders",
-    "discounted_revenue_disjunctive", "doc_chunks", "doc_novelty_profile",
-    "doc_quality_zscore", "dq_aggregate_gate", "embedding_topk_bruteforce",
-    "embedding_topk_ivf_indexed", "embedding_topk_ivf_indexed_recall",
-    "embedding_topk_pq_exact", "embedding_topk_pq_recall",
-    "events_stream_static_enrich", "events_stream_stream_join",
-    "events_stream_table_to_table", "events_streaming_dedup",
-    "exact_dedup_docs", "first_order_per_customer", "hybrid_rrf_retrieval",
-    "jaccard_dups", "monthly_orders_lag", "mv_csv_roundtrip",
-    "partition_overwrite_gold", "pii_masked_customers",
-    "pipeline_event_log_audit", "region_filtered_customers",
-    "salted_priority_agg", "scd1_users", "scd1_users_incremental",
-    "scd2_users", "scd2_users_incremental", "scd2_validity_audit",
-    "schema_evolution_metrics", "segment_spend_extremes",
-    "semantic_dedup_survivors", "similar_name_pairs", "sql_entry_revenue",
-    "sql_udf_masked_customers", "text_source_roundtrip", "text_stats",
-    "top_tokens", "zorder_pruned_revenue",
-}
-
-#: Queries whose IMPLEMENTATION changed in round 5: the MinHash/SimHash
-#: identical-signature collapse + re-expansion (output provably equal,
-#: but a stale green row vouches for code that no longer exists), the
-#: content-derived salt in salted_join/salted_agg, and the PQ retune
-#: (ksub=64/100-candidate operating point). embedding_topk_pq_exact is
-#: deliberately NOT here: its parameters and plan are unchanged (the
-#: _pq_books split is a pure code move), it holds an r4 driver row, it
-#: is tri-scale green in this round's local sweep, and listing it
-#: would push the 51st entry — a genuinely stale r2 green — out of the
-#: driver's ~50-row window.
-_CHANGED_IN_R5 = {
-    "minhash_verified_dups", "simhash_verified_dups",
-    "salted_nation_revenue", "salted_priority_agg",
-    "embedding_topk_pq_recall",
-    # late round 5: dedupe_stream gained the restamped variant (default
-    # path re-verified but the operator changed under the query)
-    "events_streaming_dedup",
-    # late round 5: stream_interval_join gained the `how` parameter for
-    # the LEFT OUTER twin — the inner query's plan is unchanged but its
-    # code path now routes through the parameter, so re-confirm it
-    "events_stream_stream_join",
-}
-
-#: Queries hash-green in round 5's window (CORRECTNESS_r05.json —
-#: 50/50 green).
-_R5_CHECKED = {
-    "category_performance_lag", "ccnet_perplexity_buckets",
-    "cdf_table_changes", "contrastive_triplets", "cross_doc_span_removal",
-    "datetime_function_matrix", "doc_chunks_udtf", "dq_drop_quarantine",
-    "dq_violation_summary", "dsir_importance_weights",
-    "embedding_topk_ivf_appended", "embedding_topk_ivfpq_exact",
-    "embedding_topk_ivfpq_recall", "embedding_topk_mrl_recall",
-    "embedding_topk_pq_recall", "events_props_variant",
-    "events_stream_merge_upsert", "events_stream_stream_join",
-    "events_stream_stream_left_join", "events_streaming_dedup",
-    "exact_substring_decontamination",
-    "exact_substring_decontamination_ac", "geo_dedup",
-    "heavy_hitter_tokens", "idle_rich_customers", "image_dhash_neardup",
-    "intra_doc_repetition_removal", "large_volume_orders",
-    "leakage_safe_split", "merge_concurrent_writers",
-    "merge_upsert_orders", "minhash_verified_dups",
-    "model_scored_quality", "mv_time_travel_metrics", "orders_enriched",
-    "orders_grouping_sets", "part_supplier_variety", "pricing_summary",
-    "salted_nation_revenue", "salted_priority_agg",
-    "scalar_function_matrix", "seller_performance", "silver_cleanse",
-    "simhash_verified_dups", "temperature_mixture_sample",
-    "top_parts_per_brand", "top_revenue_supplier",
-    "training_shard_manifest", "valid_orders_filter",
-    "waiting_sole_late_supplier",
-}
-
-#: Queries whose IMPLEMENTATION or oracle changed in round 6 — a
-#: stale green row vouches for code that no longer exists, so they
-#: front-load into this round's driver window: the round-5-advice
-#: fixes (jvm_tokens ASCII mirror under heavy_hitter_tokens +
-#: doc_chunks_udtf; the NULL-as-0 conditional count in
-#: events_props_variant; the zero-mass-group guard + oracle HAVING in
-#: temperature_mixture_sample) and the round-5-verdict fixture caps
-#: (deterministic LIMIT on the anchor batch of contrastive_triplets
-#: and the needle sets of both exact_substring_decontamination
-#: variants).
-_CHANGED_IN_R6 = {
-    "heavy_hitter_tokens", "doc_chunks_udtf", "events_props_variant",
-    "temperature_mixture_sample", "contrastive_triplets",
-    "exact_substring_decontamination", "exact_substring_decontamination_ac",
-    # The shared-coarse-codebook floor trim (r5 next-step #6): results
-    # provably identical (deterministic seeded training), but the code
-    # path under the stale green rows changed.
-    "embedding_topk_ivfpq_exact", "embedding_topk_ivfpq_recall",
-}
-
-#: Queries hash-green in round 6's window (CORRECTNESS_r06.json —
-#: 50/50 green).
-_R6_CHECKED = {
-    "analyze_table_stats", "bpe_pair_counts", "contrastive_triplets",
-    "contrastive_triplets_ivfpq", "customers_inactive_anti",
-    "daily_channel_full_outer", "daily_job_event_log_rollup",
-    "daily_orders_gapfill", "daily_revenue_trend", "dataset_split",
-    "doc_chunks_udtf", "doc_length_buckets", "domain_capped_corpus",
-    "dominant_part_shippers", "dq_fail_gate_violations",
-    "embedding_neardup_verified", "embedding_topk_ivfpq_exact",
-    "embedding_topk_ivfpq_recall", "events_props_variant",
-    "events_streaming_sessionized", "events_watermark_late_drop",
-    "exact_substring_decontamination",
-    "exact_substring_decontamination_ac", "fingerprint_dups",
-    "heavy_hitter_tokens", "image_metadata", "image_resize",
-    "important_parts_value", "kneser_ney_logprob",
-    "minhash_incremental_dups", "nation_market_share",
-    "nation_revenue_share", "orders_building_segment_semi",
-    "orders_by_state", "orders_rollup", "parts_above_brand_avg",
-    "price_percentiles", "priority_metrics_unpivot",
-    "priority_region_matrix", "regional_min_cost_supplier",
-    "returnflag_pivot", "revenue_by_nation", "segment_dedup",
-    "segment_spend_ranks", "shipments_in_order_windows",
-    "source_mixture_sample", "temperature_mixture_sample",
-    "token_budgets", "top_revenue_orders", "video_frame_sample",
-}
-
-#: Queries whose IMPLEMENTATION changed in round 7 — front-load into
-#: this round's driver window. top_tokens and bpe_pair_counts were
-#: rewritten from a global row_number window to orderBy+limit
-#: (TakeOrderedAndProject) + rank-the-survivors (VERDICT r6 "What's
-#: wrong" #1 — results provably identical under the deterministic
-#: total order, but the plan under the stale green rows changed);
-#: minhash_incremental_dups' probe gained the max_bucket_df cross-shard
-#: hot-bucket cap (default-off, plan unchanged, re-confirm anyway).
-_CHANGED_IN_R7 = {
-    "top_tokens", "bpe_pair_counts", "minhash_incremental_dups",
-    # r6-advice fixes: explicit top-ranked-negative selection in the
-    # ivfpq triplet miner; the corpus-count cache + seed-carrying
-    # staging tag under all three shared-codebook consumers.
-    "contrastive_triplets_ivfpq", "embedding_topk_ivfpq_exact",
-    "embedding_topk_ivfpq_recall",
-    # NOT listed: daily_job_event_log_rollup (r6-green). run.py gained
-    # the additive --export-delta flag this round; with the flag unset
-    # (the query's path) run_job's behavior is byte-identical — the new
-    # parameter defaults to None and the only new code is behind the
-    # truthiness check. The query re-passed the full tri-scale sweep
-    # after the change; listing it would push the window to 51 rows and
-    # evict an r3-stale query from this round's rotation.
-}
-
-#: Queries hash-green in round 7's window (CORRECTNESS_r07.json —
-#: 50/50 green).
-_R7_CHECKED = {
-    "bigram_logprob", "bilateral_trade_volume", "bpe_pair_counts",
-    "context_packing", "contrastive_triplets_ivfpq",
-    "corpus_curation_pipeline", "decontamination", "dedup_canonical",
-    "dedup_clusters", "doc_chunks_udtf_unicode", "doc_keywords",
-    "doc_quality_by_source", "embedding_topk_ivf_exhaustive",
-    "embedding_topk_ivf_kmeans_exhaustive",
-    "embedding_topk_ivfpq_exact", "embedding_topk_ivfpq_recall",
-    "events_asof_purchase_view", "events_csv_ingest_exactly_once",
-    "events_csv_malformed_audit", "events_error_after_click",
-    "events_funnel", "events_gold_incremental", "events_hourly_by_type",
-    "events_props_by_type", "events_rollup_hierarchy",
-    "events_sessionized", "events_sketch_verified",
-    "events_sliding_halfhour", "events_user_profile_stateful",
-    "events_user_setops", "gopher_quality_filter",
-    "heavy_hitter_tokens_unicode", "image_decode_stats",
-    "image_payload_dedup", "incremental_corpus_dedup",
-    "late_shipment_priority_counts", "minhash_incremental_dups",
-    "mixture_epochs", "multi_format_roundtrip", "orders_cube",
-    "orders_rollup_flags", "pii_redaction", "product_line_profit",
-    "scd2_track_history_subset", "shipping_priority_topk", "top_tokens",
-    "training_corpus_summary", "unigram_logprob",
-    "user_cohort_retention", "winnow_verified_dups",
-}
-
-#: Queries whose IMPLEMENTATION changed in round 8 — front-load into
-#: this round's driver window (a stale green row proves nothing about
-#: rewritten code). Kept near-empty by design: the r8 window budget is
-#: consumed by the 45-query r4-stale rotation (VERDICT r7 next-step
-#: #2) plus the round's 3 new queries.
-#:
-#: NOT listed (additive-no-op precedent, r5 embedding_topk_pq_exact):
-#: mv_time_travel_metrics — Catalog.version_history gained recursion
-#: into hive partition subdirectories; for the unpartitioned version
-#: dirs this query creates, the file listing is byte-identical (no
-#: `key=value` dirs exist to recurse into). Likewise the queries built
-#: on write_versioned/stage_version: the new partition_by parameter
-#: defaults to None and the None path is the previous code verbatim.
-#: All were re-verified in this round's tri-scale sweep post-change.
-_CHANGED_IN_R8: set[str] = set()
-
-#: Queries hash-green in round 8's window (CORRECTNESS_r08.json —
-#: 50/50 green).
-_R8_CHECKED = {
-    "approx_quantile_error_gate", "audio_metadata", "audio_wav_stats",
-    "bloom_pruned_fact_join", "bm25_doc_ranking",
-    "bucketed_segment_revenue", "cdc_fanout_consistency",
-    "clustered_pruned_revenue", "compaction_roundtrip_metrics",
-    "csv_audit_columns", "customer_order_distribution", "daily_orders",
-    "delta_convert_publish_history", "delta_export_roundtrip",
-    "discounted_revenue_disjunctive", "doc_chunks",
-    "doc_novelty_profile", "doc_quality_zscore", "dq_aggregate_gate",
-    "embedding_topk_bruteforce", "embedding_topk_ivf_indexed",
-    "embedding_topk_ivf_indexed_recall", "embedding_topk_pq_exact",
-    "events_stream_static_enrich", "events_stream_table_to_table",
-    "exact_dedup_docs", "first_order_per_customer",
-    "hybrid_rrf_retrieval", "jaccard_dups", "monthly_orders_lag",
-    "mv_csv_roundtrip", "orders_enriched", "partition_overwrite_gold",
-    "pii_masked_customers", "pipeline_event_log_audit",
-    "region_filtered_customers", "scd1_users", "scd1_users_incremental",
-    "scd2_users", "scd2_users_incremental", "scd2_validity_audit",
-    "schema_evolution_metrics", "segment_spend_extremes",
-    "semantic_dedup_survivors", "similar_name_pairs",
-    "sql_entry_revenue", "sql_udf_masked_customers",
-    "text_source_roundtrip", "text_stats", "zorder_pruned_revenue",
-}
-
-#: Queries whose IMPLEMENTATION changed in round 9 — superseded by
-#: _CHANGED_IN_R10 for ordering; kept for the historical record.
-_CHANGED_IN_R9 = {
-    "delta_export_roundtrip", "delta_convert_publish_history",
-}
-
-#: Queries hash-green in round 9's window (CORRECTNESS_r09.json —
-#: 50/50 green).
-_R9_CHECKED = {
-    "analyze_table_stats", "category_performance_lag",
-    "ccnet_perplexity_buckets", "cdf_table_changes",
-    "cross_doc_span_removal", "daily_job_event_log_rollup",
-    "datetime_function_matrix", "delta_column_mapping_read",
-    "delta_convert_publish_history", "delta_export_roundtrip",
-    "delta_partitioned_vacuum_lifecycle", "dq_drop_quarantine",
-    "dq_fail_gate_violations", "dq_violation_summary",
-    "dsir_importance_weights", "embedding_topk_ivf_appended",
-    "embedding_topk_mrl_recall", "embedding_topk_pq_recall",
-    "events_stream_merge_upsert", "events_stream_stream_join",
-    "events_stream_stream_left_join", "events_streaming_dedup",
-    "geo_dedup", "idle_rich_customers", "image_dhash_neardup",
-    "intra_doc_repetition_removal", "large_volume_orders",
-    "leakage_safe_split", "merge_concurrent_writers",
-    "merge_upsert_orders", "minhash_verified_dups",
-    "model_scored_quality", "mv_time_travel_metrics",
-    "orders_by_state", "orders_grouping_sets", "part_supplier_variety",
-    "pricing_summary", "revenue_by_nation", "salted_nation_revenue",
-    "salted_priority_agg", "scalar_function_matrix",
-    "seller_performance", "silver_cleanse", "simhash_verified_dups",
-    "top_parts_per_brand", "top_revenue_orders",
-    "top_revenue_supplier", "training_shard_manifest",
-    "valid_orders_filter", "waiting_sole_late_supplier",
-}
-
-#: Queries whose IMPLEMENTATION changed in round 10 — front-load into
-#: this round's driver window. The delta_export machinery under all
-#: four delta queries changed (reader-v3 feature gate, deletion-vector
-#: application inside _read_active, id-mode field-id reads — the
-#: delta_column_mapping_read query itself gained the positive id-mode
-#: leg — write-floor refusals on every write/vacuum entry point,
-#: single-read _latest_commit_ts, SHORT_IDS session timezones): their
-#: r9 green rows vouch for code that no longer exists.
-_CHANGED_IN_R10 = {
-    "delta_export_roundtrip", "delta_convert_publish_history",
-    "delta_column_mapping_read", "delta_partitioned_vacuum_lifecycle",
-}
-
-#: Queries hash-green in round 3's window (CORRECTNESS_r03.json — 47
-#: green of 50 rows; the 3 non-green rows were rows-only twins /
-#: the array-column profile, all de-registered in round 4).
-_R3_CHECKED = {
-    "audio_metadata", "audio_wav_stats", "bigram_logprob",
-    "cdc_fanout_consistency", "context_packing", "decontamination",
-    "dedup_canonical", "dedup_clusters", "doc_keywords",
-    "doc_quality_by_source", "dq_fail_gate_violations",
-    "embedding_topk_ivf_exhaustive", "embedding_topk_ivf_indexed",
-    "embedding_topk_ivf_kmeans_exhaustive", "events_asof_purchase_view",
-    "events_csv_ingest_exactly_once", "events_csv_malformed_audit",
-    "events_error_after_click", "events_funnel",
-    "events_gold_incremental", "events_hourly_by_type",
-    "events_props_by_type", "events_rollup_hierarchy",
-    "events_sessionized", "events_sketch_verified",
-    "events_sliding_halfhour", "events_user_profile_stateful",
-    "events_user_setops", "gopher_quality_filter", "image_decode_stats",
-    "image_payload_dedup", "incremental_corpus_dedup", "mixture_epochs",
-    "multi_format_roundtrip", "orders_by_state", "orders_cube",
-    "orders_rollup", "orders_rollup_flags", "pii_redaction",
-    "price_percentiles", "priority_metrics_unpivot",
-    "scd2_track_history_subset", "top_revenue_orders",
-    "training_corpus_summary", "unigram_logprob",
-    "user_cohort_retention", "winnow_verified_dups",
-}
-
-
-def _ordered_for_window(
-    queries: dict[str, QueryFn],
-) -> list[tuple[str, QueryFn]]:
-    """Order registration for the driver's bounded correctness window
-    (~50 rows in registration order), rotated every round. Priority:
-    (1) anything with no driver row at all (new this round or never
-    windowed); (2) queries whose implementation CHANGED this round (a
-    stale green row proves nothing about rewritten code); (3) the
-    greens by the round of their NEWEST driver row, stalest first, so
-    spare slots re-confirm the oldest evidence. Round 10's window
-    (VERDICT r9 next-step #1: rotate the r6-stale cohort) = the 3 new
-    queries + the 4 machinery-changed delta queries + ALL 39 r6-latest
-    stale greens + spare slots falling to the stalest r7 greens — so
-    after this round no registered query's newest driver row predates
-    r7. The round-10 additions were sized to that budget
-    (50 − 39 − 4 = 7 slots; 3 used, 4 spares rotate r7 greens)."""
-    never_checked: list[tuple[str, QueryFn]] = []
-    changed_this_round: list[tuple[str, QueryFn]] = []
-    by_latest: dict[int, list[tuple[str, QueryFn]]] = {
-        i: [] for i in range(1, 10)
-    }
-    rounds = [
-        (9, _R9_CHECKED), (8, _R8_CHECKED), (7, _R7_CHECKED),
-        (6, _R6_CHECKED), (5, _R5_CHECKED), (4, _R4_CHECKED),
-        (3, _R3_CHECKED), (2, _R2_CHECKED), (1, _R1_CHECKED),
-    ]
-    for item in queries.items():
-        name = item[0]
-        latest = next((rnd for rnd, s in rounds if name in s), None)
-        if latest is None:
-            never_checked.append(item)
-        elif name in _CHANGED_IN_R10:
-            changed_this_round.append(item)
-        else:
-            by_latest[latest].append(item)
-    return (
-        never_checked
-        + changed_this_round
-        + [it for i in range(1, 10) for it in by_latest[i]]
-    )
-
-
 def all_queries() -> dict[str, QueryFn]:
     queries: dict[str, QueryFn] = {}
     queries.update(RELATIONAL_QUERIES)
@@ -543,8 +113,7 @@ def all_queries() -> dict[str, QueryFn]:
     queries.update(CDC_QUERIES)
     queries.update(LLM_QUERIES)
     queries.update(EVENT_QUERIES)
-    ordered = _ordered_for_window(queries)
-    return {name: _stabilized(fn) for name, fn in ordered}
+    return {name: _stabilized(fn) for name, fn in queries.items()}
 
 
 def all_oracles() -> dict[str, str]:
