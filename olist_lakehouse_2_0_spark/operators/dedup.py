@@ -594,8 +594,8 @@ def minhash_dedup_pairs(
     ``expand_identical``."""
     rows_per_band = num_hashes // bands
     # sigs feed banding + both verify sides; persist (id, 64 longs).
-    # (Deliberately left cached for the session — the returned frame
-    # reads it lazily; callers running many passes clearCache between.)
+    # (The returned frame reads it lazily, so it stays cached after
+    # return; see the cache rule in ``queries/__init__``.)
     sigs = minhash_signatures(df, id_col, text_col, num_hashes, n, seed).persist()
     rep_sigs, members = _collapse_identical_signatures(sigs, id_col)
     banded = _banded(rep_sigs, id_col, bands, rows_per_band)
@@ -687,9 +687,9 @@ def simhash_dedup_pairs(
     representative-level pairs only (see
     :func:`minhash_lsh_candidates`)."""
     # sigs feeds the collapse window and (via reps) both chunk-join
-    # sides — persist so the pandas-UDF signature pass runs once
-    # (session-lifetime cache, as elsewhere; bench clearCaches between
-    # query passes). The collapse is one min-over-window on the exact
+    # sides — persist so the pandas-UDF signature pass runs once (left
+    # cached after return: the cache rule in ``queries/__init__``). The
+    # collapse is one min-over-window on the exact
     # signature — a single exchange yielding both the membership map
     # and the representative rows, same rewrite as
     # :func:`_collapse_identical_signatures` (guide §2.4).
@@ -837,10 +837,8 @@ def embedding_neardup_pairs(
     # Null embeddings can't be bucketed (np.stack would throw in the
     # executor) — drop them, matching an equi-join's null semantics.
     # Both self-join sides read the bucketed table; persist so the
-    # pandas-UDF bucketing pass runs once, not once per side. (Library
-    # note: the cache lives until the session clears it — callers
-    # running many dedup passes should spark.catalog.clearCache()
-    # between them, as bench.py does.)
+    # pandas-UDF bucketing pass runs once, not once per side. (It stays
+    # cached after return; see the cache rule in ``queries/__init__``.)
     bucketed = (
         df.filter(F.col(vec_col).isNotNull())
         .select(

@@ -52,11 +52,11 @@ def distributed_row_number(
     ordered = df.repartitionByRange(n, *order_by).sortWithinPartitions(
         *order_by
     )
-    # Deliberate session-lifetime persist (the repo's operator-cache
-    # convention, see bm25_topk): the returned DataFrame reads this
-    # frame lazily AND the offsets below were computed from exactly
-    # this materialization — unpersisting before the caller's action
-    # would recompute ids against a plan the offsets no longer match.
+    # Left cached after return (the cache rule in ``queries/__init__``):
+    # the returned DataFrame reads this frame lazily AND the offsets
+    # below were computed from exactly this materialization —
+    # unpersisting before the caller's action would recompute ids
+    # against a plan the offsets no longer match.
     with_idx = ordered.select(
         "*",
         F.spark_partition_id().alias("__pid"),

@@ -16,6 +16,13 @@ Beyond-reference surface (BASELINE.json north star):
 
 All math is built-in array functions (zip_with + aggregate = fused
 dot product, JVM-side); no UDFs in any hot path.
+
+One core serves every top-k operator: candidates differ (all pairs,
+probed buckets, an ADC shortlist), the tail does not —
+:func:`_rank_cosine` scores and ranks them all. The IVF operators share
+assignment (:func:`_assign`) and probing (:func:`_probe`); PQ and
+IVF-PQ share encoding (:func:`_pq_codes`), ADC tables
+(:func:`_adc_tables`) and the shortlist re-rank (:func:`_adc_rerank`).
 """
 
 from __future__ import annotations
@@ -54,15 +61,32 @@ def cosine_topk(
     """Exact top-k by cosine: broadcast the query batch against the
     corpus, rank per query. Ties broken by corpus id for determinism.
     Returns (query_id, corpus_id, cosine, rank)."""
-    q = queries.select(
-        F.col(query_id), F.col(vec_col).alias("__qvec"),
-        l2_norm(F.col(vec_col)).alias("__qnorm"),
+    q = _vecs(queries, query_id, vec_col, "q")
+    c = _vecs(corpus, corpus_id, vec_col, "c")
+    return _rank_cosine(F.broadcast(q).crossJoin(c), k, query_id, corpus_id)
+
+
+def _vecs(
+    df: DataFrame, id_col: str, vec_col: str, side: str, *extra: Column
+) -> DataFrame:
+    """(id, __<side>vec, __<side>norm, *extra): each vector with its L2
+    norm, computed once per row rather than once per scored pair."""
+    return df.select(
+        F.col(id_col),
+        F.col(vec_col).alias(f"__{side}vec"),
+        l2_norm(F.col(vec_col)).alias(f"__{side}norm"),
+        *extra,
     )
-    c = corpus.select(
-        F.col(corpus_id), F.col(vec_col).alias("__cvec"),
-        l2_norm(F.col(vec_col)).alias("__cnorm"),
-    )
-    scored = F.broadcast(q).crossJoin(c).withColumn(
+
+
+def _rank_cosine(
+    pairs: DataFrame, k: int, query_id: str, corpus_id: str
+) -> DataFrame:
+    """The one scoring tail of the ANN family: exact cosine of every
+    (query, candidate) row from the carried ``__qvec/__qnorm`` and
+    ``__cvec/__cnorm``, then the top ``k`` per query by cosine desc,
+    corpus id asc. Returns (query_id, corpus_id, cosine, rank)."""
+    scored = pairs.withColumn(
         "cosine",
         dot(F.col("__qvec"), F.col("__cvec"))
         / F.nullif(F.col("__qnorm") * F.col("__cnorm"), F.lit(0.0)),
@@ -129,6 +153,57 @@ def _probe_centroids(vec: Column, nprobe: int | None) -> Column:
     return F.transform(ordered, lambda s: s["cid"])
 
 
+def _assign(
+    rows: DataFrame, packed: DataFrame, id_col: str, vec_col: str, side: str = "c"
+) -> DataFrame:
+    """(id, __<side>vec, __<side>norm, centroid_id): every row's nearest
+    centroid, one map-side pass against the broadcast packed codebook."""
+    vec = f"__{side}vec"
+    return (
+        _vecs(rows, id_col, vec_col, side)
+        .crossJoin(F.broadcast(packed))
+        .withColumn("centroid_id", _nearest_centroid(F.col(vec)))
+        .select(id_col, vec, f"__{side}norm", "centroid_id")
+    )
+
+
+def _probe(
+    queries: DataFrame,
+    packed: DataFrame,
+    nprobe: int | None,
+    query_id: str,
+    vec_col: str,
+) -> DataFrame:
+    """(query_id, __qvec, __qnorm, centroid_id): one row per query per
+    probed bucket, probes picked map-side against the packed codebook."""
+    return (
+        _vecs(queries, query_id, vec_col, "q")
+        .crossJoin(F.broadcast(packed))
+        .withColumn(
+            "centroid_id",
+            F.explode(_probe_centroids(F.col("__qvec"), nprobe)),
+        )
+        .select(query_id, "__qvec", "__qnorm", "centroid_id")
+    )
+
+
+def _ivf_search(
+    queries: DataFrame,
+    packed: DataFrame,
+    postings: DataFrame,
+    k: int,
+    nprobe: int | None,
+    query_id: str,
+    corpus_id: str,
+    vec_col: str,
+) -> DataFrame:
+    """IVF probe -> score -> rank: each query's probed buckets equi-join
+    the assigned postings on centroid_id, and only those candidates are
+    scored."""
+    probes = _probe(queries, packed, nprobe, query_id, vec_col)
+    return _rank_cosine(probes.join(postings, "centroid_id"), k, query_id, corpus_id)
+
+
 def default_num_centroids(n_rows: int) -> int:
     """~sqrt(n) centroids (floor 16): the classic IVF balance point —
     posting lists hold ~sqrt(n) vectors each, and probe-join
@@ -181,16 +256,7 @@ def build_ivf_index(
         .alias("centroid_id"),
         F.col(vec_col).alias("__centroid_vec"),
     )
-    c = corpus.select(
-        F.col(corpus_id),
-        F.col(vec_col).alias("__cvec"),
-        l2_norm(F.col(vec_col)).alias("__cnorm"),
-    )
-    assigned = (
-        c.crossJoin(F.broadcast(_pack_centroids(centroids)))
-        .withColumn("centroid_id", _nearest_centroid(F.col("__cvec")))
-        .select(corpus_id, "__cvec", "__cnorm", "centroid_id")
-    )
+    assigned = _assign(corpus, _pack_centroids(centroids), corpus_id, vec_col)
     return centroids, assigned
 
 
@@ -210,28 +276,9 @@ def ivf_topk(
     sizes the codebook ~sqrt(n)). Returns (query_id, corpus_id,
     cosine, rank)."""
     centroids, assigned = build_ivf_index(corpus, corpus_id, vec_col, num_centroids)
-    q = queries.select(
-        F.col(query_id), F.col(vec_col).alias("__qvec"),
-        l2_norm(F.col(vec_col)).alias("__qnorm"),
-    )
-    probes = (
-        q.crossJoin(F.broadcast(_pack_centroids(centroids)))
-        .withColumn(
-            "centroid_id",
-            F.explode(_probe_centroids(F.col("__qvec"), nprobe)),
-        )
-        .select(query_id, "__qvec", "__qnorm", "centroid_id")
-    )
-    scored = probes.join(assigned, "centroid_id").withColumn(
-        "cosine",
-        dot(F.col("__qvec"), F.col("__cvec"))
-        / F.nullif(F.col("__qnorm") * F.col("__cnorm"), F.lit(0.0)),
-    )
-    w = W.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cosine", "rank")
+    return _ivf_search(
+        queries, _pack_centroids(centroids), assigned, k, nprobe,
+        query_id, corpus_id, vec_col,
     )
 
 
@@ -292,17 +339,7 @@ def append_ivf_index(
     contract as the original build)."""
     spark = new_vectors.sparkSession
     centroids = catalog.read(spark, f"{table}_centroids")
-    packed = _pack_centroids(centroids)
-    c = new_vectors.select(
-        F.col(corpus_id),
-        F.col(vec_col).alias("__cvec"),
-        l2_norm(F.col(vec_col)).alias("__cnorm"),
-    )
-    assigned = (
-        c.crossJoin(F.broadcast(packed))
-        .withColumn("centroid_id", _nearest_centroid(F.col("__cvec")))
-        .select(corpus_id, "__cvec", "__cnorm", "centroid_id")
-    )
+    assigned = _assign(new_vectors, _pack_centroids(centroids), corpus_id, vec_col)
     catalog.write(
         assigned,
         f"{table}_postings",
@@ -382,19 +419,7 @@ def ivf_topk_indexed(
         raise ValueError(f"prune must be 'static' or 'dynamic': {prune!r}")
     spark = queries.sparkSession
     centroids = catalog.read(spark, f"{table}_centroids")
-    packed = _pack_centroids(centroids)
-    q = queries.select(
-        F.col(query_id), F.col(vec_col).alias("__qvec"),
-        l2_norm(F.col(vec_col)).alias("__qnorm"),
-    )
-    probes = (
-        q.crossJoin(F.broadcast(packed))
-        .withColumn(
-            "centroid_id",
-            F.explode(_probe_centroids(F.col("__qvec"), nprobe)),
-        )
-        .select(query_id, "__qvec", "__qnorm", "centroid_id")
-    )
+    probes = _probe(queries, _pack_centroids(centroids), nprobe, query_id, vec_col)
     postings = catalog.read(spark, f"{table}_postings")
     probe_ids: list | None = None
     if prune == "static":
@@ -409,17 +434,7 @@ def ivf_topk_indexed(
             "centroid_id",
             "left_semi",
         )
-    scored = probes.join(postings, "centroid_id").withColumn(
-        "cosine",
-        dot(F.col("__qvec"), F.col("__cvec"))
-        / F.nullif(F.col("__qnorm") * F.col("__cnorm"), F.lit(0.0)),
-    )
-    w = W.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cosine", "rank")
-    )
+    return _rank_cosine(probes.join(postings, "centroid_id"), k, query_id, corpus_id)
 
 
 def kmeans_centroids(
@@ -481,40 +496,10 @@ def ivf_topk_kmeans(
     corpus to its nearest learned centroid, probe the ``nprobe``
     nearest buckets per query. Same plan shape as :func:`ivf_topk`
     (broadcast centroids, bucket-pruned scoring)."""
-    centroids = kmeans_centroids(corpus, vec_col, num_centroids, seed)
-    packed = _pack_centroids(centroids)
-    c = corpus.select(
-        F.col(corpus_id),
-        F.col(vec_col).alias("__cvec"),
-        l2_norm(F.col(vec_col)).alias("__cnorm"),
-    )
-    assigned = (
-        c.crossJoin(F.broadcast(packed))
-        .withColumn("centroid_id", _nearest_centroid(F.col("__cvec")))
-        .select(corpus_id, "__cvec", "__cnorm", "centroid_id")
-    )
-    q = queries.select(
-        F.col(query_id), F.col(vec_col).alias("__qvec"),
-        l2_norm(F.col(vec_col)).alias("__qnorm"),
-    )
-    probes = (
-        q.crossJoin(F.broadcast(packed))
-        .withColumn(
-            "centroid_id",
-            F.explode(_probe_centroids(F.col("__qvec"), nprobe)),
-        )
-        .select(query_id, "__qvec", "__qnorm", "centroid_id")
-    )
-    scored2 = probes.join(assigned, "centroid_id").withColumn(
-        "cosine",
-        dot(F.col("__qvec"), F.col("__cvec"))
-        / F.nullif(F.col("__qnorm") * F.col("__cnorm"), F.lit(0.0)),
-    )
-    w2 = W.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
-    return (
-        scored2.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cosine", "rank")
+    packed = _pack_centroids(kmeans_centroids(corpus, vec_col, num_centroids, seed))
+    assigned = _assign(corpus, packed, corpus_id, vec_col)
+    return _ivf_search(
+        queries, packed, assigned, k, nprobe, query_id, corpus_id, vec_col
     )
 
 
@@ -705,32 +690,76 @@ def pq_encode(
     lexicographic struct min. Returns (corpus_id, __cvec, __cnorm,
     __codes array<int>); at rest only ``__codes`` needs persisting —
     the 32x-smaller representation a 100 TB corpus would store."""
-    c = corpus.select(
-        F.col(corpus_id),
-        F.col(vec_col).alias("__cvec"),
-        l2_norm(F.col(vec_col)).alias("__cnorm"),
-        _unit(F.col(vec_col)).alias("__nv"),
+    c = _vecs(corpus, corpus_id, vec_col, "c", _unit(F.col(vec_col)).alias("__nv"))
+    return (
+        c.crossJoin(F.broadcast(books))
+        .withColumn("__codes", _pq_codes("__nv", m))
+        .select(corpus_id, "__cvec", "__cnorm", "__codes")
     )
-    d = _dsub(F.col("__nv"), m)
-    codes = F.transform(
+
+
+def _pq_codes(vec: str, m: int) -> Column:
+    """The m nearest-code ids of vector column ``vec`` against the
+    broadcast ``__books`` row; ties go to the lowest code_id (struct
+    min)."""
+    d = _dsub(F.col(vec), m)
+    return F.transform(
         F.col("__books"),
         lambda bk, j: F.array_min(
             F.transform(
                 bk,
                 lambda cd: F.struct(
                     _l2sq(
-                        F.slice(F.col("__nv"), j * d + 1, d), cd["vec"]
+                        F.slice(F.col(vec), j * d + 1, d), cd["vec"]
                     ).alias("d"),
                     cd["code_id"].alias("cid"),
                 ),
             )
         )["cid"],
     )
-    return (
-        c.crossJoin(F.broadcast(books))
-        .withColumn("__codes", codes)
-        .select(corpus_id, "__cvec", "__cnorm", "__codes")
+
+
+def _adc_tables(vec: str, m: int) -> Column:
+    """Per-query ADC table: the m x ksub exact sub-distances from vector
+    column ``vec`` to every code of the broadcast ``__books`` row."""
+    d = _dsub(F.col(vec), m)
+    return F.transform(
+        F.col("__books"),
+        lambda bk, j: F.transform(
+            bk,
+            lambda cd: _l2sq(F.slice(F.col(vec), j * d + 1, d), cd["vec"]),
+        ),
     )
+
+
+def _adc_rerank(
+    pairs: DataFrame,
+    k: int,
+    candidates: int | None,
+    query_id: str,
+    corpus_id: str,
+) -> DataFrame:
+    """ADC-score every (query table, encoded candidate) row with m table
+    lookups, keep the best ``candidates`` per query (``None`` keeps all),
+    then rank the survivors by exact cosine (:func:`_rank_cosine`)."""
+    adc = F.aggregate(
+        F.zip_with(
+            F.col("__codes"),
+            F.col("__qtab"),
+            lambda cd, tab: F.element_at(tab, cd + 1),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    scored = pairs.withColumn("__adc", adc)
+    if candidates is not None:
+        w_adc = W.partitionBy(query_id).orderBy(
+            F.asc("__adc"), F.asc(corpus_id)
+        )
+        scored = scored.withColumn(
+            "__adc_rank", F.row_number().over(w_adc)
+        ).filter(F.col("__adc_rank") <= candidates)
+    return _rank_cosine(scored, k, query_id, corpus_id)
 
 
 def pq_topk(
@@ -760,58 +789,19 @@ def pq_topk(
     m-byte codes instead of O(D) multiplies against D floats."""
     # The codebook subtree (corpus-wide hash + TakeOrdered sample)
     # feeds BOTH the encode side and the per-query ADC tables; without
-    # a persist each action would run that corpus scan twice. The one
-    # row stays cached for the session (the returned frame reads it
-    # lazily, so there is no safe unpersist point here); long-lived
-    # sessions clearCache between passes, as bench.py does.
+    # a persist each action would run that corpus scan twice. The
+    # returned frame reads it lazily, so it stays cached after return;
+    # see the cache rule in ``queries/__init__``.
     books = pq_codebook(corpus, corpus_id, vec_col, m, ksub).persist()
     enc = pq_encode(corpus, books, corpus_id, vec_col, m)
-    q = queries.select(
-        F.col(query_id),
-        F.col(vec_col).alias("__qvec"),
-        l2_norm(F.col(vec_col)).alias("__qnorm"),
-        _unit(F.col(vec_col)).alias("__qnv"),
-    )
-    d = _dsub(F.col("__qnv"), m)
-    qtab = F.transform(
-        F.col("__books"),
-        lambda bk, j: F.transform(
-            bk,
-            lambda cd: _l2sq(F.slice(F.col("__qnv"), j * d + 1, d), cd["vec"]),
-        ),
-    )
+    q = _vecs(queries, query_id, vec_col, "q", _unit(F.col(vec_col)).alias("__qnv"))
     qt = (
         q.crossJoin(F.broadcast(books))
-        .withColumn("__qtab", qtab)
+        .withColumn("__qtab", _adc_tables("__qnv", m))
         .select(query_id, "__qvec", "__qnorm", "__qtab")
     )
-    adc = F.aggregate(
-        F.zip_with(
-            F.col("__codes"),
-            F.col("__qtab"),
-            lambda cd, tab: F.element_at(tab, cd + 1),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scored = F.broadcast(qt).crossJoin(enc).withColumn("__adc", adc)
-    if candidates is not None:
-        w_adc = W.partitionBy(query_id).orderBy(
-            F.asc("__adc"), F.asc(corpus_id)
-        )
-        scored = scored.withColumn(
-            "__adc_rank", F.row_number().over(w_adc)
-        ).filter(F.col("__adc_rank") <= candidates)
-    reranked = scored.withColumn(
-        "cosine",
-        dot(F.col("__qvec"), F.col("__cvec"))
-        / F.nullif(F.col("__qnorm") * F.col("__cnorm"), F.lit(0.0)),
-    )
-    w = W.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
-    return (
-        reranked.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cosine", "rank")
+    return _adc_rerank(
+        F.broadcast(qt).crossJoin(enc), k, candidates, query_id, corpus_id
     )
 
 
@@ -869,12 +859,7 @@ def ivf_pq_topk(
     codebook yields results identical to retraining. Returns
     (query_id, corpus_id, cosine, rank) with the same tie-breaks as
     :func:`cosine_topk`."""
-    c = corpus.select(
-        F.col(corpus_id),
-        F.col(vec_col).alias("__cvec"),
-        l2_norm(F.col(vec_col)).alias("__cnorm"),
-        _unit(F.col(vec_col)).alias("__nv"),
-    )
+    c = _vecs(corpus, corpus_id, vec_col, "c", _unit(F.col(vec_col)).alias("__nv"))
     if centroids is None:
         if num_centroids is None:
             num_centroids = default_num_centroids(
@@ -911,36 +896,15 @@ def ivf_pq_topk(
     )
     # Residual codebook + map-side encode. The books subtree feeds the
     # encode AND every per-query ADC table; persist so its corpus scan
-    # runs once. (Deliberately left cached for the session — the
-    # returned frame reads it lazily; long-lived sessions running many
-    # builds should clearCache between, as bench.py does.)
+    # runs once. It stays cached after return (the returned frame reads
+    # it lazily); see the cache rule in ``queries/__init__``.
     books = _pq_books(assigned, corpus_id, "__res", m, ksub).persist()
-    d = _dsub(F.col("__res"), m)
-    codes = F.transform(
-        F.col("__books"),
-        lambda bk, j: F.array_min(
-            F.transform(
-                bk,
-                lambda cd: F.struct(
-                    _l2sq(
-                        F.slice(F.col("__res"), j * d + 1, d), cd["vec"]
-                    ).alias("d"),
-                    cd["code_id"].alias("cid"),
-                ),
-            )
-        )["cid"],
-    )
     enc = (
         assigned.crossJoin(F.broadcast(books))
-        .withColumn("__codes", codes)
+        .withColumn("__codes", _pq_codes("__res", m))
         .select(corpus_id, "centroid_id", "__cvec", "__cnorm", "__codes")
     )
-    q = queries.select(
-        F.col(query_id),
-        F.col(vec_col).alias("__qvec"),
-        l2_norm(F.col(vec_col)).alias("__qnorm"),
-        _unit(F.col(vec_col)).alias("__qnv"),
-    )
+    q = _vecs(queries, query_id, vec_col, "q", _unit(F.col(vec_col)).alias("__qnv"))
     # Probe structs keep the centroid vector for the query residual;
     # (nsim, cid) is unique before the array tail.
     probe_structs = F.array_sort(
@@ -968,47 +932,13 @@ def ivf_pq_topk(
             ).alias("__qres"),
         )
     )
-    dq = _dsub(F.col("__qres"), m)
-    qtab = F.transform(
-        F.col("__books"),
-        lambda bk, j: F.transform(
-            bk,
-            lambda cd: _l2sq(F.slice(F.col("__qres"), j * dq + 1, dq), cd["vec"]),
-        ),
-    )
     qt = (
         probes.crossJoin(F.broadcast(books))
-        .withColumn("__qtab", qtab)
+        .withColumn("__qtab", _adc_tables("__qres", m))
         .select(query_id, "__qvec", "__qnorm", "centroid_id", "__qtab")
     )
-    adc = F.aggregate(
-        F.zip_with(
-            F.col("__codes"),
-            F.col("__qtab"),
-            lambda cd, tab: F.element_at(tab, cd + 1),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scored = F.broadcast(qt).join(enc, "centroid_id").withColumn("__adc", adc)
-    shortlist = scored
-    if candidates is not None:
-        w_adc = W.partitionBy(query_id).orderBy(
-            F.asc("__adc"), F.asc(corpus_id)
-        )
-        shortlist = scored.withColumn(
-            "__adc_rank", F.row_number().over(w_adc)
-        ).filter(F.col("__adc_rank") <= candidates)
-    reranked = shortlist.withColumn(
-        "cosine",
-        dot(F.col("__qvec"), F.col("__cvec"))
-        / F.nullif(F.col("__qnorm") * F.col("__cnorm"), F.lit(0.0)),
-    )
-    w = W.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
-    return (
-        reranked.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cosine", "rank")
+    return _adc_rerank(
+        F.broadcast(qt).join(enc, "centroid_id"), k, candidates, query_id, corpus_id
     )
 
 
@@ -1062,25 +992,14 @@ def semdedup(
     catalog statistics) to skip it.
 
     The returned ``pairs`` frame is persisted (both outputs derive
-    from it) and deliberately left cached for the session — callers
-    running many passes should ``spark.catalog.clearCache()`` between
-    them, as bench.py does."""
+    from it) and stays cached after return; see the cache rule in
+    ``queries/__init__``."""
     if num_clusters is None:
         num_clusters = default_num_centroids(
             corpus.count() if n_rows is None else n_rows
         )
     centroids = kmeans_centroids(corpus, vec_col, num_clusters, seed, max_iter)
-    packed = _pack_centroids(centroids)
-    assigned = (
-        corpus.select(
-            F.col(id_col),
-            F.col(vec_col).alias("__vec"),
-            l2_norm(F.col(vec_col)).alias("__norm"),
-        )
-        .crossJoin(F.broadcast(packed))
-        .withColumn("centroid_id", _nearest_centroid(F.col("__vec")))
-        .select(id_col, "__vec", "__norm", "centroid_id")
-    )
+    assigned = _assign(corpus, _pack_centroids(centroids), id_col, vec_col, side="")
     a = assigned.select(
         F.col("centroid_id"),
         F.col(id_col).alias("id_a"),

@@ -1192,9 +1192,8 @@ def winnow_overlap_pairs(
     # Three downstream consumers (df-cut, sizes, self-join) would each
     # recompute the fingerprint scan; persist the compact (doc, fp)
     # index instead — 16 bytes/row regardless of document size. The
-    # persisted blocks stay cached for the session (lazy results make
-    # an in-function unpersist unsound); batch callers should
-    # clearCache between corpora, as bench.py does.
+    # returned pairs read it lazily, so it stays cached after return;
+    # see the cache rule in ``queries/__init__``.
     prints = winnow_prints(df, id_col, text_col, k, window).persist()
     if max_fp_df is not None:
         rare = (
@@ -1277,8 +1276,8 @@ def winnow_dup_candidates(
     10k-doc corpus (~15 s) vs 3.6M (~2 s) for the two-tier form — at
     1e9 docs the n/10 cut would be catastrophic while this stays
     linear. Candidate PRECISION is the caller's verification step.
-    Persisted print blocks stay cached for the session (see
-    :func:`winnow_overlap_pairs` on why).
+    Persisted print blocks stay cached after return; see the cache
+    rule in ``queries/__init__``.
     """
     prints = winnow_prints(df, id_col, text_col, k, window).persist()
     fp_df = prints.groupBy("fp").agg(F.count(F.lit(1)).alias("_df"))
@@ -1365,10 +1364,9 @@ def bm25_topk(
     tf = (
         toks.groupBy(id_col, "__term")
         .agg(F.count(F.lit(1)).alias("__tf"))
-        # Deliberately left cached for the session — the returned
-        # (lazy) ranking reads it on every downstream action, so there
-        # is no safe unpersist point inside this function; long-lived
-        # sessions clearCache between passes, as bench.py does.
+        # The returned (lazy) ranking reads it on every downstream
+        # action, so it stays cached after return; see the cache rule
+        # in ``queries/__init__``.
         .persist()
     )
     # dl and the corpus totals derive from the PERSISTED tf frame, not

@@ -26,6 +26,20 @@ accept this measure-zero risk; where a tie actually occurred
 (orders_by_state) the average is computed in exact integer units with
 explicit half-up rounding instead (the (2a+n) div 2n idiom — use it if
 another query ever trips).
+
+Cache rule
+----------
+A query may ``persist()`` a subtree that several branches of its result
+read (a codebook, token counts, a pair set). It cannot unpersist it:
+the returned DataFrame reads the cache lazily, after the function has
+returned. So the registry owns the cache's lifetime: every registered
+query starts with ``spark.catalog.clearCache()`` (:func:`_stabilized`),
+which drops whatever the previous query left cached, and no query reads
+another's cache. Operators and queries that persist point here instead
+of unpersisting. ``clearCache`` is session-global, so registry wrappers
+must not run concurrently on one session; the engine's thread pools and
+``run.py`` call query and operator functions directly, never these
+wrappers.
 """
 
 from __future__ import annotations
@@ -96,6 +110,7 @@ def driver_stable(df: DataFrame) -> DataFrame:
 
 def _stabilized(fn: QueryFn) -> QueryFn:
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        spark.catalog.clearCache()  # the cache rule (module docstring)
         return driver_stable(fn(spark, sf_dir))
 
     run.__name__ = getattr(fn, "__name__", "query")

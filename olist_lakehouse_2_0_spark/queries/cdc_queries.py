@@ -394,9 +394,9 @@ def scd2_validity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = _as_change_feed(spark, sf_dir)
     hist = scd2_history(feed, EVENT_SPEC).select(
         "user_id", "__start_at", "__end_at", "__is_current"
-        # Cached for the session (both self-join sides + the audit
-        # aggregate read it lazily; no safe unpersist point here) —
-        # bench.py clearCaches between query passes.
+        # Both self-join sides + the audit aggregate read it lazily, so
+        # it stays cached after return; see the cache rule in
+        # ``queries/__init__``.
     ).persist()
     links = (
         hist.alias("a")

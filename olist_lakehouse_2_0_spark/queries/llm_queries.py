@@ -1,13 +1,17 @@
 """LLM-training-data pipeline queries for the driver contract:
 text analysis, dedup (exact / n-gram-Jaccard / MinHash / SimHash),
-similarity search (brute-force + IVF), multimodal metadata.
+similarity search (brute-force, IVF, PQ, IVF-PQ), multimodal metadata.
 
-Oracled where the semantics are SQL-expressible in DuckDB (text stats,
-exact dedup, Jaccard pairs, brute-force top-k — the dot product is
-bit-for-bit identical across engines because both fold sequentially in
-double precision). Hash-based ops (MinHash/SimHash/hyperplane LSH)
-depend on xxhash64 and are rows-only checked; their correctness is
-covered by operator unit tests against exact baselines.
+Every query has a DuckDB oracle. Where the semantics are
+SQL-expressible it recomputes the rows (text stats, exact dedup,
+Jaccard pairs, brute-force top-k — the dot product is bit-for-bit
+identical across engines because both fold sequentially in double
+precision). Hash-based and approximate operators (MinHash/SimHash/
+winnowing/hyperplane LSH, pruned IVF/PQ) are registered through
+verified companions instead: candidates are verified exactly, or a
+pruned search is judged against brute force by invariants the oracle
+emits as literals (``_recall_gate``). Their raw outputs stay library
+API, covered by operator unit tests against exact baselines.
 """
 
 from __future__ import annotations
@@ -28,7 +32,6 @@ from olist_lakehouse_2_0_spark.operators.dedup import (
     hashed_shingles,
     jaccard_pairs,
     jaccard_pairs_from_postings,
-    minhash_dedup_pairs,
     minhash_lsh_candidates,
     minhash_signatures,
     simhash_dedup_pairs,
@@ -537,21 +540,6 @@ WHERE c / (sa.sz + sb.sz - c) >= 0.8
 """
 
 
-def minhash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pipeline (rows-only: xxhash64-based; unit
-    tests verify recall against the exact Jaccard baseline)."""
-    docs = load(spark, sf_dir, "documents", spread=True)
-    return minhash_dedup_pairs(
-        _with_duplicates(docs), "doc_id", "text", num_hashes=64, bands=16, threshold=0.5
-    )
-
-
-def simhash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs (rows-only)."""
-    docs = load(spark, sf_dir, "documents", spread=True)
-    return simhash_dedup_pairs(_with_duplicates(docs), "doc_id", "text", max_hamming=3)
-
-
 def fingerprint_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whole-document fingerprint dedup: group by the 64-bit xxhash64
     fingerprint of normalized text, report groups with >1 member. The
@@ -585,18 +573,8 @@ HAVING COUNT(*) > 1
 """
 
 
-def winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing rolling-hash fingerprint overlap (rows-only: xxhash64
-    fingerprints are not DuckDB-reproducible; unit tests verify planted
-    partial-overlap recovery)."""
-    docs = load(spark, sf_dir, "documents")
-    return ops_text.winnow_overlap_pairs(
-        _with_duplicates(docs), "doc_id", "text", k=8, window=4, min_overlap=0.8
-    )
-
-
 # ---------------------------------------------------------------------------
-# Similarity search (brute-force oracled; IVF rows-only)
+# Similarity search (every top-k equals brute force or passes its recall gate)
 # ---------------------------------------------------------------------------
 
 
@@ -604,18 +582,89 @@ def embedding_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-10 for a deterministic query subset (vec_id % 50
     == 0) against the full corpus. Dot products fold sequentially in
     double precision — bit-identical to the DuckDB oracle."""
-    emb = load(spark, sf_dir, "embeddings", spread=True)
+    queries, corpus = _topk_split(load(spark, sf_dir, "embeddings", spread=True))
+    return _topk_out(cosine_topk(queries, corpus, k=10))
+
+
+def _topk_split(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The embedding top-k fixture every ANN query shares: each 50th
+    vector is a query (``query_id``), the whole table is the corpus
+    (``corpus_id``)."""
     queries = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     corpus = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-    topk = cosine_topk(queries, corpus, k=10)
+    return queries, corpus
+
+
+def _topk_out(topk: DataFrame) -> DataFrame:
+    """Top-k rows in the oracle's types (``EMBEDDING_TOPK_SQL``): cosine
+    as decimal(12,6), rank as long."""
     return topk.select(
         "query_id",
         "corpus_id",
         F.col("cosine").cast("decimal(12,6)").alias("cosine"),
         F.col("rank").cast("long").alias("rank"),
     )
+
+
+def _recall_gate(
+    approx: DataFrame, exact: DataFrame, mean_min: float, min_min: float
+) -> DataFrame:
+    """The recall@10 verdict of a pruned top-10 (``approx``) against
+    brute force (``exact``) as one row: the exact counts ``n_queries``
+    and ``k``, and three invariants the oracle
+    (``EMBEDDING_TOPK_RECALL_SQL``) emits as literal TRUE —
+    ``self_hit_all`` (every query ranks itself first) and
+    ``mean_recall_ok`` / ``min_recall_ok`` (mean and per-query minimum
+    recall at least ``mean_min`` / ``min_min``). Callers persist
+    whichever legs are read more than once."""
+    hits = exact.join(
+        approx.select("query_id", "corpus_id"),
+        ["query_id", "corpus_id"],
+        "left_semi",
+    )
+    per_q = (
+        exact.groupBy("query_id")
+        .agg(F.count(F.lit(1)).alias("n_exact"))
+        .join(
+            hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hit")),
+            "query_id",
+            "left",
+        )
+        .fillna(0, ["n_hit"])
+        .select("query_id", (F.col("n_hit") / F.col("n_exact")).alias("recall"))
+    )
+    self_hits = approx.filter(
+        (F.col("rank") == 1) & (F.col("corpus_id") == F.col("query_id"))
+    )
+    return (
+        per_q.agg(
+            F.count(F.lit(1)).alias("n_queries"),
+            F.lit(10).alias("k"),
+            F.mean("recall").alias("__mean_r"),
+            F.min("recall").alias("__min_r"),
+        )
+        .crossJoin(self_hits.agg(F.count(F.lit(1)).alias("__n_self")))
+        .select(
+            "n_queries",
+            "k",
+            (F.col("__n_self") == F.col("n_queries")).alias("self_hit_all"),
+            (F.col("__mean_r") >= mean_min).alias("mean_recall_ok"),
+            (F.col("__min_r") >= min_min).alias("min_recall_ok"),
+        )
+    )
+
+
+EMBEDDING_TOPK_RECALL_SQL = """
+SELECT COUNT(*) AS n_queries,
+       10 AS k,
+       TRUE AS self_hit_all,
+       TRUE AS mean_recall_ok,
+       TRUE AS min_recall_ok
+FROM embeddings
+WHERE vec_id % 50 = 0
+"""
 
 
 EMBEDDING_TOPK_SQL = """
@@ -874,17 +923,6 @@ FROM a
 """
 
 
-def embedding_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-10 (rows-only: centroid assignment is
-    hash-sampled; unit tests measure recall vs brute force)."""
-    emb = load(spark, sf_dir, "embeddings", spread=True)
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-    return ivf_topk(queries, corpus, k=10, num_centroids=16, nprobe=4)
-
-
 def embedding_topk_ivf_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-k with ``nprobe == num_centroids`` — every bucket is
     probed, so the candidate set is the whole corpus and the output
@@ -892,21 +930,13 @@ def embedding_topk_ivf_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame
     This puts the entire IVF machinery — centroid packing, map-side
     nearest-centroid assignment, probe ordering, bucket equi-join,
     per-query ranking — under the driver's DuckDB hash gate (oracle =
-    the brute-force SQL), while ``embedding_topk_ivf`` keeps showing
-    the pruned nprobe<k configuration. Runs at 64 centroids (not the
+    the brute-force SQL); the pruned nprobe<k configuration is gated by
+    ``embedding_topk_ivf_indexed_recall``. Runs at 64 centroids (not the
     round-2 16) so the gate also covers a codebook larger than the
     query batch — the regime the sqrt(n) scaling rule produces."""
-    emb = load(spark, sf_dir, "embeddings", spread=True)
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-    topk = ivf_topk(queries, corpus, k=10, num_centroids=64, nprobe=None)
-    return topk.select(
-        "query_id",
-        "corpus_id",
-        F.col("cosine").cast("decimal(12,6)").alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
+    queries, corpus = _topk_split(load(spark, sf_dir, "embeddings", spread=True))
+    return _topk_out(
+        ivf_topk(queries, corpus, k=10, num_centroids=64, nprobe=None)
     )
 
 
@@ -927,16 +957,8 @@ def embedding_topk_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings", spread=True)
     cat = _ivf_index_for(spark, sf_dir, emb)
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    topk = ivf_topk_indexed(queries, cat, nprobe=None, k=10)
-    return topk.select(
-        "query_id",
-        "corpus_id",
-        F.col("cosine").cast("decimal(12,6)").alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
-    )
+    queries, _ = _topk_split(emb)
+    return _topk_out(ivf_topk_indexed(queries, cat, nprobe=None, k=10))
 
 
 def embedding_topk_ivf_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -957,8 +979,7 @@ def embedding_topk_ivf_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from olist_lakehouse_2_0_spark.staging import staging_dir
 
-    emb = load(spark, sf_dir, "embeddings", spread=True)
-    corpus = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
+    queries, corpus = _topk_split(load(spark, sf_dir, "embeddings", spread=True))
     # Build-once-per-dataset cache, same pattern (and same tag
     # normalization rationale) as _ivf_index_for: the build+append is
     # the offline maintenance step; repeated invocations re-run only
@@ -976,16 +997,7 @@ def embedding_topk_ivf_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         append_ivf_index(corpus.filter(F.col("corpus_id") % 2 == 1), cat)
         _IVF_INDEX_CACHE[tag] = cat
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    topk = ivf_topk_indexed(queries, cat, nprobe=None, k=10)
-    return topk.select(
-        "query_id",
-        "corpus_id",
-        F.col("cosine").cast("decimal(12,6)").alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
-    )
+    return _topk_out(ivf_topk_indexed(queries, cat, nprobe=None, k=10))
 
 
 def embedding_topk_ivf_indexed_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1012,58 +1024,10 @@ def embedding_topk_ivf_indexed_recall(spark: SparkSession, sf_dir: str) -> DataF
 
     emb = load(spark, sf_dir, "embeddings", spread=True)
     cat = _ivf_index_for(spark, sf_dir, emb)
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
+    queries, corpus = _topk_split(emb)
     approx = ivf_topk_indexed(queries, cat, nprobe=4, k=10).persist()
     exact = cosine_topk(queries, corpus, k=10)
-    hits = exact.join(
-        approx.select("query_id", "corpus_id"),
-        ["query_id", "corpus_id"],
-        "left_semi",
-    )
-    per_q = (
-        exact.groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_exact"))
-        .join(
-            hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hit")),
-            "query_id",
-            "left",
-        )
-        .fillna(0, ["n_hit"])
-        .select("query_id", (F.col("n_hit") / F.col("n_exact")).alias("recall"))
-    )
-    self_hits = approx.filter(
-        (F.col("rank") == 1) & (F.col("corpus_id") == F.col("query_id"))
-    )
-    return (
-        per_q.agg(
-            F.count(F.lit(1)).alias("n_queries"),
-            F.lit(10).alias("k"),
-            F.mean("recall").alias("__mean_r"),
-            F.min("recall").alias("__min_r"),
-        )
-        .crossJoin(self_hits.agg(F.count(F.lit(1)).alias("__n_self")))
-        .select(
-            "n_queries",
-            "k",
-            (F.col("__n_self") == F.col("n_queries")).alias("self_hit_all"),
-            (F.col("__mean_r") >= 0.2).alias("mean_recall_ok"),
-            (F.col("__min_r") >= 0.05).alias("min_recall_ok"),
-        )
-    )
-
-
-EMBEDDING_TOPK_IVF_INDEXED_RECALL_SQL = """
-SELECT COUNT(*) AS n_queries,
-       10 AS k,
-       TRUE AS self_hit_all,
-       TRUE AS mean_recall_ok,
-       TRUE AS min_recall_ok
-FROM embeddings
-WHERE vec_id % 50 = 0
-"""
+    return _recall_gate(approx, exact, 0.2, 0.05)
 
 
 def embedding_topk_pq_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1080,17 +1044,9 @@ def embedding_topk_pq_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     configuration."""
     from olist_lakehouse_2_0_spark.operators.similarity import pq_topk
 
-    emb = load(spark, sf_dir, "embeddings", spread=True)
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-    topk = pq_topk(queries, corpus, k=10, m=8, ksub=16, candidates=None)
-    return topk.select(
-        "query_id",
-        "corpus_id",
-        F.col("cosine").cast("decimal(12,6)").alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
+    queries, corpus = _topk_split(load(spark, sf_dir, "embeddings", spread=True))
+    return _topk_out(
+        pq_topk(queries, corpus, k=10, m=8, ksub=16, candidates=None)
     )
 
 
@@ -1120,61 +1076,12 @@ def embedding_topk_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Counts (n_queries, k) are exact and oracled directly."""
     from olist_lakehouse_2_0_spark.operators.similarity import pq_topk
 
-    emb = load(spark, sf_dir, "embeddings", spread=True)
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
+    queries, corpus = _topk_split(load(spark, sf_dir, "embeddings", spread=True))
     approx = pq_topk(
         queries, corpus, k=10, m=8, ksub=64, candidates=100
     ).persist()
     exact = cosine_topk(queries, corpus, k=10)
-    hits = exact.join(
-        approx.select("query_id", "corpus_id"),
-        ["query_id", "corpus_id"],
-        "left_semi",
-    )
-    per_q = (
-        exact.groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_exact"))
-        .join(
-            hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hit")),
-            "query_id",
-            "left",
-        )
-        .fillna(0, ["n_hit"])
-        .select("query_id", (F.col("n_hit") / F.col("n_exact")).alias("recall"))
-    )
-    self_hits = approx.filter(
-        (F.col("rank") == 1) & (F.col("corpus_id") == F.col("query_id"))
-    )
-    return (
-        per_q.agg(
-            F.count(F.lit(1)).alias("n_queries"),
-            F.lit(10).alias("k"),
-            F.mean("recall").alias("__mean_r"),
-            F.min("recall").alias("__min_r"),
-        )
-        .crossJoin(self_hits.agg(F.count(F.lit(1)).alias("__n_self")))
-        .select(
-            "n_queries",
-            "k",
-            (F.col("__n_self") == F.col("n_queries")).alias("self_hit_all"),
-            (F.col("__mean_r") >= 0.5).alias("mean_recall_ok"),
-            (F.col("__min_r") >= 0.2).alias("min_recall_ok"),
-        )
-    )
-
-
-EMBEDDING_TOPK_PQ_RECALL_SQL = """
-SELECT COUNT(*) AS n_queries,
-       10 AS k,
-       TRUE AS self_hit_all,
-       TRUE AS mean_recall_ok,
-       TRUE AS min_recall_ok
-FROM embeddings
-WHERE vec_id % 50 = 0
-"""
+    return _recall_gate(approx, exact, 0.5, 0.2)
 
 
 def embedding_topk_ivfpq_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1199,24 +1106,16 @@ def embedding_topk_ivfpq_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_pq_topk,
     )
 
-    emb = load(spark, sf_dir, "embeddings", spread=True)
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
+    queries, corpus = _topk_split(load(spark, sf_dir, "embeddings", spread=True))
     n = _corpus_count_for(sf_dir, "plain", corpus)
     cents = _coarse_centroids_for(
         spark, sf_dir, corpus, "plain", default_num_centroids(n)
     )
-    topk = ivf_pq_topk(
-        queries, corpus, k=10, nprobe=None, m=8, ksub=64, candidates=None,
-        centroids=cents,
-    )
-    return topk.select(
-        "query_id",
-        "corpus_id",
-        F.col("cosine").cast("decimal(12,6)").alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
+    return _topk_out(
+        ivf_pq_topk(
+            queries, corpus, k=10, nprobe=None, m=8, ksub=64, candidates=None,
+            centroids=cents,
+        )
     )
 
 
@@ -1253,11 +1152,7 @@ def embedding_topk_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_pq_topk,
     )
 
-    emb = load(spark, sf_dir, "embeddings", spread=True)
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
+    queries, corpus = _topk_split(load(spark, sf_dir, "embeddings", spread=True))
     n = _corpus_count_for(sf_dir, "plain", corpus)
     cents = _coarse_centroids_for(
         spark, sf_dir, corpus, "plain", default_num_centroids(n)
@@ -1267,54 +1162,7 @@ def embedding_topk_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         centroids=cents,
     ).persist()
     exact = cosine_topk(queries, corpus, k=10).persist()
-    hits = exact.join(
-        approx.select("query_id", "corpus_id"),
-        ["query_id", "corpus_id"],
-        "left_semi",
-    )
-    per_q = (
-        exact.groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_exact"))
-        .join(
-            hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hit")),
-            "query_id",
-            "left",
-        )
-        .fillna(0, ["n_hit"])
-        .select("query_id", (F.col("n_hit") / F.col("n_exact")).alias("recall"))
-    )
-    self_hits = approx.filter(
-        (F.col("rank") == 1) & (F.col("corpus_id") == F.col("query_id"))
-    )
-    return (
-        per_q.agg(
-            F.count(F.lit(1)).alias("n_queries"),
-            F.lit(10).alias("k"),
-            F.mean("recall").alias("__mean_r"),
-            F.min("recall").alias("__min_r"),
-        )
-        .crossJoin(self_hits.agg(F.count(F.lit(1)).alias("__n_self")))
-        .select(
-            "n_queries",
-            "k",
-            (F.col("__n_self") == F.col("n_queries")).alias("self_hit_all"),
-            (F.col("__mean_r") >= 0.8).alias("mean_recall_ok"),
-            (F.col("__min_r") >= 0.4).alias("min_recall_ok"),
-        )
-    )
-
-
-def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup via hyperplane LSH (rows-only).
-
-    The raw corpus is random near-orthogonal unit vectors with no true
-    near-dups, so offset-id exact copies are planted — every planted
-    pair shares all hyperplane buckets and must be recovered."""
-    emb = load(spark, sf_dir, "embeddings", spread=True).select("vec_id", "embedding")
-    copies = emb.select((F.col("vec_id") + 1000000).alias("vec_id"), "embedding")
-    return embedding_neardup_pairs(
-        emb.unionByName(copies), "vec_id", "embedding", threshold=0.999
-    )
+    return _recall_gate(approx, exact, 0.8, 0.4)
 
 
 # ---------------------------------------------------------------------------
@@ -2512,18 +2360,6 @@ QUALIFY COUNT(*) OVER (PARTITION BY norm) > 1
 """
 
 
-def embedding_topk_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF top-k with MLlib-KMeans-learned centroids (rows-only:
-    centroid positions come from distributed Lloyd's iterations; the
-    recall-vs-bruteforce bound is unit-tested)."""
-    emb = load(spark, sf_dir, "embeddings", spread=True)
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-    return ivf_topk_kmeans(queries, corpus, k=10, num_centroids=16, nprobe=4)
-
-
 def embedding_topk_ivf_kmeans_exhaustive(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2535,19 +2371,9 @@ def embedding_topk_ivf_kmeans_exhaustive(
     map-side assignment, probe ordering, and ranking are all inside
     the hash while centroid QUALITY (the only nondeterministic part)
     is provably invisible to it."""
-    emb = load(spark, sf_dir, "embeddings", spread=True)
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-    topk = ivf_topk_kmeans(
-        queries, corpus, k=10, num_centroids=16, nprobe=16
-    )
-    return topk.select(
-        "query_id",
-        "corpus_id",
-        F.col("cosine").cast("decimal(12,6)").alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
+    queries, corpus = _topk_split(load(spark, sf_dir, "embeddings", spread=True))
+    return _topk_out(
+        ivf_topk_kmeans(queries, corpus, k=10, num_centroids=16, nprobe=16)
     )
 
 
@@ -4061,7 +3887,6 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("doc_id", "source", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
     )
     is_target = F.col("source") == "src0"
     by_token = tf.groupBy("token").agg(
@@ -4121,7 +3946,6 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("rank")
     )
-    tf.unpersist()
     return out
 
 
@@ -4870,17 +4694,11 @@ def embedding_topk_mrl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale shape as IVF/PQ: cheap candidates bound the expensive exact
     stage to pool-size per query."""
     from olist_lakehouse_2_0_spark.operators.similarity import (
-        cosine_topk,
-        dot,
-        l2_norm,
+        _rank_cosine,
+        _vecs,
     )
-    from pyspark.sql import Window as W
 
-    emb = load(spark, sf_dir, "embeddings", spread=True)
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
+    queries, corpus = _topk_split(load(spark, sf_dir, "embeddings", spread=True))
     tq = queries.select(
         "query_id", F.slice("embedding", 1, 16).alias("embedding")
     )
@@ -4888,79 +4706,16 @@ def embedding_topk_mrl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "corpus_id", F.slice("embedding", 1, 16).alias("embedding")
     )
     cands = cosine_topk(tq, tc, k=100).select("query_id", "corpus_id")
-    q_full = queries.select(
-        "query_id",
-        F.col("embedding").alias("__qvec"),
-        l2_norm(F.col("embedding")).alias("__qnorm"),
-    )
-    c_full = corpus.select(
-        "corpus_id",
-        F.col("embedding").alias("__cvec"),
-        l2_norm(F.col("embedding")).alias("__cnorm"),
-    )
-    rerank = (
-        cands.join(F.broadcast(q_full), "query_id")
-        .join(c_full, "corpus_id")
-        .withColumn(
-            "cosine",
-            dot(F.col("__qvec"), F.col("__cvec"))
-            / F.nullif(F.col("__qnorm") * F.col("__cnorm"), F.lit(0.0)),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
+    rerank = cands.join(
+        F.broadcast(_vecs(queries, "query_id", "embedding", "q")), "query_id"
+    ).join(_vecs(corpus, "corpus_id", "embedding", "c"), "corpus_id")
     approx = (
-        rerank.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
+        _rank_cosine(rerank, 10, "query_id", "corpus_id")
         .select("query_id", "corpus_id", "rank")
         .persist()
     )
     exact = cosine_topk(queries, corpus, k=10)
-    hits = exact.join(
-        approx.select("query_id", "corpus_id"),
-        ["query_id", "corpus_id"],
-        "left_semi",
-    )
-    per_q = (
-        exact.groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_exact"))
-        .join(
-            hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hit")),
-            "query_id",
-            "left",
-        )
-        .fillna(0, ["n_hit"])
-        .select("query_id", (F.col("n_hit") / F.col("n_exact")).alias("recall"))
-    )
-    self_hits = approx.filter(
-        (F.col("rank") == 1) & (F.col("corpus_id") == F.col("query_id"))
-    )
-    return (
-        per_q.agg(
-            F.count(F.lit(1)).alias("n_queries"),
-            F.lit(10).alias("k"),
-            F.mean("recall").alias("__mean_r"),
-            F.min("recall").alias("__min_r"),
-        )
-        .crossJoin(self_hits.agg(F.count(F.lit(1)).alias("__n_self")))
-        .select(
-            "n_queries",
-            "k",
-            (F.col("__n_self") == F.col("n_queries")).alias("self_hit_all"),
-            (F.col("__mean_r") >= 0.2).alias("mean_recall_ok"),
-            (F.col("__min_r") >= 0.05).alias("min_recall_ok"),
-        )
-    )
-
-
-EMBEDDING_TOPK_MRL_RECALL_SQL = """
-SELECT COUNT(*) AS n_queries,
-       10 AS k,
-       TRUE AS self_hit_all,
-       TRUE AS mean_recall_ok,
-       TRUE AS min_recall_ok
-FROM embeddings
-WHERE vec_id % 50 = 0
-"""
+    return _recall_gate(approx, exact, 0.2, 0.05)
 
 
 def exact_substring_decontamination_ac(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5048,17 +4803,16 @@ LLM_QUERIES = {
     "incremental_corpus_dedup": incremental_corpus_dedup,
     "multi_format_roundtrip": multi_format_roundtrip,
     "jaccard_dups": jaccard_dups,
-    # The rows-only twins (minhash_dups, simhash_dups, winnow_overlap,
-    # embedding_topk_ivf, embedding_topk_ivf_kmeans, embedding_neardup)
-    # are deliberately NOT registered: their raw candidate/pruned
-    # outputs are not DuckDB-expressible, and a permanent no_oracle row
-    # reads as an error under the driver gate (VERDICT r3 next-step
-    # #1c). Each one's machinery IS driver-gated through its oracled
-    # companion below (minhash_verified_dups, simhash_verified_dups,
-    # winnow_verified_dups, embedding_topk_ivf_exhaustive/_indexed,
-    # embedding_topk_ivf_kmeans_exhaustive, embedding_neardup_verified,
-    # embedding_topk_ivf_indexed_recall); the pruned configurations
-    # remain library API covered by pytest recall bounds.
+    # The raw outputs of the approximate operators (minhash_dedup_pairs,
+    # simhash_dedup_pairs, text.winnow_overlap_pairs,
+    # embedding_neardup_pairs, pruned ivf_topk / ivf_topk_kmeans) have
+    # no DuckDB form, so no registered query returns them. Each operator
+    # is gated through its verified companion below
+    # (minhash_verified_dups, simhash_verified_dups,
+    # winnow_verified_dups, embedding_neardup_verified,
+    # embedding_topk_ivf_exhaustive / _indexed / _indexed_recall,
+    # embedding_topk_ivf_kmeans_exhaustive); pytest bounds the recall of
+    # the pruned configurations.
     "minhash_verified_dups": minhash_verified_dups,
     "simhash_verified_dups": simhash_verified_dups,
     "winnow_verified_dups": winnow_verified_dups,
@@ -5113,7 +4867,7 @@ LLM_ORACLES = {
     "training_shard_manifest": TRAINING_SHARD_MANIFEST_SQL,
     "exact_substring_decontamination": EXACT_SUBSTRING_DECONTAMINATION_SQL,
     "exact_substring_decontamination_ac": EXACT_SUBSTRING_DECONTAMINATION_SQL,
-    "embedding_topk_mrl_recall": EMBEDDING_TOPK_MRL_RECALL_SQL,
+    "embedding_topk_mrl_recall": EMBEDDING_TOPK_RECALL_SQL,
     "image_dhash_neardup": IMAGE_DHASH_NEARDUP_SQL,
     "bigram_logprob": BIGRAM_LOGPROB_SQL,
     "kneser_ney_logprob": KNESER_NEY_LOGPROB_SQL,
@@ -5122,12 +4876,12 @@ LLM_ORACLES = {
     "bpe_pair_counts": BPE_PAIR_COUNTS_SQL,
     "embedding_topk_ivf_exhaustive": EMBEDDING_TOPK_SQL,
     "embedding_topk_ivf_indexed": EMBEDDING_TOPK_SQL,
-    "embedding_topk_ivf_indexed_recall": EMBEDDING_TOPK_IVF_INDEXED_RECALL_SQL,
+    "embedding_topk_ivf_indexed_recall": EMBEDDING_TOPK_RECALL_SQL,
     "embedding_topk_pq_exact": EMBEDDING_TOPK_SQL,
-    "embedding_topk_pq_recall": EMBEDDING_TOPK_PQ_RECALL_SQL,
+    "embedding_topk_pq_recall": EMBEDDING_TOPK_RECALL_SQL,
     "embedding_topk_ivfpq_exact": EMBEDDING_TOPK_SQL,
     "embedding_topk_ivf_appended": EMBEDDING_TOPK_SQL,
-    "embedding_topk_ivfpq_recall": EMBEDDING_TOPK_PQ_RECALL_SQL,
+    "embedding_topk_ivfpq_recall": EMBEDDING_TOPK_RECALL_SQL,
     "embedding_topk_ivf_kmeans_exhaustive": EMBEDDING_TOPK_SQL,
     "text_stats": TEXT_STATS_SQL,
     "doc_chunks": DOC_CHUNKS_SQL,

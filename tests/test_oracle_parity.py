@@ -37,6 +37,17 @@ def test_parity(spark, sf_correctness, name):
     plan_census.check(name, plan_census.census(spark, since), CENSUS)
 
 
+def test_registry_clears_cache_before_each_query(spark, sf_smoke):
+    """No query reads another's cache: ``bigram_logprob`` returns with
+    persisted frames its result reads lazily, and the next registry
+    call drops them before it builds anything."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    QUERIES["bigram_logprob"](spark, sf_smoke).write.format("noop").mode("overwrite").save()
+    assert not cache.isEmpty()
+    QUERIES["daily_orders"](spark, sf_smoke)
+    assert cache.isEmpty()
+
+
 def _match(spark_cols: dict, oracle_cols: dict) -> bool:
     return compare(pd.DataFrame(spark_cols), pd.DataFrame(oracle_cols))["match"]
 
