@@ -197,9 +197,7 @@ class Catalog:
         §1.2)."""
         root = self.path_for(name, layer)
         target = os.path.join(root, f"v{version:09d}")
-        jvm = spark._jvm
-        HPath = jvm.org.apache.hadoop.fs.Path
-        fs = HPath(root).getFileSystem(spark._jsc.hadoopConfiguration())
+        _, HPath, fs = _fs(spark, root)
         if not fs.exists(HPath(target)):
             retained = [v for v, _ in _list_versions(fs, HPath, root)]
             raise FileNotFoundError(
@@ -214,9 +212,7 @@ class Catalog:
         n_files, bytes, modified_at) — the DESCRIBE HISTORY analogue
         for the versioned layout."""
         root = self.path_for(name, layer)
-        jvm = spark._jvm
-        HPath = jvm.org.apache.hadoop.fs.Path
-        fs = HPath(root).getFileSystem(spark._jsc.hadoopConfiguration())
+        _, HPath, fs = _fs(spark, root)
         rows = []
 
         def _parquet_files(path):
@@ -294,10 +290,7 @@ class Catalog:
         staging = os.path.join(
             root, "_staging" if token is None else f"_staging-{token}"
         )
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        HPath = jvm.org.apache.hadoop.fs.Path
-        fs = HPath(root).getFileSystem(conf)
+        _, HPath, fs = _fs(spark, root)
         versions = _list_versions(fs, HPath, root)
         if expected_version is None:
             n = (versions[-1][0] + 1) if versions else 1
@@ -360,10 +353,7 @@ class Catalog:
         """Newest committed version number, 0 when the table has none
         (the ``expected_version`` a first writer passes)."""
         root = self.path_for(name, layer)
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        HPath = jvm.org.apache.hadoop.fs.Path
-        fs = HPath(root).getFileSystem(conf)
+        _, HPath, fs = _fs(spark, root)
         versions = _list_versions(fs, HPath, root)
         return versions[-1][0] if versions else 0
 
@@ -494,10 +484,7 @@ class Catalog:
         Run it only when no writer is mid-commit (e.g. the weekly
         full-refresh job)."""
         root = self.path_for(name, layer)
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        HPath = jvm.org.apache.hadoop.fs.Path
-        fs = HPath(root).getFileSystem(conf)
+        _, HPath, fs = _fs(spark, root)
         p = HPath(root)
         if not fs.exists(p):
             return 0
@@ -648,9 +635,8 @@ class Catalog:
             # Spark's lowercased managed-table directory naming (this
             # repo's sessions never USE another database).
             wh = spark.conf.get("spark.sql.warehouse.dir")
-            jvm = spark._jvm
-            loc = jvm.org.apache.hadoop.fs.Path(wh, table.lower())
-            fs = loc.getFileSystem(spark._jsc.hadoopConfiguration())
+            _, HPath, fs = _fs(spark, wh)
+            loc = HPath(wh, table.lower())
             if fs.exists(loc):
                 fs.delete(loc, True)
 
@@ -1046,10 +1032,18 @@ def _list_versions(fs, HPath, root: str) -> list[tuple[int, str]]:
     return sorted(out)
 
 
-def _latest_version_or_none(spark: SparkSession, root: str) -> str | None:
+def _fs(spark: SparkSession, path: str):
+    """(jvm, Hadoop ``Path`` class, the FileSystem that holds ``path``)
+    under the session's Hadoop configuration."""
     jvm = spark._jvm
     HPath = jvm.org.apache.hadoop.fs.Path
-    fs = HPath(root).getFileSystem(spark._jsc.hadoopConfiguration())
+    return jvm, HPath, HPath(path).getFileSystem(
+        spark._jsc.hadoopConfiguration()
+    )
+
+
+def _latest_version_or_none(spark: SparkSession, root: str) -> str | None:
+    _, HPath, fs = _fs(spark, root)
     versions = _list_versions(fs, HPath, root)
     return versions[-1][1] if versions else None
 

@@ -88,7 +88,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import col as F_col
 from pyspark.sql.functions import lit as F_lit
 
-from olist_lakehouse_2_0_spark.catalog import _is_hive_dir, _list_versions
+from olist_lakehouse_2_0_spark.catalog import _fs, _is_hive_dir, _list_versions
 
 _LOG_DIR = "_delta_log"
 
@@ -176,14 +176,6 @@ _CHECKPOINT_SCHEMA = T.StructType(
         ),
     ]
 )
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    HPath = jvm.org.apache.hadoop.fs.Path
-    return jvm, HPath, HPath(path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
 
 
 def _commit_path(dest: str, version: int) -> str:

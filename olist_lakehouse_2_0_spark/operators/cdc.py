@@ -400,9 +400,10 @@ class CdcSink:
         clears the debris."""
         from pyspark.errors import AnalysisException
 
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        from olist_lakehouse_2_0_spark.catalog import _fs
+
+        _, HPath, fs = _fs(spark, path)
+        hpath = HPath(path)
         if not fs.exists(hpath):
             return None
         if schema is not None:

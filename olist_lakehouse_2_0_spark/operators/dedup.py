@@ -12,6 +12,11 @@ At 100 TB: every stage is shuffle-partitioned by doc or bucket key;
 hot buckets (boilerplate shingles) are handled by dropping
 super-frequent shingles (``max_shingle_df``) the same way production
 MinHash pipelines drop stop-shingles.
+
+Each filter → verify step is written once, as a private helper here
+(frequency cut, bucket pairs, identical-signature collapse, equal-key
+pairs, pair-score tail, key-equality verify, shingle-set key) that the
+winnowing operators in ``text.py`` and the verified queries share.
 """
 
 from __future__ import annotations
@@ -27,6 +32,79 @@ from olist_lakehouse_2_0_spark.operators.text import fingerprint, tokens
 # Mersenne prime 2^31-1 as the minhash universal-hash modulus: keeps
 # (a*h + b) below 2^62, so the JVM long multiply never overflows.
 _MERSENNE = (1 << 31) - 1
+
+
+def _frequency_cut(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
+    """Keep the rows of ``df`` whose ``keys`` value is held by at most
+    ``cap`` rows (exactly ``cap`` stays): the stop-shingle, rare-print
+    and hot-bucket cut. The count is map-side combinable and the
+    left-semi join never widens ``df``; a collect-then-drop of posting
+    lists funnels each hot key into one task (2x slower at sf0.1).
+    Grouped buckets apply the same cap as a size filter
+    (:func:`_bucket_pairs`)."""
+    cool = (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__df"))
+        .filter(F.col("__df") <= cap)
+        .select(*keys)
+    )
+    return df.join(cool, keys, "left_semi")
+
+
+def _equal_key_pairs(df: DataFrame, id_col: str, key: str) -> DataFrame:
+    """(id_a, id_b) with id_a < id_b for every ``key`` value the two
+    rows share: the self-equi-join on a content key (fingerprint,
+    shingle hash, multiset signature). One output row per shared key
+    row, so callers count common keys with a groupBy."""
+    a = df.select(F.col(id_col).alias("id_a"), key)
+    b = df.select(F.col(id_col).alias("id_b"), key)
+    return (
+        a.join(b, key)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+    )
+
+
+def _score_pairs(
+    common: DataFrame, sizes: DataFrame, name: str, score: Column,
+    threshold: float, keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """The pair-score tail: join the per-id ``sizes`` — an (id, size)
+    frame, renamed here to ``__size_a`` / ``__size_b`` — onto both
+    sides of the counted pairs ``common`` (id_a, id_b, …), compute
+    ``score`` over those columns as ``name`` and keep the pairs at or
+    above ``threshold``. Returns (id_a, id_b, *keep, name)."""
+    return (
+        common.join(sizes.toDF("id_a", "__size_a"), "id_a")
+        .join(sizes.toDF("id_b", "__size_b"), "id_b")
+        .withColumn(name, score)
+        .filter(F.col(name) >= threshold)
+        .select("id_a", "id_b", *keep, name)
+    )
+
+
+def _jaccard_scores(common: DataFrame, sizes: DataFrame, threshold: float) -> DataFrame:
+    """Jaccard = common / (|A| + |B| - common) over ``__common`` counts."""
+    c, a, b = F.col("__common"), F.col("__size_a"), F.col("__size_b")
+    return _score_pairs(common, sizes, "jaccard", c / (a + b - c), threshold)
+
+
+def _keys_equal(
+    cands: DataFrame, keys_a: DataFrame, keys_b: DataFrame | None = None,
+    a: str = "id_a", b: str = "id_b",
+) -> DataFrame:
+    """The key-equality verify: keep the candidate pairs (``a``, ``b``)
+    whose two documents carry equal keys. ``keys_a`` is an (id, key)
+    frame for side ``a``; ``keys_b`` (default: the same frame) for side
+    ``b``. Exact for any key whose collisions are accepted (64-bit
+    fingerprints: 2^-64 per pair). Returns (``a``, ``b``)."""
+    keys_b = keys_a if keys_b is None else keys_b
+    return (
+        cands.join(keys_a.toDF(a, "__ka"), a)
+        .join(keys_b.toDF(b, "__kb"), b)
+        .filter(F.col("__ka") == F.col("__kb"))
+        .select(a, b)
+    )
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -59,16 +137,26 @@ def token_shingles(text: Column | str, n: int = 3) -> Column:
     return F.array_distinct(grams)
 
 
+def _shingle_set_key(text: Column) -> Column:
+    """64-bit key of a document's distinct word 3-gram SET (sorted,
+    joined on an unlikely separator, xxhash64), the key the MinHash
+    queries' set-equality verifies compare: set-equal documents get
+    equal keys, and distinct sets collide at the accepted fingerprint
+    risk (2^-64 per pair)."""
+    return F.xxhash64(F.array_join(F.array_sort(token_shingles(text, 3)), "\x1f"))
+
+
 def hashed_shingles(
     df: DataFrame, id_col: str, text_col: str, n: int = 3, out_col: str = "__hs"
 ) -> DataFrame:
     """Shared shingle scan: ``(id_col, out_col: array<bigint>)`` with
-    the xxhash64 of each distinct word n-gram. Both
-    :func:`jaccard_pairs` and :func:`minhash_signatures` accept this
-    via ``hashes_col`` so a pipeline that runs several dedup schemes
-    over one corpus (the verified-companion pattern) tokenizes and
-    shingles the corpus ONCE — persist the result and the second
-    scheme's scan cost drops to reading (id, 8B×shingles) rows."""
+    the xxhash64 of each distinct word n-gram. :func:`jaccard_pairs`
+    builds its index from it, and :func:`minhash_signatures` accepts it
+    via ``hashes_col``, so a pipeline that runs several dedup schemes
+    over one corpus (the verified-companion pattern:
+    ``minhash_verified_dups`` feeds the signatures and the
+    :func:`jaccard_pairs_from_postings` index from one persisted frame)
+    tokenizes and shingles the corpus ONCE."""
     return df.select(
         F.col(id_col),
         F.transform(
@@ -84,7 +172,6 @@ def jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = None,
-    hashes_col: str | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for all pairs sharing >=1 shingle.
 
@@ -120,58 +207,29 @@ def jaccard_pairs(
     # shingle text (distinctness is preserved up to 2^-64 collisions —
     # same rationale as fingerprint dedup; the DuckDB oracle joins on
     # the shingle text and hash-matches).
-    if hashes_col is not None:
-        sh = df.select(
-            F.col(id_col).alias("__id"),
-            F.explode(F.col(hashes_col)).alias("__shingle"),
-        )
-    else:
-        # Persist the COMPACT (id, hash array) frame before exploding:
-        # the df-cut below consumes the exploded rows twice (frequency
-        # aggregate + semi join back), and without this persist each
-        # consumer re-runs the full tokenizer scan — the explode itself
-        # is a narrow re-read of the cached arrays (guide §1.2).
-        hashed = hashed_shingles(
-            df.repartition(F.col(id_col)), id_col, text_col, n
-        ).persist()
-        sh = hashed.select(
-            F.col(id_col).alias("__id"),
-            F.explode("__hs").alias("__shingle"),
-        )
+    # Persist the COMPACT (id, hash array) frame before exploding: the
+    # df-cut below consumes the exploded rows twice (frequency aggregate
+    # + semi join back), and without this persist each consumer re-runs
+    # the full tokenizer scan — the explode itself is a narrow re-read
+    # of the cached arrays (guide §1.2).
+    hashed = hashed_shingles(
+        df.repartition(F.col(id_col)), id_col, text_col, n
+    ).persist()
+    sh = hashed.select(
+        F.col(id_col).alias("__id"), F.explode("__hs").alias("__shingle")
+    )
     if max_shingle_df is not None:
-        rare = (
-            sh.groupBy("__shingle")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") <= max_shingle_df)
-            .select("__shingle")
-        )
-        sh = sh.join(rare, "__shingle", "left_semi")
+        sh = _frequency_cut(sh, ["__shingle"], max_shingle_df)
     # sh feeds sizes + both join sides; persist the compact (id, shingle)
     # index so the tokenizer scan runs once.
     sh = sh.persist()
     sizes = sh.groupBy("__id").agg(F.count(F.lit(1)).alias("__size"))
-
-    a = sh.select(F.col("__id").alias("id_a"), "__shingle")
-    b = sh.select(F.col("__id").alias("id_b"), "__shingle")
     common = (
-        a.join(b, "__shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
+        _equal_key_pairs(sh, "__id", "__shingle")
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("__common"))
     )
-    sa = sizes.select(F.col("__id").alias("id_a"), F.col("__size").alias("__size_a"))
-    sb = sizes.select(F.col("__id").alias("id_b"), F.col("__size").alias("__size_b"))
-    return (
-        common.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("__common")
-            / (F.col("__size_a") + F.col("__size_b") - F.col("__common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_scores(common, sizes, threshold)
 
 
 def jaccard_pairs_from_postings(
@@ -205,19 +263,7 @@ def jaccard_pairs_from_postings(
         )
         .agg(F.count(F.lit(1)).alias("__common"))
     )
-    sa = sizes.select(F.col("__id").alias("id_a"), F.col("__size").alias("__size_a"))
-    sb = sizes.select(F.col("__id").alias("id_b"), F.col("__size").alias("__size_b"))
-    return (
-        common.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("__common")
-            / (F.col("__size_a") + F.col("__size_b") - F.col("__common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_scores(common, sizes, threshold)
 
 
 def minhash_signatures(
@@ -304,13 +350,6 @@ def _collapse_identical_signatures(
     ``(rep_sigs, members)``: the signature rows of the representatives
     only, and the full (``__id``, ``__rep``) membership map.
 
-    Both outputs derive from ONE ``min(id) over (partition by __sk)``
-    window — a single exchange of the signature rows, where the
-    earlier groupBy + membership join + representative semi-join
-    shuffled the signatures twice more (guide §2.4: two operations
-    keyed the same way share one exchange; the shared subtree comes
-    back as a ReusedExchange for the second consumer).
-
     Hot-group exposure (ADVICE r10 #1), accepted knowingly: the window
     buffers each signature group in one task partition that AQE cannot
     split and that has no map-side combine, so a boilerplate signature
@@ -325,18 +364,25 @@ def _collapse_identical_signatures(
     ``min(id)`` per ``__sk`` (two-level aggregation, guide §2.5)
     before this operator instead.
     """
-    from pyspark.sql import Window
+    rep_sigs, members = _collapse_identical(
+        signatures.withColumn("__sk", F.xxhash64(sig_col)), id_col, "__sk"
+    )
+    return rep_sigs.drop("__sk"), members
 
-    marked = signatures.withColumn(
-        "__sk", F.xxhash64(sig_col)
-    ).withColumn(
-        "__rep", F.min(id_col).over(Window.partitionBy("__sk"))
-    )
+
+def _collapse_identical(
+    df: DataFrame, id_col: str, key: str
+) -> tuple[DataFrame, DataFrame]:
+    """The rows of the representatives (min id per ``key``) and the
+    (``__id``, ``__rep``) membership map, both from ONE ``min(id) over
+    (partition by key)`` window: a single exchange, where groupBy +
+    membership join + representative semi-join shuffled twice more
+    (guide §2.4). MinHash keys on the signature's xxhash64, SimHash on
+    the 64-bit signature itself."""
+    marked = df.withColumn("__rep", F.min(id_col).over(W.partitionBy(key)))
     members = marked.select(F.col(id_col).alias("__id"), "__rep")
-    rep_sigs = marked.filter(F.col(id_col) == F.col("__rep")).drop(
-        "__sk", "__rep"
-    )
-    return rep_sigs, members
+    reps = marked.filter(F.col(id_col) == F.col("__rep")).drop("__rep")
+    return reps, members
 
 
 def _expand_identical_pairs(
@@ -391,16 +437,9 @@ def _expand_identical_pairs(
         )
     )
     intra_vals = intra_values or {}
-    combos = F.flatten(
-        F.transform(
-            F.col("__ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("__ids"), i + 2, F.size(F.col("__ids"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    intra = groups.select(F.explode(combos).alias("__p")).select(
+    intra = groups.select(
+        F.explode(_member_combinations("__ids")).alias("__p")
+    ).select(
         F.col("__p.a").alias("id_a"),
         F.col("__p.b").alias("id_b"),
         *[intra_vals[c].alias(c) for c in extra],
@@ -416,10 +455,10 @@ def _banded(
 ) -> DataFrame:
     """Explode representative signatures into (band, bucket) rows — a
     narrow map. The hot-bucket cap is applied downstream where the rows
-    are grouped anyway (:func:`_rep_candidate_pairs` for the one-shot
-    paths; :func:`_drop_hot_buckets` at probe time for the incremental
-    index, whose banding rows are STORED uncapped)."""
-    banded = rep_sigs.select(
+    are grouped anyway (:func:`_bucket_pairs` for the one-shot paths;
+    :func:`_frequency_cut` at probe time for the incremental index,
+    whose banding rows are STORED uncapped)."""
+    return rep_sigs.select(
         F.col(id_col).alias("__id"),
         F.explode(
             F.array(
@@ -445,31 +484,6 @@ def _banded(
             )
         ).alias("__band"),
     ).select("__id", "__band.band", "__band.bucket")
-    return banded
-
-
-def _drop_hot_buckets(
-    df: DataFrame, keys: list[str], cap: int
-) -> DataFrame:
-    """The join-form hot-bucket df-cap: drop every ``keys`` group
-    holding more than ``cap`` member rows (a left-semi against the
-    cool-group keys, so the membership relation never widens). Used by
-    the incremental-index cross-shard probe, whose candidate join has
-    TWO distinct sides (new shard vs old shards) and therefore cannot
-    fold the cap into a single group-and-combine pass. The one-shot
-    MinHash/SimHash self-join paths apply the IDENTICAL cap semantics
-    (member-row count per bucket, keep at ==cap) as a size filter on
-    the grouped bucket inside :func:`_rep_candidate_pairs` /
-    :func:`simhash_dedup_pairs` — one exchange instead of a count
-    aggregate plus a semi-join (guide §2.4). A change to the cap
-    semantics must be applied in both places."""
-    cool = (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__df"))
-        .filter(F.col("__df") <= cap)
-        .select(*keys)
-    )
-    return df.join(cool, keys, "left_semi")
 
 
 def minhash_lsh_candidates(
@@ -509,58 +523,61 @@ def minhash_lsh_candidates(
     """
     rep_sigs, members = _collapse_identical_signatures(signatures, id_col)
     banded = _banded(rep_sigs, id_col, bands, rows_per_band)
-    rep_pairs = _rep_candidate_pairs(banded, max_bucket_df)
+    rep_pairs = _bucket_pairs(banded, ["band", "bucket"], "__id", max_bucket_df)
     if not expand_identical:
         return rep_pairs
     return _expand_identical_pairs(rep_pairs, members)
 
 
-def _member_combinations(ids: Column | str) -> Column:
-    """All index-ordered element pairs of a sorted array as
-    struct<a,b> — C(n,2) structs with a < b, emitted by a JVM
-    higher-order flatten (the same combination explode
-    :func:`_expand_identical_pairs` uses for intra-group pairs)."""
-    ids = F.col(ids) if isinstance(ids, str) else ids
+def _ab_pair(x: Column, y: Column) -> Column:
+    return F.struct(x.alias("a"), y.alias("b"))
+
+
+def _member_combinations(ids: str, pair=_ab_pair) -> Column:
+    """All index-ordered element pairs of a sorted array — C(n,2)
+    ``pair(x, y)`` values (default struct<a,b>) with x before y,
+    emitted by a JVM higher-order flatten. The one combination explode
+    of the family: bucket pairs, posting-list pairs and intra-group
+    pairs."""
+    ids = F.col(ids)
     return F.flatten(
         F.transform(
             ids,
             lambda x, i: F.transform(
-                F.slice(ids, i + 2, F.size(ids)),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
+                F.slice(ids, i + 2, F.size(ids)), lambda y: pair(x, y)
             ),
         )
     )
 
 
-def _rep_candidate_pairs(
-    banded: DataFrame, max_bucket_df: int | None = None
+def _bucket_pairs(
+    rows: DataFrame,
+    keys: list[str],
+    member: Column | str,
+    cap: int | None = None,
+    pair=_ab_pair,
 ) -> DataFrame:
-    """Distinct ordered representative pairs from a banded relation,
-    through ONE exchange of the banding rows: group by (band, bucket)
-    into a sorted member array, drop hot buckets as a size filter on
-    the grouped row (same cap semantics as :func:`_drop_hot_buckets`:
-    member-row count, keep at ==cap), and emit each surviving bucket's
-    C(n,2) member combinations with a JVM higher-order explode —
-    id_a < id_b comes free from the sorted array. The earlier shape
-    (hot-bucket count aggregate + left-semi back + self-equi-join)
-    shuffled the banding rows three times to produce the same pair set
-    (guide §2.4). Distribution properties are unchanged: either shape
-    funnels a (band, bucket) group through one task — the cap bounds
-    the group, and uncapped the old self-join emitted the identical
-    C(n,2) rows from the identical single join key (the group array
-    itself is 8 bytes per member, not a payload). One implementation
-    for the candidate semantics every banding-LSH path shares (a fix
-    to the tie-break/cap applies everywhere at once)."""
-    grouped = banded.groupBy("band", "bucket").agg(
-        F.sort_array(F.collect_list("__id")).alias("__ids")
+    """Distinct pairs of members sharing a bucket, through ONE exchange:
+    group ``rows`` by ``keys`` into a sorted ``member`` array, drop hot
+    buckets as a size filter (the :func:`_frequency_cut` cap:
+    member-row count, kept at ==cap) and explode each bucket's C(n,2)
+    combinations — id order comes free from the sort. ``pair`` builds
+    each combination as a struct whose ``a`` / ``b`` become ``id_a`` /
+    ``id_b``; further fields ride along. A count aggregate + semi-join +
+    self-join shuffled the rows three times for the same pairs (guide
+    §2.4); either shape funnels a bucket through one task. MinHash bands
+    and SimHash chunks share it."""
+    grouped = rows.groupBy(*keys).agg(
+        F.sort_array(F.collect_list(member)).alias("__ids")
     )
     size_ok = F.size("__ids") >= 2
-    if max_bucket_df is not None:
-        size_ok = size_ok & (F.size("__ids") <= max_bucket_df)
+    if cap is not None:
+        size_ok = size_ok & (F.size("__ids") <= cap)
     return (
         grouped.filter(size_ok)
-        .select(F.explode(_member_combinations("__ids")).alias("__p"))
-        .select(F.col("__p.a").alias("id_a"), F.col("__p.b").alias("id_b"))
+        .select(F.explode(_member_combinations("__ids", pair)).alias("__p"))
+        .select("__p.*")
+        .withColumnsRenamed({"a": "id_a", "b": "id_b"})
         .distinct()
     )
 
@@ -599,7 +616,7 @@ def minhash_dedup_pairs(
     sigs = minhash_signatures(df, id_col, text_col, num_hashes, n, seed).persist()
     rep_sigs, members = _collapse_identical_signatures(sigs, id_col)
     banded = _banded(rep_sigs, id_col, bands, rows_per_band)
-    cand = _rep_candidate_pairs(banded, max_bucket_df)
+    cand = _bucket_pairs(banded, ["band", "bucket"], "__id", max_bucket_df)
     sa = rep_sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("__sig_a"))
     sb = rep_sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("__sig_b"))
     matches = F.size(
@@ -675,8 +692,8 @@ def simhash_dedup_pairs(
     Returns (id_a, id_b, hamming).
 
     Degenerate-corpus guard (VERDICT r4 next-step #1): docs with the
-    SAME 64-bit signature collapse to one representative (exact groupBy
-    on the signature — no hashing needed) before the chunk join, then
+    SAME 64-bit signature collapse to one representative (keyed on the
+    signature itself — no hashing needed) before the chunk buckets, then
     re-expand: identical signatures collide in every chunk and have
     hamming 0 (<= any max_hamming), so the expansion provably
     reproduces the uncollapsed pair set while the (chunk, value) join
@@ -686,23 +703,15 @@ def simhash_dedup_pairs(
     chunk bucket is dropped); ``expand_identical=False`` returns
     representative-level pairs only (see
     :func:`minhash_lsh_candidates`)."""
-    # sigs feeds the collapse window and (via reps) both chunk-join
-    # sides — persist so the pandas-UDF signature pass runs once (left
-    # cached after return: the cache rule in ``queries/__init__``). The
-    # collapse is one min-over-window on the exact
-    # signature — a single exchange yielding both the membership map
-    # and the representative rows, same rewrite as
-    # :func:`_collapse_identical_signatures` (guide §2.4).
-    from pyspark.sql import Window
-
+    # sigs feeds the collapse window and (via reps) the chunk buckets —
+    # persist so the pandas-UDF signature pass runs once (left cached
+    # after return: the cache rule in ``queries/__init__``). The
+    # collapse is one min-over-window on the exact signature — a single
+    # exchange yielding both the membership map and the representative
+    # rows (guide §2.4).
     sigs = simhash_signatures(df, id_col, text_col).persist()
-    marked = sigs.withColumn(
-        "__rep", F.min(id_col).over(Window.partitionBy("__sh"))
-    )
-    members = marked.select(F.col(id_col).alias("__id"), F.col("__rep"))
-    sh = marked.filter(F.col(id_col) == F.col("__rep")).select(
-        F.col(id_col).alias("__id"), "__sh"
-    )
+    reps, members = _collapse_identical(sigs, id_col, "__sh")
+    sh = reps.select(F.col(id_col).alias("__id"), "__sh")
     chunk_bits = 64 // chunks
     mask = (1 << chunk_bits) - 1
     chunked = sh.select(
@@ -722,43 +731,24 @@ def simhash_dedup_pairs(
             )
         ).alias("__c"),
     ).select("__id", "__sh", "__c.chunk", "__c.value")
-    # Candidate pairs through ONE exchange of the chunk rows: group by
-    # (chunk, value) into a sorted (id, sig) member array, cap hot
-    # buckets as a size filter (same semantics as the one-shot MinHash
-    # path in _rep_candidate_pairs: member-row count, keep at ==cap),
-    # and emit each bucket's C(n,2) combinations — id_a < id_b comes
-    # free from the array sort (structs order by their first field and
-    # ids are unique). The earlier count-aggregate + semi-join +
-    # self-equi-join shape shuffled the chunk rows three times for the
-    # same pair set (guide §2.4); group distribution is unchanged —
-    # either shape funnels one (chunk, value) bucket through one task.
-    grouped = chunked.groupBy("chunk", "value").agg(
-        F.sort_array(
-            F.collect_list(F.struct("__id", "__sh"))
-        ).alias("__ms")
-    )
-    size_ok = F.size("__ms") >= 2
-    if max_bucket_df is not None:
-        size_ok = size_ok & (F.size("__ms") <= max_bucket_df)
-    combos = F.flatten(
-        F.transform(
-            "__ms",
-            lambda x, i: F.transform(
-                F.slice(F.col("__ms"), i + 2, F.size("__ms")),
-                lambda y: F.struct(
-                    x["__id"].alias("id_a"),
-                    y["__id"].alias("id_b"),
-                    x["__sh"].alias("__sh_a"),
-                    y["__sh"].alias("__sh_b"),
-                ),
+    # Candidate pairs from the (chunk, value) buckets with the MinHash
+    # bands' one-exchange group-and-combine; members are (id, sig)
+    # structs, so id_a < id_b still comes free from the array sort
+    # (structs order by their first field and ids are unique) and each
+    # pair carries both signatures to the verify.
+    verified = (
+        _bucket_pairs(
+            chunked,
+            ["chunk", "value"],
+            F.struct("__id", "__sh"),
+            max_bucket_df,
+            lambda x, y: F.struct(
+                x["__id"].alias("a"),
+                y["__id"].alias("b"),
+                x["__sh"].alias("__sh_a"),
+                y["__sh"].alias("__sh_b"),
             ),
         )
-    )
-    verified = (
-        grouped.filter(size_ok)
-        .select(F.explode(combos).alias("__p"))
-        .select("__p.id_a", "__p.id_b", "__p.__sh_a", "__p.__sh_b")
-        .distinct()
         .withColumn("hamming", F.bit_count(F.col("__sh_a").bitwiseXOR(F.col("__sh_b"))))
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
@@ -901,15 +891,18 @@ def dedup_components(
     candidates (LSH bands, winnowing overlaps), where A~B and B~C do
     not imply an A-C edge.
     """
+    # Symmetrize with a single explode pass rather than a union of two
+    # selects: a union would evaluate the (possibly expensive) `pairs`
+    # lineage once per branch.
+    sym = pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
+                F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst")),
+            )
+        ).alias("__e")
+    ).select("__e.src", "__e.dst")
     if cliques:
-        sym = pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
-                    F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst")),
-                )
-            ).alias("__e")
-        ).select("__e.src", "__e.dst")
         return (
             sym.groupBy(F.col("src").alias("node"))
             .agg(F.min("dst").alias("__nbr0"))
@@ -918,26 +911,7 @@ def dedup_components(
                 F.least(F.col("node"), F.col("__nbr0")).alias("component"),
             )
         )
-    # Symmetrize with a single explode pass rather than a union of two
-    # selects: a union would evaluate the (possibly expensive) `pairs`
-    # lineage once per branch.
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-                    ),
-                    F.struct(
-                        F.col(id_b).alias("src"), F.col(id_a).alias("dst")
-                    ),
-                )
-            ).alias("__e")
-        )
-        .select("__e.src", "__e.dst")
-        .distinct()
-        .persist()
-    )
+    edges = sym.distinct().persist()
     # Round 0 without a join: with every label initialized to its own
     # node id, the first propagation's neighbor-min is just
     # MIN(dst) per src — one groupBy over the symmetric edge set. For
@@ -1102,9 +1076,7 @@ def probe_minhash_index(
         F.col("__id").alias("__rep_old"), "band", "bucket"
     )
     if max_bucket_df is not None:
-        old_side = _drop_hot_buckets(
-            old_side, ["band", "bucket"], max_bucket_df
-        )
+        old_side = _frequency_cut(old_side, ["band", "bucket"], max_bucket_df)
     rep_pairs = (
         new_side.join(old_side, ["band", "bucket"])
         .select("__rep_new", "__rep_old")

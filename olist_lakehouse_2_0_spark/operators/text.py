@@ -1058,8 +1058,8 @@ def winnow_fingerprints(
     window-min lambda and re-evaluated per element (higher-order
     functions don't CSE captured expression trees), making this
     O(len^2) per document. Fine for tests/small columns; the scale path
-    is :func:`winnow_fingerprint_stages`, which materializes each stage
-    as its own projection attribute.
+    is :func:`winnow_prints`, one vectorized pandas-UDF pass per
+    document that emits (doc, fp) rows.
     """
     c = F.col(text) if isinstance(text, str) else text
     if normalized:
@@ -1189,6 +1189,8 @@ def winnow_overlap_pairs(
     :func:`winnow_dup_candidates`, whose cost does not depend on a
     corpus-relative cut at all.
     """
+    from olist_lakehouse_2_0_spark.operators.dedup import _frequency_cut
+
     # Three downstream consumers (df-cut, sizes, self-join) would each
     # recompute the fingerprint scan; persist the compact (doc, fp)
     # index instead — 16 bytes/row regardless of document size. The
@@ -1196,13 +1198,7 @@ def winnow_overlap_pairs(
     # see the cache rule in ``queries/__init__``.
     prints = winnow_prints(df, id_col, text_col, k, window).persist()
     if max_fp_df is not None:
-        rare = (
-            prints.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") <= max_fp_df)
-            .select("fp")
-        )
-        prints = prints.join(rare, "fp")
+        prints = _frequency_cut(prints, ["fp"], max_fp_df)
     return _overlap_pairs_from_prints(prints, min_overlap)
 
 
@@ -1213,26 +1209,24 @@ def _overlap_pairs_from_prints(
     fp, count shared prints per doc pair, keep overlap = shared /
     min(|kept prints|) >= ``min_overlap``. Shared by
     :func:`winnow_overlap_pairs` and tier 1 of
-    :func:`winnow_dup_candidates` so the two can't drift."""
+    :func:`winnow_dup_candidates` so the two can't drift; the join and
+    the score tail are the dedup family's (``_equal_key_pairs``,
+    ``_score_pairs``)."""
+    from olist_lakehouse_2_0_spark.operators.dedup import (
+        _equal_key_pairs,
+        _score_pairs,
+    )
+
     sizes = prints.groupBy("doc").agg(F.count(F.lit(1)).alias("n_fp"))
-    a = prints.alias("a")
-    b = prints.alias("b")
     shared = (
-        a.join(b, "fp")
-        .filter(F.col("a.doc") < F.col("b.doc"))
-        .groupBy(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
+        _equal_key_pairs(prints, "doc", "fp")
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("shared"))
     )
-    sa = sizes.select(F.col("doc").alias("id_a"), F.col("n_fp").alias("n_a"))
-    sb = sizes.select(F.col("doc").alias("id_b"), F.col("n_fp").alias("n_b"))
-    return (
-        shared.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "overlap", F.col("shared") / F.least(F.col("n_a"), F.col("n_b"))
-        )
-        .filter(F.col("overlap") >= min_overlap)
-        .select("id_a", "id_b", "shared", "overlap")
+    return _score_pairs(
+        shared, sizes, "overlap",
+        F.col("shared") / F.least("__size_a", "__size_b"), min_overlap,
+        keep=("shared",),
     )
 
 
@@ -1279,26 +1273,19 @@ def winnow_dup_candidates(
     Persisted print blocks stay cached after return; see the cache
     rule in ``queries/__init__``.
     """
+    from olist_lakehouse_2_0_spark.operators.dedup import (
+        _equal_key_pairs,
+        _frequency_cut,
+    )
+
     prints = winnow_prints(df, id_col, text_col, k, window).persist()
-    fp_df = prints.groupBy("fp").agg(F.count(F.lit(1)).alias("_df"))
-    rare_prints = prints.join(
-        fp_df.filter(F.col("_df") <= max_fp_df).select("fp"), "fp"
-    )
-    tier1 = _overlap_pairs_from_prints(rare_prints, min_overlap).select(
-        "id_a", "id_b"
-    )
+    tier1 = _overlap_pairs_from_prints(
+        _frequency_cut(prints, ["fp"], max_fp_df), min_overlap
+    ).select("id_a", "id_b")
     sig = prints.groupBy("doc").agg(
         F.xxhash64(F.sort_array(F.collect_list("fp"))).alias("__sig")
     )
-    sl = sig.alias("sl")
-    sr = sig.alias("sr")
-    tier2 = (
-        sl.join(sr, "__sig")
-        .filter(F.col("sl.doc") < F.col("sr.doc"))
-        .select(
-            F.col("sl.doc").alias("id_a"), F.col("sr.doc").alias("id_b")
-        )
-    )
+    tier2 = _equal_key_pairs(sig, "doc", "__sig")
     return tier1.unionByName(tier2).distinct()
 
 

@@ -37,7 +37,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from olist_lakehouse_2_0_spark.catalog import Catalog, remember_schema
+from olist_lakehouse_2_0_spark.catalog import Catalog, _fs, remember_schema
 
 #: Serializes parquet APPENDs to a shared event-log directory across
 #: pipelines running in parallel driver threads (run.py's daily
@@ -292,10 +292,7 @@ def _swap_dirs(spark: SparkSession, src: str, dst: str) -> None:
     delete-then-rename sequence had a window with NO table at all:
     a replayed micro-batch would then rebuild the aggregate from that
     batch alone, silently discarding merged history.)"""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-    fs = HPath(dst).getFileSystem(conf)
+    _, HPath, fs = _fs(spark, dst)
     old = HPath(dst + "__old")
     if fs.exists(old):
         fs.delete(old, True)
@@ -310,10 +307,7 @@ def recover_swap(spark: SparkSession, dst: str) -> bool:
     """Restore ``dst`` from ``dst__old`` if a crash mid-:func:`_swap_dirs`
     left the aside copy but no promoted target. Returns True if a
     restore happened. Safe to call unconditionally before reading."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-    fs = HPath(dst).getFileSystem(conf)
+    _, HPath, fs = _fs(spark, dst)
     old = HPath(dst + "__old")
     if fs.exists(old) and not fs.exists(HPath(dst)):
         fs.rename(old, HPath(dst))

@@ -26,6 +26,10 @@ from olist_lakehouse_2_0_spark.catalog import load
 from olist_lakehouse_2_0_spark.localrel import arrow_local_relation
 from olist_lakehouse_2_0_spark.operators import text as ops_text
 from olist_lakehouse_2_0_spark.operators.dedup import (
+    _equal_key_pairs,
+    _frequency_cut,
+    _keys_equal,
+    _shingle_set_key,
     dedup_components,
     embedding_neardup_pairs,
     exact_dedup,
@@ -1208,16 +1212,10 @@ def minhash_verified_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.repartition(F.col("doc_id")), "doc_id", "text", n=3
     ).persist()
     exploded = shingled.select("doc_id", F.explode("__hs").alias("__shingle"))
-    rare = (
-        exploded.groupBy("__shingle")
-        .agg(F.count(F.lit(1)).alias("__df"))
-        .filter(F.col("__df") <= 8)
-        .select("__shingle")
-    )
     # groupBy(doc_id) reuses the repartition(doc_id) partitioning — the
     # per-doc cut arrays come back without an exchange.
     cut = (
-        exploded.join(rare, "__shingle", "left_semi")
+        _frequency_cut(exploded, ["__shingle"], 8)
         .groupBy("doc_id")
         .agg(F.collect_list("__shingle").alias("__hs"))
         .persist()
@@ -1261,6 +1259,12 @@ def minhash_verified_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _fingerprints(docs: DataFrame) -> DataFrame:
+    """(doc_id, normalized-text fingerprint): the key the SimHash and
+    winnowing companions verify their candidates on."""
+    return docs.select("doc_id", ops_text.fingerprint("text").alias("__fp"))
+
+
 def simhash_verified_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash candidates at hamming 0, verified by normalized-text
     fingerprint equality. Token-identical documents produce identical
@@ -1270,15 +1274,7 @@ def simhash_verified_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalized-text-equal pair set the oracle computes."""
     docs = _with_duplicates(load(spark, sf_dir, "documents", spread=True))
     cand = simhash_dedup_pairs(docs, "doc_id", "text", max_hamming=0)
-    fp = docs.select("doc_id", ops_text.fingerprint("text").alias("__fp"))
-    fa = fp.select(F.col("doc_id").alias("id_a"), F.col("__fp").alias("__fp_a"))
-    fb = fp.select(F.col("doc_id").alias("id_b"), F.col("__fp").alias("__fp_b"))
-    return (
-        cand.join(fa, "id_a")
-        .join(fb, "id_b")
-        .filter(F.col("__fp_a") == F.col("__fp_b"))
-        .select("id_a", "id_b")
-    )
+    return _keys_equal(cand, _fingerprints(docs))
 
 
 def winnow_verified_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1300,15 +1296,7 @@ def winnow_verified_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "doc_id", "text", k=8, window=4, min_overlap=0.8,
         max_fp_df=64,
     )
-    fp = docs.select("doc_id", ops_text.fingerprint("text").alias("__fp"))
-    fa = fp.select(F.col("doc_id").alias("id_a"), F.col("__fp").alias("__fp_a"))
-    fb = fp.select(F.col("doc_id").alias("id_b"), F.col("__fp").alias("__fp_b"))
-    return (
-        cand.join(fa, "id_a")
-        .join(fb, "id_b")
-        .filter(F.col("__fp_a") == F.col("__fp_b"))
-        .select("id_a", "id_b")
-    )
+    return _keys_equal(cand, _fingerprints(docs))
 
 
 def embedding_neardup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2334,14 +2322,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     checks the iterative algorithm end-to-end against closed-form SQL."""
     docs = _with_duplicates(load(spark, sf_dir, "documents", spread=True))
     fp = docs.select("doc_id", ops_text.fingerprint("text").alias("fp"))
-    a = fp.select(F.col("doc_id").alias("id_a"), "fp")
-    b = fp.select(F.col("doc_id").alias("id_b"), "fp")
-    pairs = (
-        a.join(b, "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-    return dedup_components(pairs)
+    return dedup_components(_equal_key_pairs(fp, "doc_id", "fp"))
 
 
 DEDUP_CLUSTERS_SQL = r"""
@@ -2691,11 +2672,7 @@ def dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length("text").alias("n_len"),
         ops_text.fingerprint("text").alias("fp"),
     )
-    a = fp.select(F.col("doc_id").alias("id_a"), "fp")
-    b = fp.select(F.col("doc_id").alias("id_b"), "fp")
-    pairs = (
-        a.join(b, "fp").filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
-    )
+    pairs = _equal_key_pairs(fp, "doc_id", "fp")
     members = dedup_components(pairs, cliques=True).join(
         fp.select("doc_id", "n_len"), "doc_id"
     )
@@ -3068,25 +3045,15 @@ def minhash_incremental_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         _MINHASH_INDEX_CACHE[tag] = cat
     cands = probe_minhash_index(spark, cat, new_shard_id=1)
 
-    # Canonical shingle-set fingerprint (sorted distinct 3-gram
-    # shingles joined on an unlikely separator, xxhash64): set-equal
-    # docs get equal keys; the 2^-64 collision risk is the repo's
-    # accepted fingerprint contract. Docs with zero shingles never
-    # enter (signatures drop them; the guard here mirrors that).
-    def keys_of(d: DataFrame, out_id: str) -> DataFrame:
-        sh = token_shingles(F.col("text"), 3)
+    # Shingle-set keys; docs with zero shingles never enter (signatures
+    # drop them; the guard here mirrors that).
+    def keys_of(d: DataFrame) -> DataFrame:
         return d.select(
-            F.col("doc_id").alias(out_id),
-            F.xxhash64(
-                F.array_join(F.array_sort(F.array_distinct(sh)), "\x1f")
-            ).alias(f"__k_{out_id}"),
-        ).filter(F.size(sh) > 0)
+            "doc_id", _shingle_set_key(F.col("text")).alias("__k")
+        ).filter(F.size(token_shingles(F.col("text"), 3)) > 0)
 
-    verified = (
-        cands.join(F.broadcast(keys_of(batch, "id_new")), "id_new")
-        .join(keys_of(docs, "id_old"), "id_old")
-        .filter(F.col("__k_id_new") == F.col("__k_id_old"))
-        .select("id_new", "id_old")
+    verified = _keys_equal(
+        cands, F.broadcast(keys_of(batch)), keys_of(docs), "id_new", "id_old"
     )
     return verified.orderBy("id_new", "id_old")
 
@@ -4247,7 +4214,6 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_dedup,
         minhash_lsh_candidates,
         minhash_signatures,
-        token_shingles,
     )
     from olist_lakehouse_2_0_spark.operators.ranking import (
         distributed_row_number,
@@ -4297,27 +4263,10 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         sigs, "doc_id", max_bucket_df=_CURATION_LSH_BUCKET_CAP
     )
     keys = exact.select(
-        "doc_id",
-        F.xxhash64(
-            F.array_join(
-                F.array_sort(token_shingles(F.col("text"), 3)), "\x1f"
-            )
-        ).alias("__k"),
+        "doc_id", _shingle_set_key(F.col("text")).alias("__k")
     ).persist()
     drop = (
-        cands.join(
-            keys.select(
-                F.col("doc_id").alias("id_a"), F.col("__k").alias("__ka")
-            ),
-            "id_a",
-        )
-        .join(
-            keys.select(
-                F.col("doc_id").alias("id_b"), F.col("__k").alias("__kb")
-            ),
-            "id_b",
-        )
-        .filter(F.col("__ka") == F.col("__kb"))
+        _keys_equal(cands, keys)
         .select(F.col("id_b").alias("doc_id"))
         .distinct()
     )
@@ -4806,13 +4755,24 @@ LLM_QUERIES = {
     # The raw outputs of the approximate operators (minhash_dedup_pairs,
     # simhash_dedup_pairs, text.winnow_overlap_pairs,
     # embedding_neardup_pairs, pruned ivf_topk / ivf_topk_kmeans) have
-    # no DuckDB form, so no registered query returns them. Each operator
-    # is gated through its verified companion below
-    # (minhash_verified_dups, simhash_verified_dups,
-    # winnow_verified_dups, embedding_neardup_verified,
-    # embedding_topk_ivf_exhaustive / _indexed / _indexed_recall,
-    # embedding_topk_ivf_kmeans_exhaustive); pytest bounds the recall of
-    # the pruned configurations.
+    # no DuckDB form, so no registered query returns them. The verified
+    # companions below gate the shared steps those operators are built
+    # from (dedup.py helpers):
+    # - minhash_verified_dups: the frequency cut, minhash_signatures,
+    #   minhash_lsh_candidates (identical-signature collapse, bucket
+    #   pairs, re-expansion) and jaccard_pairs_from_postings (the
+    #   combination explode and the pair-score tail);
+    # - simhash_verified_dups: simhash_dedup_pairs (the same collapse,
+    #   bucket pairs and re-expansion) and the key-equality verify;
+    # - winnow_verified_dups: text.winnow_dup_candidates (the frequency
+    #   cut and the overlap pairs winnow_overlap_pairs returns, i.e. the
+    #   equal-key pair join and the pair-score tail) and the key-equality
+    #   verify;
+    # - embedding_neardup_verified: embedding_neardup_pairs itself;
+    # - embedding_topk_ivf_exhaustive / _indexed / _indexed_recall and
+    #   embedding_topk_ivf_kmeans_exhaustive: the IVF search.
+    # pytest alone gates minhash_dedup_pairs' signature-agreement verify
+    # and bounds the recall of the pruned configurations.
     "minhash_verified_dups": minhash_verified_dups,
     "simhash_verified_dups": simhash_verified_dups,
     "winnow_verified_dups": winnow_verified_dups,

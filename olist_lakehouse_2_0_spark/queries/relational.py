@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from olist_lakehouse_2_0_spark.catalog import load
+from olist_lakehouse_2_0_spark.catalog import _fs, load
 
 MONEY = "decimal(12,2)"  # input cast for exact money arithmetic
 MONEY_SUM = "decimal(18,2)"  # output type for money sums
@@ -1963,9 +1963,7 @@ def delta_partitioned_vacuum_lifecycle(
     # survivor audit: every file a RETAINED version references must
     # still exist on disk; the sweep must have deleted version 0's
     # exclusive files (driver-side metadata walk, O(files))
-    jvm = spark._jvm
-    HPath = jvm.org.apache.hadoop.fs.Path
-    fs = HPath(dest).getFileSystem(spark._jsc.hadoopConfiguration())
+    _, HPath, fs = _fs(spark, dest)
     on_disk = {
         rel for rel, _st, _pv in _walk_hive_parquet(fs, HPath, dest)
     }
@@ -2890,9 +2888,8 @@ def analyze_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # saveAsTable with LOCATION_ALREADY_EXISTS — same hazard and same
     # fix as Catalog.write_bucketed's orphan cleanup.
     wh = spark.conf.get("spark.sql.warehouse.dir")
-    jvm = spark._jvm
-    loc = jvm.org.apache.hadoop.fs.Path(wh, tbl.lower())
-    fs = loc.getFileSystem(spark._jsc.hadoopConfiguration())
+    _, HPath, fs = _fs(spark, wh)
+    loc = HPath(wh, tbl.lower())
     if fs.exists(loc):
         fs.delete(loc, True)
     ev.write.mode("overwrite").saveAsTable(tbl)
