@@ -9,10 +9,12 @@ through it so pipelines never hard-code storage paths.
 
 from __future__ import annotations
 
+import json
 import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: Tables the driver's testdata provides (TESTDATA.md).
 TESTDATA_TABLES = (
@@ -1138,22 +1140,21 @@ def _memo_key(spark: SparkSession, path: str) -> tuple:
     )
 
 
+def written_schema(df: DataFrame) -> StructType:
+    """The schema parquet reports for files written from ``df``:
+    ``df``'s fields, all nullable (nested ones too)."""
+    return StructType.fromJson(json.loads(df._jdf.schema().asNullable().json()))
+
+
 def remember_schema(path: str, df: DataFrame) -> None:
     """Record the schema of the files Spark just wrote from ``df`` under
-    ``path`` — the writer knows it, so a read-back need not infer it.
-    It is what ``spark.read.parquet`` reports: ``df``'s fields, all
-    nullable. Unpartitioned writes only: partition column types come
-    from directory names."""
-    import json
-
-    from pyspark.sql.types import StructType
-
+    ``path`` (:func:`written_schema`) — the writer knows it, so a
+    read-back need not infer it. Unpartitioned writes only: partition
+    column types come from directory names."""
     if os.path.exists(path):
-        spark = df.sparkSession
-        schema = df._jdf.schema().asNullable().json()
-        _SCHEMA_MEMO[_memo_key(spark, path)] = (
+        _SCHEMA_MEMO[_memo_key(df.sparkSession, path)] = (
             _file_versions(path),
-            StructType.fromJson(json.loads(schema)),
+            written_schema(df),
         )
 
 

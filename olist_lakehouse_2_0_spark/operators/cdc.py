@@ -337,14 +337,6 @@ class CdcSink:
     spec: ChangeSpec
     scd_type: int = 1
     _spark_fmt: str = field(default="parquet", repr=False)
-    # Target schema as written by THIS sink's previous batch: batches
-    # after the first read the target back with the explicit schema
-    # instead of paying a per-batch footer-inference probe (guide §6 —
-    # the schema cannot differ from what the sink itself just wrote,
-    # and the swap write is crash-safe so a set value implies a
-    # committed target). A fresh sink (new process / checkpoint
-    # replay) starts at None and takes the guarded inference path.
-    _target_schema: object = field(default=None, repr=False)
 
     @property
     def deletes_path(self) -> str:
@@ -375,7 +367,7 @@ class CdcSink:
         _swap_dirs(spark, tmp, path)
 
     @staticmethod
-    def _read_if_exists(spark, path: str, schema=None) -> DataFrame | None:
+    def _read_if_exists(spark, path: str) -> DataFrame | None:
         """Read ``path`` as parquet, or None when it doesn't exist yet
         (the first micro-batch against a fresh target). An explicit
         Hadoop-FS existence check, NOT an exception-driven probe: the
@@ -383,15 +375,16 @@ class CdcSink:
         stack per missing path per batch, drowning the caller's logs
         (VERDICT r3 next-step #2 — the bench stderr trace).
 
-        ``schema`` (when the caller knows it — the sink caches what it
-        wrote last batch) skips the per-batch footer-inference probe;
-        it is only ever passed for a target this sink committed in
-        this process, where the crash-debris case below cannot apply.
+        The read goes through the catalog's schema memo: every
+        committed write records its schema (``remember_schema``), so a
+        target this sink wrote reads back without a footer-inference
+        job.
 
-        The inference read stays guarded: a crash during the FIRST
-        write (target was None, so no rename-aside protected it) can
-        leave the directory holding only an uncommitted ``_temporary/``
-        subtree. ``fs.exists`` is then True but the read raises
+        The inference read on a memo miss stays guarded: a crash during
+        the FIRST write (target was None, so no rename-aside protected
+        it) can leave the directory holding only an uncommitted
+        ``_temporary/`` subtree. Its file versions match no recorded
+        entry, ``fs.exists`` is True, and inference raises
         ``AnalysisException: Unable to infer schema`` — without the
         guard the checkpoint replay of batch 0 would fail identically
         forever (a permanent wedge). Treating that layout as "no
@@ -400,22 +393,18 @@ class CdcSink:
         clears the debris."""
         from pyspark.errors import AnalysisException
 
-        from olist_lakehouse_2_0_spark.catalog import _fs
+        from olist_lakehouse_2_0_spark.catalog import _fs, read_parquet
 
         _, HPath, fs = _fs(spark, path)
-        hpath = HPath(path)
-        if not fs.exists(hpath):
+        if not fs.exists(HPath(path)):
             return None
-        if schema is not None:
-            return spark.read.schema(schema).parquet(path)
         try:
-            df = spark.read.parquet(path)
-            df.schema  # force schema inference now, not at first action
+            return read_parquet(spark, path)
         except AnalysisException:
             return None
-        return df
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        from olist_lakehouse_2_0_spark.catalog import remember_schema
         from olist_lakehouse_2_0_spark.plans.pipeline import recover_swap
 
         spark = batch_df.sparkSession
@@ -427,7 +416,7 @@ class CdcSink:
         # tombstone (and resurrecting orphan-deleted keys). No-op — one
         # fs.exists — on every normal path.
         recover_swap(spark, self.deletes_path)
-        target = self._read_if_exists(spark, self.path, self._target_schema)
+        target = self._read_if_exists(spark, self.path)
         batch_deletes = batch_df.filter(self.spec.is_delete()).select(
             *self.spec.keys, self.spec.seq_expr().alias("__seq")
         )
@@ -456,4 +445,4 @@ class CdcSink:
             out.write.mode("overwrite").parquet(self.path)
         else:
             self._swap_write(out, self.path, f"batch{batch_id}")
-        self._target_schema = out.schema
+        remember_schema(self.path, out)

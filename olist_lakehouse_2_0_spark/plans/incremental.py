@@ -38,6 +38,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from olist_lakehouse_2_0_spark.catalog import read_parquet, remember_schema
+
 _KINDS = ("sum", "count", "min", "max", "approx_distinct")
 
 
@@ -89,7 +91,8 @@ class IncrementalAggTable:
     """A keyed aggregate table maintained by merging batch partials.
 
     Storage is a parquet directory written via staging + atomic-enough
-    rename (same promotion path as the pipeline's MV writes)."""
+    rename (same promotion path as the pipeline's MV writes); each
+    commit records its schema, so reads skip footer inference."""
 
     def __init__(self, path: str, keys: list[str], specs: list[AggSpec]):
         names = [s.name for s in specs]
@@ -133,14 +136,17 @@ class IncrementalAggTable:
         aside, then staging in); a crash between them is healed by
         ``recover_swap`` below before the table is read — no window
         discards merged history."""
-        from olist_lakehouse_2_0_spark.plans.pipeline import recover_swap
+        from olist_lakehouse_2_0_spark.plans.pipeline import (
+            _swap_dirs,
+            recover_swap,
+        )
 
         recover_swap(spark, self.path)
         partial = batch.groupBy(*self.keys).agg(
             *[s.partial() for s in self.specs]
         )
         if self._exists():
-            stored = spark.read.parquet(self.path)
+            stored = read_parquet(spark, self.path)
             # Cast the fresh partials to the stored state types: SUM
             # over DECIMAL widens precision per aggregation, and the
             # stored schema must stay fixed across arbitrarily many
@@ -167,9 +173,8 @@ class IncrementalAggTable:
         if batch_id is not None:
             with open(os.path.join(staging, "_last_batch"), "w") as f:
                 f.write(str(batch_id))
-        from olist_lakehouse_2_0_spark.plans.pipeline import _swap_dirs
-
         _swap_dirs(spark, staging, self.path)
+        remember_schema(self.path, merged)
 
     def foreach_batch_merger(self, spark: SparkSession):
         """``writeStream.foreachBatch`` sink that merges each
@@ -192,7 +197,7 @@ class IncrementalAggTable:
         from olist_lakehouse_2_0_spark.plans.pipeline import recover_swap
 
         recover_swap(spark, self.path)
-        return spark.read.parquet(self.path)
+        return read_parquet(spark, self.path)
 
     def read_final(self, spark: SparkSession) -> DataFrame:
         """Reader-facing view: sketch states estimated to counts."""

@@ -37,7 +37,12 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from olist_lakehouse_2_0_spark.catalog import Catalog, _fs, remember_schema
+from olist_lakehouse_2_0_spark.catalog import (
+    Catalog,
+    _fs,
+    read_parquet,
+    remember_schema,
+)
 
 #: Serializes parquet APPENDs to a shared event-log directory across
 #: pipelines running in parallel driver threads (run.py's daily
@@ -186,7 +191,7 @@ class Pipeline:
                         # incremental read of the upstream table with
                         # this node's own checkpoint tracking progress.
                         path = self.catalog.path_for(dep, dep_layer)
-                        schema = spark.read.parquet(path).schema
+                        schema = read_parquet(spark, path).schema
                         ins[dep] = spark.readStream.schema(schema).parquet(path)
                     else:
                         ins[dep] = self.catalog.read(spark, dep, dep_layer)

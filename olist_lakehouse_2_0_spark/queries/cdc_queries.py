@@ -10,28 +10,20 @@ oracles express the same semantics with window functions.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from olist_lakehouse_2_0_spark.catalog import load
+from olist_lakehouse_2_0_spark.catalog import load, read_parquet
 from olist_lakehouse_2_0_spark.operators.cdc import (
+    CdcSink,
     ChangeSpec,
     scd1_snapshot,
     scd2_history,
 )
-
-
-def _landing_schema(feed: DataFrame) -> T.StructType:
-    """The staged landing files' read schema, derived from the frame
-    that wrote them instead of a per-query footer-inference probe
-    (guide §6): parquet read-back schemas are the written columns with
-    every field nullable, so normalize nullability explicitly — the
-    probe (`spark.read.parquet(landing).schema`) returned exactly
-    this."""
-    return T.StructType(
-        [T.StructField(f.name, f.dataType, True) for f in feed.schema.fields]
-    )
+from olist_lakehouse_2_0_spark.staging import staging_dir
+from olist_lakehouse_2_0_spark.streaming.ingest import land, run_foreach_batch
 
 
 EVENT_SPEC = ChangeSpec(
@@ -43,8 +35,10 @@ EVENT_SPEC = ChangeSpec(
 )
 
 
-def _as_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load(spark, sf_dir, "events", spread=True)
+def _as_change_feed(
+    spark: SparkSession, sf_dir: str, spread: bool = True
+) -> DataFrame:
+    events = load(spark, sf_dir, "events", spread=spread)
     op = (
         F.when(F.col("event_type") == "signup", "INSERT")
         .when(F.col("event_type") == "error", "DELETE")
@@ -53,11 +47,23 @@ def _as_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events.withColumn("__op", op)
 
 
-def scd1_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD Type 1: latest state per user; a trailing 'error' removes the
-    user (C2, reference cdc_customers_silver.sql:54-61)."""
-    feed = _as_change_feed(spark, sf_dir)
-    snap = scd1_snapshot(feed, EVENT_SPEC)
+def _staged_change_feed(
+    spark: SparkSession, sf_dir: str, tag: str, files: int
+) -> tuple[str, DataFrame]:
+    """The change feed landed round-robin as ``files`` parquet files
+    under a fresh staging root, and the stream that replays them one
+    file per micro-batch: each batch carries an arbitrary slice of
+    every user's history, so events arrive out of sequence order.
+    The scan is not spread first: the landing's own repartition is
+    the one shuffle. Returns (root, stream)."""
+    feed = _as_change_feed(spark, sf_dir, spread=False).select(
+        "user_id", "event_id", "ts", "event_type", "value", "props", "__op"
+    )
+    root = staging_dir(tag)
+    return root, land(feed, root, files)
+
+
+def _scd1_out(snap: DataFrame) -> DataFrame:
     # __seq == event_id for single-column sequences; surface it as a
     # normal column for the oracle comparison.
     return snap.select(
@@ -67,6 +73,25 @@ def scd1_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("last_event_type"),
         "value",
     )
+
+
+def _scd2_out(hist: DataFrame) -> DataFrame:
+    return hist.select(
+        "user_id",
+        F.col("ts").alias("change_ts"),
+        F.col("event_type"),
+        "value",
+        F.col("__start_at").alias("start_at"),
+        F.col("__end_at").alias("end_at"),
+        F.col("__is_current").alias("is_current"),
+    )
+
+
+def scd1_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SCD Type 1: latest state per user; a trailing 'error' removes the
+    user (C2, reference cdc_customers_silver.sql:54-61)."""
+    feed = _as_change_feed(spark, sf_dir)
+    return _scd1_out(scd1_snapshot(feed, EVENT_SPEC))
 
 
 SCD1_USERS_SQL = """
@@ -95,16 +120,7 @@ def scd2_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     __is_current; deletes close the open version (C3/C5, reference
     cdc_customers_silver.sql:78-85, docs/CDC_GUIDE.md:250-258)."""
     feed = _as_change_feed(spark, sf_dir)
-    hist = scd2_history(feed, EVENT_SPEC)
-    return hist.select(
-        "user_id",
-        F.col("ts").alias("change_ts"),
-        F.col("event_type"),
-        "value",
-        F.col("__start_at").alias("start_at"),
-        F.col("__end_at").alias("end_at"),
-        F.col("__is_current").alias("is_current"),
-    )
+    return _scd2_out(scd2_history(feed, EVENT_SPEC))
 
 
 SCD2_USERS_SQL = """
@@ -140,40 +156,11 @@ def scd2_users_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (C5), and multi-batch merge idempotence are all inside the hash
     check. (``scd2_users`` verifies the one-shot batch path; this one
     verifies the streaming merge.)"""
-    import os
-
-    from olist_lakehouse_2_0_spark.operators.cdc import CdcSink
-    from olist_lakehouse_2_0_spark.staging import staging_dir
-    from olist_lakehouse_2_0_spark.streaming.ingest import run_foreach_batch
-
-    feed = _as_change_feed(spark, sf_dir).select(
-        "user_id", "event_id", "ts", "event_type", "value", "props", "__op"
-    )
-    root = staging_dir("scd2_inc")
-    landing = os.path.join(root, "landing")
-    # Hash-split into 3 files: each micro-batch carries an arbitrary
-    # slice of every user's history (out-of-order arrival guaranteed).
-    feed.repartition(3).write.parquet(landing)
-
-    stream = (
-        spark.readStream.schema(_landing_schema(feed))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
+    root, stream = _staged_change_feed(spark, sf_dir, "scd2_inc", files=3)
     target = os.path.join(root, "scd2")
     sink = CdcSink(target, EVENT_SPEC, scd_type=2)
     run_foreach_batch(stream, sink, os.path.join(root, "ckpt"))
-
-    hist = spark.read.parquet(target)
-    return hist.select(
-        "user_id",
-        F.col("ts").alias("change_ts"),
-        F.col("event_type"),
-        "value",
-        F.col("__start_at").alias("start_at"),
-        F.col("__end_at").alias("end_at"),
-        F.col("__is_current").alias("is_current"),
-    )
+    return _scd2_out(read_parquet(spark, target))
 
 
 def scd1_users_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -182,36 +169,11 @@ def scd1_users_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`scd2_users_incremental`, applied through ``CdcSink``
     (scd_type=1) with the delete-tombstone sidecar; the final snapshot
     must equal the in-order batch rebuild the oracle computes."""
-    import os
-
-    from olist_lakehouse_2_0_spark.operators.cdc import CdcSink
-    from olist_lakehouse_2_0_spark.staging import staging_dir
-    from olist_lakehouse_2_0_spark.streaming.ingest import run_foreach_batch
-
-    feed = _as_change_feed(spark, sf_dir).select(
-        "user_id", "event_id", "ts", "event_type", "value", "props", "__op"
-    )
-    root = staging_dir("scd1_inc")
-    landing = os.path.join(root, "landing")
-    feed.repartition(3).write.parquet(landing)
-
-    stream = (
-        spark.readStream.schema(_landing_schema(feed))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
+    root, stream = _staged_change_feed(spark, sf_dir, "scd1_inc", files=3)
     target = os.path.join(root, "scd1")
     sink = CdcSink(target, EVENT_SPEC, scd_type=1)
     run_foreach_batch(stream, sink, os.path.join(root, "ckpt"))
-
-    snap = spark.read.parquet(target)
-    return snap.select(
-        "user_id",
-        F.col("__seq").alias("last_event_id"),
-        F.col("ts").alias("last_change_ts"),
-        F.col("event_type").alias("last_event_type"),
-        "value",
-    )
+    return _scd1_out(read_parquet(spark, target))
 
 
 #: C6 spec: only event_type is TRACKED — ts/value changes alone do not
@@ -236,16 +198,7 @@ def scd2_track_history_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries exactly. (pytest covers the operator in isolation; this
     puts the suppressed-version history itself under the hash gate.)"""
     feed = _as_change_feed(spark, sf_dir)
-    hist = scd2_history(feed, TRACK_SUBSET_SPEC)
-    return hist.select(
-        "user_id",
-        F.col("ts").alias("change_ts"),
-        F.col("event_type"),
-        "value",
-        F.col("__start_at").alias("start_at"),
-        F.col("__end_at").alias("end_at"),
-        F.col("__is_current").alias("is_current"),
-    )
+    return _scd2_out(scd2_history(feed, TRACK_SUBSET_SPEC))
 
 
 SCD2_TRACK_HISTORY_SUBSET_SQL = """
@@ -291,30 +244,13 @@ def cdc_fanout_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership, sequence, and value (``consistent`` true everywhere),
     and the oracle recomputes the same join from the in-order rebuild,
     so divergence between the two fan-out legs fails the hash."""
-    import os
-
-    from olist_lakehouse_2_0_spark.operators.cdc import CdcSink
-    from olist_lakehouse_2_0_spark.staging import staging_dir
-    from olist_lakehouse_2_0_spark.streaming.ingest import run_foreach_batch
-
-    feed = _as_change_feed(spark, sf_dir).select(
-        "user_id", "event_id", "ts", "event_type", "value", "props", "__op"
-    )
-    root = staging_dir("cdc_fanout")
-    landing = os.path.join(root, "landing")
     # TWO hash-split files -> two micro-batches: still a genuine
     # multi-batch drain with every user's history scattered out of
     # order across batches (the C7 semantics under test), at 4 target
     # applies instead of 6 — this query's warm floor was 2x the next
     # slowest and the third batch re-proved nothing the second didn't
     # (scd2_users_incremental keeps the 3-batch shape for C4 depth).
-    feed.repartition(2).write.parquet(landing)
-
-    stream = (
-        spark.readStream.schema(_landing_schema(feed))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
+    root, stream = _staged_change_feed(spark, sf_dir, "cdc_fanout", files=2)
     scd1_sink = CdcSink(os.path.join(root, "scd1"), EVENT_SPEC, scd_type=1)
     scd2_sink = CdcSink(os.path.join(root, "scd2"), EVENT_SPEC, scd_type=2)
 
@@ -324,13 +260,13 @@ def cdc_fanout_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     run_foreach_batch(stream, fanout, os.path.join(root, "ckpt"))
 
-    snap = spark.read.parquet(os.path.join(root, "scd1")).select(
+    snap = read_parquet(spark, os.path.join(root, "scd1")).select(
         "user_id",
         F.col("__seq").alias("snap_seq"),
         F.col("value").alias("snap_value"),
     )
     cur = (
-        spark.read.parquet(os.path.join(root, "scd2"))
+        read_parquet(spark, os.path.join(root, "scd2"))
         .filter(F.col("__is_current"))
         .select(
             "user_id",

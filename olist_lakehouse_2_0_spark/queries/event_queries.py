@@ -18,10 +18,20 @@ driver.
 
 from __future__ import annotations
 
+import os
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from olist_lakehouse_2_0_spark.catalog import load
+from olist_lakehouse_2_0_spark.staging import staging_dir
+from olist_lakehouse_2_0_spark.streaming.ingest import (
+    land,
+    read_csv_stream,
+    run_foreach_batch,
+    run_to_parquet,
+)
 from olist_lakehouse_2_0_spark.streaming.windows import (
     extract_json_props,
     sessionize,
@@ -127,12 +137,6 @@ def events_streaming_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     machinery fails the hash. State is watermark-bounded (the 100 TB
     property); the drain sizes its state-store partition count from
     its backlog (``streaming.ingest._drain``)."""
-    import os
-
-    from olist_lakehouse_2_0_spark.staging import staging_dir
-    from olist_lakehouse_2_0_spark.streaming.ingest import run_to_parquet
-    from olist_lakehouse_2_0_spark.streaming.windows import sessionize
-
     feed = (
         load(spark, sf_dir, "events", spread=True)
         .filter(F.col("ts").isNotNull())
@@ -144,13 +148,11 @@ def events_streaming_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.0).alias("value"),
     )
     root = staging_dir("stream_sessions")
-    landing = os.path.join(root, "landing")
-    feed.unionByName(flush).write.parquet(landing)
-    stream = spark.readStream.schema(feed.schema).parquet(landing)
+    stream = land(feed.unionByName(flush), root)
     sessions = sessionize(stream.withWatermark("ts", "30 minutes"))
-    out = os.path.join(root, "sessions")
-    run_to_parquet(sessions, out, os.path.join(root, "ckpt"))
-    back = spark.read.schema(sessions.schema).parquet(out)
+    back = run_to_parquet(
+        sessions, os.path.join(root, "sessions"), os.path.join(root, "ckpt")
+    )
     return back.filter(F.col("user_id") >= 0).orderBy(
         "user_id", "session_start"
     )
@@ -322,6 +324,51 @@ WHERE c.event_type = 'click' AND e.event_type = 'error'
 """
 
 
+def _click_error_feeds(
+    spark: SparkSession, sf_dir: str, root: str
+) -> tuple[str, str, Callable[[], tuple[DataFrame, DataFrame]]]:
+    """Stage the click and error feeds of the stream-stream joins under
+    ``root`` and return (click dir, error dir, ``feeds``), where
+    ``feeds()`` opens a fresh (click, error) stream pair over them; the
+    error side is renamed to (user_id, error_event_id, error_ts).
+
+    ONE staging write for both feeds: a single partitionBy(event_type)
+    write scans the events once and lands each feed in its own
+    directory (two filtered writes would scan twice, guide §1.2). The
+    partition column lives in the directory name, so the staged files
+    carry exactly the columns each stream declares."""
+    events = load(spark, sf_dir, "events", spread=True).filter(
+        F.col("ts").isNotNull()
+        & F.col("event_type").isin("click", "error")
+    )
+    staged = os.path.join(root, "staged")
+    events.select("event_id", "user_id", "ts", "event_type").write.partitionBy(
+        "event_type"
+    ).parquet(staged)
+    c_path = os.path.join(staged, "event_type=click")
+    e_path = os.path.join(staged, "event_type=error")
+    # A partition with zero rows writes NO directory — make both dirs
+    # so the stream readers start cleanly at any scale factor.
+    os.makedirs(c_path, exist_ok=True)
+    os.makedirs(e_path, exist_ok=True)
+    feed_schema = events.select("event_id", "user_id", "ts").schema
+
+    def feeds() -> tuple[DataFrame, DataFrame]:
+        c_stream = spark.readStream.schema(feed_schema).parquet(c_path)
+        e_stream = (
+            spark.readStream.schema(feed_schema)
+            .parquet(e_path)
+            .select(
+                "user_id",
+                F.col("event_id").alias("error_event_id"),
+                F.col("ts").alias("error_ts"),
+            )
+        )
+        return c_stream, e_stream
+
+    return c_path, e_path, feeds
+
+
 def events_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join under the hash gate (previously
     pytest-only): the click and error feeds are staged as two separate
@@ -337,57 +384,18 @@ def events_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch equivalence is exact; cross-micro-batch buffering and
     watermark eviction are exercised in tests/test_streaming_join.py.
     """
-    import os
-
-    from olist_lakehouse_2_0_spark.staging import staging_dir
-    from olist_lakehouse_2_0_spark.streaming.ingest import run_to_parquet
     from olist_lakehouse_2_0_spark.streaming.joins import stream_interval_join
 
-    # ONE staging write for both feeds: the click and error slices
-    # used to be two filtered writes, each re-scanning the events
-    # parquet (guide §1.2 — don't scan twice); a single
-    # partitionBy(event_type) write scans once and lands each feed in
-    # its own directory, which the two streams then read separately.
-    # The partition column lives in the directory name, so the staged
-    # files carry exactly the columns each stream declares.
-    events = load(spark, sf_dir, "events", spread=True).filter(
-        F.col("ts").isNotNull()
-        & F.col("event_type").isin("click", "error")
-    )
     root = staging_dir("ss_join")
-    staged = os.path.join(root, "staged")
-    events.select("event_id", "user_id", "ts", "event_type").write.partitionBy(
-        "event_type"
-    ).parquet(staged)
-    c_path = os.path.join(staged, "event_type=click")
-    e_path = os.path.join(staged, "event_type=error")
-    # A partition with zero rows writes NO directory (unlike the old
-    # per-side writes, which always created one) — make both dirs so
-    # the stream readers start cleanly at any scale factor.
-    os.makedirs(c_path, exist_ok=True)
-    os.makedirs(e_path, exist_ok=True)
-    feed_schema = events.select("event_id", "user_id", "ts").schema
-    c_stream = spark.readStream.schema(feed_schema).parquet(c_path)
-    e_stream = (
-        spark.readStream.schema(feed_schema)
-        .parquet(e_path)
-        .select(
-            "user_id",
-            F.col("event_id").alias("error_event_id"),
-            F.col("ts").alias("error_ts"),
-        )
-    )
+    _, _, feeds = _click_error_feeds(spark, sf_dir, root)
     joined = stream_interval_join(
-        c_stream, e_stream, key="user_id", left_ts="ts",
+        *feeds(), key="user_id", left_ts="ts",
         right_ts="error_ts", upper_seconds=300,
     )
-    out = os.path.join(root, "pairs")
-    run_to_parquet(joined, out, os.path.join(root, "ckpt"))
-    # Explicit schema: a zero-pair drain leaves no data files to infer
-    # from (possible at tiny scale factors).
-    return spark.read.schema(joined.schema).parquet(out).select(
-        "event_id", "user_id", "ts", "error_event_id", "error_ts"
+    back = run_to_parquet(
+        joined, os.path.join(root, "pairs"), os.path.join(root, "ckpt")
     )
+    return back.select("event_id", "user_id", "ts", "error_event_id", "error_ts")
 
 
 EVENTS_STREAM_STREAM_JOIN_SQL = """
@@ -419,50 +427,18 @@ def events_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFram
     batch LEFT JOIN, so a null row dropped (eviction missed), emitted
     twice (replayed across drains), or emitted for a matched click all
     fail the hash."""
-    import os
-
-    from olist_lakehouse_2_0_spark.staging import staging_dir
-    from olist_lakehouse_2_0_spark.streaming.ingest import run_to_parquet
     from olist_lakehouse_2_0_spark.streaming.joins import stream_interval_join
 
-    # ONE staging write for both feeds (same single-scan
-    # partitionBy(event_type) staging as the inner twin above — guide
-    # §1.2; the drain semantics below are untouched).
-    events = load(spark, sf_dir, "events", spread=True).filter(
-        F.col("ts").isNotNull()
-        & F.col("event_type").isin("click", "error")
-    )
     root = staging_dir("ss_left_join")
-    staged = os.path.join(root, "staged")
-    events.select("event_id", "user_id", "ts", "event_type").write.partitionBy(
-        "event_type"
-    ).parquet(staged)
-    c_path = os.path.join(staged, "event_type=click")
-    e_path = os.path.join(staged, "event_type=error")
-    # A partition with zero rows writes NO directory (unlike the old
-    # per-side writes, which always created one) — make both dirs so
-    # the stream readers start cleanly at any scale factor.
-    os.makedirs(c_path, exist_ok=True)
-    os.makedirs(e_path, exist_ok=True)
-    feed_schema = events.select("event_id", "user_id", "ts").schema
+    c_path, e_path, feeds = _click_error_feeds(spark, sf_dir, root)
     out, ckpt = os.path.join(root, "pairs"), os.path.join(root, "ckpt")
 
-    def drain() -> None:
-        c_stream = spark.readStream.schema(feed_schema).parquet(c_path)
-        e_stream = (
-            spark.readStream.schema(feed_schema)
-            .parquet(e_path)
-            .select(
-                "user_id",
-                F.col("event_id").alias("error_event_id"),
-                F.col("ts").alias("error_ts"),
-            )
-        )
+    def drain() -> DataFrame:
         joined = stream_interval_join(
-            c_stream, e_stream, key="user_id", left_ts="ts",
+            *feeds(), key="user_id", left_ts="ts",
             right_ts="error_ts", upper_seconds=300, how="leftOuter",
         )
-        run_to_parquet(joined, out, ckpt)
+        return run_to_parquet(joined, out, ckpt)
 
     drain()  # data batch: matches emit, unmatched clicks stay buffered
     # Far-future sentinel on BOTH feeds: the second drain's watermark
@@ -480,17 +456,9 @@ def events_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFram
     )
     sentinel.write.mode("append").parquet(c_path)
     sentinel.write.mode("append").parquet(e_path)
-    drain()  # sentinel batch: watermark jumps, null-matches emit
-
-    schema = (
-        "event_id long, user_id long, ts timestamp,"
-        " error_event_id long, error_ts timestamp"
-    )
-    return (
-        spark.read.schema(schema)
-        .parquet(out)
-        .filter(F.col("event_id") >= 0)
-        .select("event_id", "user_id", "ts", "error_event_id", "error_ts")
+    back = drain()  # sentinel batch: watermark jumps, null-matches emit
+    return back.filter(F.col("event_id") >= 0).select(
+        "event_id", "user_id", "ts", "error_event_id", "error_ts"
     )
 
 
@@ -521,10 +489,6 @@ def events_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow batch so no duplicate can arrive past the watermark
     horizon; horizon eviction itself is pinned in
     tests/test_streaming_windows.py."""
-    import os
-
-    from olist_lakehouse_2_0_spark.staging import staging_dir
-    from olist_lakehouse_2_0_spark.streaming.ingest import run_to_parquet
     from olist_lakehouse_2_0_spark.streaming.windows import dedupe_stream
 
     events = (
@@ -534,13 +498,12 @@ def events_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     redelivered = events.unionByName(events.filter(F.col("event_id") % 7 == 0))
     root = staging_dir("stream_dedup")
-    landing = os.path.join(root, "landing")
-    redelivered.write.parquet(landing)
-    stream = spark.readStream.schema(events.schema).parquet(landing)
-    deduped = dedupe_stream(stream, keys=("event_id",), ts_col="ts")
-    out = os.path.join(root, "deduped")
-    run_to_parquet(deduped, out, os.path.join(root, "ckpt"))
-    back = spark.read.schema(deduped.schema).parquet(out)
+    deduped = dedupe_stream(
+        land(redelivered, root), keys=("event_id",), ts_col="ts"
+    )
+    back = run_to_parquet(
+        deduped, os.path.join(root, "deduped"), os.path.join(root, "ckpt")
+    )
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum("event_id").alias("sum_event_id"),
@@ -572,10 +535,6 @@ def events_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-join "misses kept as NULL attributes" contract is
     load-bearing in the hash, not just asserted in tests. Stateless
     per-batch join, so the drain keeps no state."""
-    import os
-
-    from olist_lakehouse_2_0_spark.staging import staging_dir
-    from olist_lakehouse_2_0_spark.streaming.ingest import run_to_parquet
     from olist_lakehouse_2_0_spark.streaming.joins import stream_static_enrich
 
     events = load(spark, sf_dir, "events", spread=True).select(
@@ -587,13 +546,12 @@ def events_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("c_custkey", "c_mktsegment")
     )
     root = staging_dir("stream_enrich")
-    landing = os.path.join(root, "landing")
-    events.write.parquet(landing)
-    stream = spark.readStream.schema(events.schema).parquet(landing)
-    enriched = stream_static_enrich(stream, dim, key="c_custkey", how="left")
-    out = os.path.join(root, "enriched")
-    run_to_parquet(enriched, out, os.path.join(root, "ckpt"))
-    back = spark.read.schema(enriched.schema).parquet(out)
+    enriched = stream_static_enrich(
+        land(events, root), dim, key="c_custkey", how="left"
+    )
+    back = run_to_parquet(
+        enriched, os.path.join(root, "enriched"), os.path.join(root, "ckpt")
+    )
     return back.groupBy(
         F.coalesce(F.col("c_mktsegment"), F.lit("<miss>")).alias("segment"),
         "event_type",
@@ -937,21 +895,16 @@ def events_gold_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-shot SQL aggregate bit-for-bit, proving the merge path end to
     end inside the correctness gate. Decimal measures make the sums
     merge-order-exact."""
-    import os
-
     from olist_lakehouse_2_0_spark.plans.incremental import (
         AggSpec,
         IncrementalAggTable,
     )
-    from olist_lakehouse_2_0_spark.staging import staging_dir
-    from olist_lakehouse_2_0_spark.streaming.ingest import run_foreach_batch
 
     events = load(spark, sf_dir, "events").select(
         "event_type", F.col("value").cast("decimal(12,2)").alias("value")
     )
     root = staging_dir("gold_inc")
-    landing = os.path.join(root, "landing")
-    events.repartition(3).write.parquet(landing)
+    stream = land(events, root, files=3)
 
     specs = [
         AggSpec("count", "*", "n_events"),
@@ -961,11 +914,6 @@ def events_gold_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     table = IncrementalAggTable(
         os.path.join(root, "gold"), keys=["event_type"], specs=specs
-    )
-    stream = (
-        spark.readStream.schema(spark.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
     )
     run_foreach_batch(
         stream, table.foreach_batch_merger(spark), os.path.join(root, "ckpt")
@@ -996,15 +944,7 @@ def events_csv_ingest_exactly_once(spark: SparkSession, sf_dir: str) -> DataFram
     semantics in one query. Values quantize to integer cents (the CSV
     double roundtrip is exact — Spark writes shortest-roundtrip
     decimal strings — and integer sums are order-independent)."""
-    import os
-
     from pyspark.sql import types as T
-
-    from olist_lakehouse_2_0_spark.staging import staging_dir
-    from olist_lakehouse_2_0_spark.streaming.ingest import (
-        read_csv_stream,
-        run_to_parquet,
-    )
 
     events = load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
@@ -1027,8 +967,7 @@ def events_csv_ingest_exactly_once(spark: SparkSession, sf_dir: str) -> DataFram
         stream = read_csv_stream(
             spark, landing, schema, audit=False, max_files_per_trigger=1
         )
-        run_to_parquet(stream, target, ckpt)
-    ingested = spark.read.parquet(target)
+        ingested = run_to_parquet(stream, target, ckpt)
     return ingested.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)))
@@ -1058,12 +997,9 @@ def csv_audit_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     scrambles the whole grouping and fails the hash. ``audit_ok``
     additionally pins the audit timestamps' invariants (file mtime and
     ingest stamp present, mtime not after ingest)."""
-    import os
-
     from pyspark.sql import types as T
 
     from olist_lakehouse_2_0_spark.sources.batch import read_csv
-    from olist_lakehouse_2_0_spark.staging import staging_dir
 
     # A deterministic 1-in-5 subset: the audit-column semantics under
     # test are per-FILE metadata, not volume — staging the full table
@@ -1143,15 +1079,12 @@ def events_stream_table_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     events — so a dropped, duplicated, or un-cleansed row anywhere in
     the table-to-table hop fails the hash. Decimal sums keep the
     aggregate order-independent."""
-    import os
-
     from olist_lakehouse_2_0_spark.catalog import Catalog
     from olist_lakehouse_2_0_spark.plans.pipeline import (
         Materialization,
         Pipeline,
         TableDef,
     )
-    from olist_lakehouse_2_0_spark.staging import staging_dir
 
     events = load(spark, sf_dir, "events", spread=True).select(
         "event_id", "user_id", "event_type", "value", "ts"
@@ -1222,11 +1155,7 @@ def events_csv_malformed_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id/value columns so the lazy parser must validate them; the
     corrupt rows' PARTIAL results (Spark keeps parseable fields of a
     bad line) are part of the oracled output."""
-    import os
-
     from pyspark.sql import types as T
-
-    from olist_lakehouse_2_0_spark.staging import staging_dir
 
     events = load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
@@ -1302,24 +1231,14 @@ def events_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's global latest-event-per-user — a row lost to a clobbered
     merge, a stale update let through, or a batch applied twice all
     shift it."""
-    import os
-
     from olist_lakehouse_2_0_spark.catalog import Catalog
-    from olist_lakehouse_2_0_spark.staging import staging_dir
-    from olist_lakehouse_2_0_spark.streaming.ingest import run_foreach_batch
     from olist_lakehouse_2_0_spark.streaming.upsert import VersionedMergeSink
 
-    events = load(spark, sf_dir, "events", spread=True).select(
+    events = load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value", "ts"
     )
     root = staging_dir("stream_merge")
-    landing = os.path.join(root, "landing")
-    events.repartition(4).write.parquet(landing)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
+    stream = land(events, root, files=4)
     cat = Catalog(root=os.path.join(root, "warehouse"))
     sink = VersionedMergeSink(
         cat, "user_latest", keys=("user_id",), sequence_col="event_id"
@@ -1381,13 +1300,6 @@ def events_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the 100 TB property under test); the drain is one availableNow
     run with the state-store partition count sized from its backlog."""
     import glob
-    import os
-
-    from olist_lakehouse_2_0_spark.staging import staging_dir
-    from olist_lakehouse_2_0_spark.streaming.ingest import run_to_parquet
-    from olist_lakehouse_2_0_spark.streaming.windows import (
-        tumbling_window_agg,
-    )
 
     cols = ["event_id", "user_id", "event_type", "ts", "value"]
     # spread=False: the slice is fixture prep for the LANDING files the
@@ -1453,9 +1365,9 @@ def events_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = tumbling_window_agg(
         stream.withWatermark("ts", "30 minutes"), distinct_users=False
     )
-    out = os.path.join(root, "windows")
-    run_to_parquet(agg, out, os.path.join(root, "ckpt"))
-    back = spark.read.schema(agg.schema).parquet(out)
+    back = run_to_parquet(
+        agg, os.path.join(root, "windows"), os.path.join(root, "ckpt")
+    )
     return back.orderBy("window_start", "event_type")
 
 

@@ -3017,7 +3017,6 @@ def minhash_incremental_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from olist_lakehouse_2_0_spark.operators.dedup import (
         append_minhash_index,
         probe_minhash_index,
-        token_shingles,
         write_minhash_index,
     )
     from olist_lakehouse_2_0_spark.staging import staging_dir
@@ -3045,12 +3044,11 @@ def minhash_incremental_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         _MINHASH_INDEX_CACHE[tag] = cat
     cands = probe_minhash_index(spark, cat, new_shard_id=1)
 
-    # Shingle-set keys; docs with zero shingles never enter (signatures
-    # drop them; the guard here mirrors that).
+    # Shingle-set keys. No zero-shingle guard: the signatures drop
+    # zero-shingle docs, so no candidate id names one, and the
+    # inner joins of the verify never reach their keys.
     def keys_of(d: DataFrame) -> DataFrame:
-        return d.select(
-            "doc_id", _shingle_set_key(F.col("text")).alias("__k")
-        ).filter(F.size(token_shingles(F.col("text"), 3)) > 0)
+        return d.select("doc_id", _shingle_set_key(F.col("text")).alias("__k"))
 
     verified = _keys_equal(
         cands, F.broadcast(keys_of(batch)), keys_of(docs), "id_new", "id_old"

@@ -8,6 +8,12 @@ files that arrived since the last run, exactly once, tracked by the
 stream checkpoint. ``trigger(availableNow=True)`` drains everything
 available and stops — the triggered-pipeline execution mode.
 
+One staged replay: :func:`land` writes a frame as parquet landing
+files and opens the file stream over them with the schema those files
+carry; :func:`run_to_parquet` (or :func:`run_foreach_batch`) drains the
+stream through ``_drain``; ``run_to_parquet`` returns the sink read back
+with the stream's schema, so no read-back runs a footer-inference job.
+
 Scale notes: the file-source checkpoint scales to millions of files
 (compact log); ``maxFilesPerTrigger`` bounds micro-batch size so a
 backlog doesn't produce one giant batch; downstream incremental tables
@@ -27,6 +33,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from olist_lakehouse_2_0_spark.catalog import written_schema
 from olist_lakehouse_2_0_spark.sources.batch import (
     RESCUE_COL,
     _schema_with_rescue,
@@ -56,18 +63,30 @@ def read_csv_stream(
     return with_audit_columns(df) if audit else df
 
 
+def land(df: DataFrame, root: str, files: int | None = None) -> DataFrame:
+    """Write ``df`` as parquet under ``<root>/landing`` and return the
+    file stream over it, read with the schema the files carry
+    (:func:`~olist_lakehouse_2_0_spark.catalog.written_schema`).
+    ``files=n`` lands ``n`` round-robin files and streams one per
+    micro-batch, so the drain runs ``n`` batches."""
+    landing = os.path.join(root, "landing")
+    (df if files is None else df.repartition(files)).write.parquet(landing)
+    reader = df.sparkSession.readStream.schema(written_schema(df))
+    if files is not None:
+        reader = reader.option("maxFilesPerTrigger", 1)
+    return reader.parquet(landing)
+
+
 def run_to_parquet(
-    stream_df: DataFrame,
-    output_path: str,
-    checkpoint_path: str,
-    transform: Callable[[DataFrame], DataFrame] | None = None,
-    mode: str = "append",
-) -> None:
+    stream_df: DataFrame, output_path: str, checkpoint_path: str
+) -> DataFrame:
     """Drain all available input into a parquet streaming table
-    (S5 sink shape) and stop — one triggered pipeline run."""
-    df = transform(stream_df) if transform is not None else stream_df
-    writer = df.writeStream.format("parquet").option("path", output_path)
-    _drain(df, writer, checkpoint_path, mode)
+    (S5 sink shape) and stop — one triggered pipeline run. Returns the
+    table read back with the stream's schema (no footer-inference job;
+    a drain that wrote no rows reads back empty)."""
+    writer = stream_df.writeStream.format("parquet").option("path", output_path)
+    _drain(stream_df, writer, checkpoint_path, "append")
+    return stream_df.sparkSession.read.schema(stream_df.schema).parquet(output_path)
 
 
 def run_foreach_batch(
