@@ -1089,15 +1089,30 @@ def load(
     file, which Spark's reader rejects, falls back to the nanosAsLong
     legacy flag and is converted back to a (microsecond) timestamp.
 
-    ``spread=True`` requests :func:`spread_scan` — use it when the
-    consumer does heavy per-row compute directly on the scan output.
+    ``spread=True`` fans the scan out as :func:`spread_scan` does. Ask
+    for it only when the consumer's per-row work (HOF text stats,
+    regexes, UDFs, vector math) costs more than a sorted round-robin
+    shuffle of the scanned columns; never for a filter, projection,
+    partial aggregate or hash join, which run as fast on the scan's own
+    partitions and would pay one more sort, shuffle and stage. The file
+    count comes from the version tuple :func:`read_parquet` just
+    memoised, so the decision needs no planner pass or file listing;
+    a path that is not local falls back to :func:`spread_scan`.
     """
     path = _testdata_path(sf_dir, name)
     if name == "events":
         df = _load_nanos_ts(spark, path, "ts")
     else:
         df = read_parquet(spark, path)
-    return spread_scan(spark, df) if spread else df
+    if not spread:
+        return df
+    hit = _SCHEMA_MEMO.get(_memo_key(spark, path))
+    if hit is None:
+        return spread_scan(spark, df)
+    n_files = sum(
+        not os.path.basename(rel).startswith(("_", ".")) for rel, _, _ in hit[0]
+    )
+    return _spread_over(spark, df, n_files)
 
 
 #: Session confs that change how parquet footers map to Spark types;
@@ -1222,11 +1237,31 @@ def spread_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
     default parallelism, round-robin repartition; at real scale (many
     files / row groups) this is a driver-side check and a no-op, so no
     shuffle is added on large inputs.
+
+    The repartition sorts every input partition
+    (``spark.sql.execution.sortBeforeRepartition``) and shuffles the
+    scanned columns, so it pays only when the per-row work costs more
+    than that (see :func:`load`). The file count comes from
+    ``df.inputFiles()``, a planner pass and a listing; :func:`load`
+    reads it from the schema memo and calls this only for paths that
+    are not local.
     """
+    return _spread_over(spark, df, len(df.inputFiles()))
+
+
+def _spread_over(spark: SparkSession, df: DataFrame, n_files: int) -> DataFrame:
     target = spark.sparkContext.defaultParallelism
-    if len(df.inputFiles()) < target:
-        return df.repartition(target)
-    return df
+    return df.repartition(target) if n_files < target else df
+
+
+def forget_schemas_under(root: str) -> None:
+    """Drop every memo entry for ``root`` or a path under it: called
+    when a staging root is deleted, so the memo holds no entry for a
+    path that no longer exists."""
+    root = os.path.abspath(root)
+    under = [k for k in list(_SCHEMA_MEMO) if os.path.commonpath((k[0], root)) == root]
+    for key in under:
+        _SCHEMA_MEMO.pop(key, None)
 
 
 def _load_nanos_ts(spark: SparkSession, path: str, ts_col: str) -> DataFrame:

@@ -165,7 +165,7 @@ def orders_building_segment_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orders whose customer is in the BUILDING market segment, via
     left-semi join: the probe side ships only c_custkey and the output
     never duplicates orders regardless of the dimension's cardinality."""
-    orders = load(spark, sf_dir, "orders", spread=True)
+    orders = load(spark, sf_dir, "orders")
     customer = load(spark, sf_dir, "customer")
     building = customer.filter(F.col("c_mktsegment") == "BUILDING").select(
         F.col("c_custkey").alias("o_custkey")
@@ -197,7 +197,7 @@ def customers_inactive_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     join — the churn-list shape. The recent-orders side reduces to a
     distinct key set before broadcasting."""
     customer = load(spark, sf_dir, "customer")
-    orders = load(spark, sf_dir, "orders", spread=True)
+    orders = load(spark, sf_dir, "orders")
     recent = (
         orders.filter(
             F.col("o_orderdate") >= F.lit("2001-01-01").cast("timestamp")
@@ -561,7 +561,7 @@ FROM per_nation CROSS JOIN total
 # the join's residual condition.
 # ---------------------------------------------------------------------------
 def discounted_revenue_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = load(spark, sf_dir, "lineitem", spread=True)
+    lineitem = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     li = lineitem.select(
         "l_partkey", "l_quantity", "l_extendedprice", "l_discount"

@@ -43,7 +43,7 @@ from olist_lakehouse_2_0_spark.streaming.windows import (
 def events_hourly_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour windows per event_type (count / distinct users /
     exact-decimal value sum)."""
-    return tumbling_window_agg(load(spark, sf_dir, "events", spread=True), duration="1 hour")
+    return tumbling_window_agg(load(spark, sf_dir, "events"), duration="1 hour")
 
 
 EVENTS_HOURLY_SQL = """
@@ -62,7 +62,7 @@ def events_sliding_halfhour(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding 1-hour windows hopping every 30 minutes: each event
     contributes to exactly 2 windows."""
     return sliding_window_agg(
-        load(spark, sf_dir, "events", spread=True), duration="1 hour", slide="30 minutes"
+        load(spark, sf_dir, "events"), duration="1 hour", slide="30 minutes"
     )
 
 
@@ -90,7 +90,7 @@ GROUP BY ws, event_type
 def events_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user gap-based sessions (30-min inactivity gap) via Spark's
     native ``session_window`` stateful operator."""
-    return sessionize(load(spark, sf_dir, "events", spread=True), gap="30 minutes")
+    return sessionize(load(spark, sf_dir, "events"), gap="30 minutes")
 
 
 # Oracle re-derives the same sessions with the lag + running-sum window
@@ -267,7 +267,7 @@ def events_asof_purchase_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     implementation, one shuffle on user_id)."""
     from olist_lakehouse_2_0_spark.operators.asof import asof_join
 
-    events = load(spark, sf_dir, "events", spread=True).filter(F.col("ts").isNotNull())
+    events = load(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     purchases = events.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )
@@ -299,7 +299,7 @@ def events_error_after_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter — linear shuffle, never a per-key cross product."""
     from olist_lakehouse_2_0_spark.operators.asof import interval_join
 
-    events = load(spark, sf_dir, "events", spread=True).filter(F.col("ts").isNotNull())
+    events = load(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     clicks = events.filter(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts"
     )
@@ -492,7 +492,7 @@ def events_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from olist_lakehouse_2_0_spark.streaming.windows import dedupe_stream
 
     events = (
-        load(spark, sf_dir, "events", spread=True)
+        load(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull())
         .select("event_id", "user_id", "event_type", "ts", "value")
     )
@@ -537,7 +537,7 @@ def events_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch join, so the drain keeps no state."""
     from olist_lakehouse_2_0_spark.streaming.joins import stream_static_enrich
 
-    events = load(spark, sf_dir, "events", spread=True).select(
+    events = load(spark, sf_dir, "events").select(
         "event_id", F.col("user_id").alias("c_custkey"), "event_type", "value"
     )
     dim = (
@@ -586,7 +586,7 @@ def events_rollup_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     not O(#events). Decimal sums keep the merge order-independent. The
     oracle aggregates raw events directly at monthly grain — merged
     states must be indistinguishable from a direct aggregate."""
-    events = load(spark, sf_dir, "events", spread=True).filter(
+    events = load(spark, sf_dir, "events").filter(
         F.col("ts").isNotNull()
     )
     hourly = events.groupBy(
@@ -635,7 +635,7 @@ def events_user_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set operations (§2.7 extension — the reference uses none, Spark
     provides them): purchasing users who also hit errors, minus users
     who ever signed up."""
-    events = load(spark, sf_dir, "events", spread=True)
+    events = load(spark, sf_dir, "events")
 
     def users_of(t: str) -> DataFrame:
         return events.filter(F.col("event_type") == t).select("user_id").distinct()
@@ -1006,7 +1006,7 @@ def csv_audit_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     # four ways only inflates the fixture cost (the subset keeps every
     # bucket populated at every scale factor).
     events = (
-        load(spark, sf_dir, "events", spread=True)
+        load(spark, sf_dir, "events")
         .filter(F.col("event_id") % 5 == 0)
         .select("event_id", "user_id", "event_type")
     )
@@ -1086,7 +1086,7 @@ def events_stream_table_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         TableDef,
     )
 
-    events = load(spark, sf_dir, "events", spread=True).select(
+    events = load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value", "ts"
     )
     root = staging_dir("s3_stream")

@@ -44,7 +44,7 @@ def daily_channel_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar date. The two series cover different date ranges, so both
     null sides of the full outer join are exercised; counts are
     zero-filled."""
-    orders = load(spark, sf_dir, "orders", spread=True)
+    orders = load(spark, sf_dir, "orders")
     events = load(spark, sf_dir, "events")
     daily_orders = orders.groupBy(
         F.col("o_orderdate").cast("date").alias("activity_date")
@@ -173,7 +173,7 @@ def orders_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order counts/revenue by CUBE (status, priority): per-cell,
     per-status, per-priority, and grand total — four grouping sets,
     one shuffle."""
-    orders = load(spark, sf_dir, "orders", spread=True)
+    orders = load(spark, sf_dir, "orders")
     base = orders.select(
         F.col("o_orderstatus").alias("status"),
         F.col("o_orderpriority").alias("priority"),
@@ -355,7 +355,7 @@ def customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram is a near-scalar aggregation (cardinality = max order
     count), cheap at any corpus size."""
     customer = load(spark, sf_dir, "customer")
-    orders = load(spark, sf_dir, "orders", spread=True)
+    orders = load(spark, sf_dir, "orders")
     routine = orders.filter(
         F.col("o_orderpriority") != "1-URGENT"
     ).select("o_orderkey", "o_custkey")
@@ -455,8 +455,8 @@ def shipments_in_order_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics."""
     from olist_lakehouse_2_0_spark.operators.joins import range_join
 
-    orders = load(spark, sf_dir, "orders", spread=True)
-    lineitem = load(spark, sf_dir, "lineitem", spread=True)
+    orders = load(spark, sf_dir, "orders")
+    lineitem = load(spark, sf_dir, "lineitem")
     windows = orders.filter(F.col("o_orderkey") % 97 == 0).select(
         F.col("o_orderkey").alias("window_id"),
         F.unix_date(F.col("o_orderdate").cast("date")).alias("__ws"),
@@ -500,7 +500,7 @@ def salted_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     technique."""
     from olist_lakehouse_2_0_spark.operators.joins import salted_join
 
-    orders = load(spark, sf_dir, "orders", spread=True).select(
+    orders = load(spark, sf_dir, "orders").select(
         "o_custkey", "o_totalprice"
     )
     customer = load(spark, sf_dir, "customer").select(
@@ -534,7 +534,7 @@ def salted_priority_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     survive one key holding 30% of the table."""
     from olist_lakehouse_2_0_spark.operators.joins import salted_agg
 
-    orders = load(spark, sf_dir, "orders", spread=True)
+    orders = load(spark, sf_dir, "orders")
     out = salted_agg(
         orders,
         ["o_orderpriority"],
@@ -592,7 +592,7 @@ def waiting_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the fact is never joined to itself on anything but the
     order key — per-order group sizes are bounded by order width, so
     no skew beyond AQE's reach."""
-    li = load(spark, sf_dir, "lineitem", spread=True).select(
+    li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
     orders_f = (
@@ -741,7 +741,7 @@ def top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppkey), a one-row MAX broadcast back onto the supplier-sized
     aggregate, the supplier dim broadcast for names — the fact is
     scanned once."""
-    li = load(spark, sf_dir, "lineitem", spread=True).filter(
+    li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01")
         & (F.col("l_shipdate") < "1997-01-01")
     )
@@ -814,7 +814,7 @@ def part_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("s_acctbal") < 0)
         .select("s_suppkey")
     )
-    li = load(spark, sf_dir, "lineitem", spread=True).select(
+    li = load(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey"
     )
     return (
@@ -862,7 +862,7 @@ def large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines). Plan: lineitem aggregates once on the order key
     (partial-combined), the qualifying set joins orders on the same
     key, customers broadcast."""
-    li = load(spark, sf_dir, "lineitem", spread=True)
+    li = load(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
         .agg(
@@ -948,7 +948,7 @@ def regional_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("p_size") == 7)
         .select("p_partkey", "p_brand")
     )
-    li = load(spark, sf_dir, "lineitem", spread=True).select(
+    li = load(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_extendedprice"
     )
     offers = (
@@ -1015,7 +1015,7 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     division, whose precision/rounding rules differ). Plan: all five
     dimension legs broadcast; the fact is scanned once and aggregated
     by year with the CASE folded into the same partial aggregate."""
-    li = load(spark, sf_dir, "lineitem", spread=True).select(
+    li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey",
         "l_extendedprice", "l_discount",
     )
@@ -1137,7 +1137,7 @@ def important_parts_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the grouped relation and its one-row total+count rollup), the
     scalar broadcasts back onto the part-sized aggregate — the fact
     never rescans."""
-    li = load(spark, sf_dir, "lineitem", spread=True)
+    li = load(spark, sf_dir, "lineitem")
     value = (
         F.col("l_extendedprice").cast(MONEY)
         * (1 - F.col("l_discount").cast("decimal(4,2)"))
@@ -1195,7 +1195,7 @@ def dominant_part_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (part, supplier) grain; the per-part totals are a second
     aggregate of THAT (already part×supplier-sized) relation, joined
     back on the part key; the supplier dim broadcasts."""
-    li = load(spark, sf_dir, "lineitem", spread=True).filter(
+    li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1997-01-01")
         & (F.col("l_shipdate") < "1998-01-01")
     )
@@ -1349,7 +1349,7 @@ def late_shipment_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .select("o_orderkey", "o_orderdate", "o_orderpriority")
     )
-    li = load(spark, sf_dir, "lineitem", spread=True).select(
+    li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_shipdate"
     )
     return (
@@ -1512,7 +1512,7 @@ def product_line_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", F.year("o_orderdate").alias("o_year")
     )
-    li = load(spark, sf_dir, "lineitem", spread=True).select(
+    li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey",
         "l_quantity", "l_extendedprice", "l_discount",
     )
@@ -1582,7 +1582,7 @@ def bloom_pruned_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         for k, v in confs.items():
             spark.conf.set(k, v)
-        li = load(spark, sf_dir, "lineitem", spread=True).select(
+        li = load(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_extendedprice", "l_discount"
         )
         orders = (
@@ -1645,6 +1645,8 @@ def _skew_rollup_pipelines(
     the merged pipeline directly."""
     from olist_lakehouse_2_0_spark.operators.joins import salted_join
 
+    # Spread: AQE splits a skewed partition only along map-output
+    # boundaries, and a one-file scan has a single map task to split.
     fact = load(spark, sf_dir, "lineitem", spread=True).select(
         F.when(F.col("l_orderkey") % 5 < 2, F.lit(1))
         .otherwise(F.col("l_orderkey"))

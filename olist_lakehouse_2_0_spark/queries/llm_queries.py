@@ -2654,40 +2654,46 @@ GROUP BY tf.doc_id
 """
 
 
-def dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical-document selection per dedup cluster: after connected
-    components groups duplicates, keep one representative per cluster —
-    the longest text, ties broken by lowest doc_id. This is the step
-    that turns a dup-pair graph into an actual keep/drop decision in a
-    training-data pipeline.
-
-    One shuffle on the component key serves both the member count and
-    the representative pick (count window + row_number window share the
-    partitioning)."""
-    from pyspark.sql import Window as W
-
-    docs = _with_duplicates(load(spark, sf_dir, "documents", spread=True))
-    fp = docs.select(
-        "doc_id",
-        F.length("text").alias("n_len"),
-        ops_text.fingerprint("text").alias("fp"),
-    )
-    pairs = _equal_key_pairs(fp, "doc_id", "fp")
-    members = dedup_components(pairs, cliques=True).join(
-        fp.select("doc_id", "n_len"), "doc_id"
-    )
-    pick = W.partitionBy("component").orderBy(F.desc("n_len"), F.asc("doc_id"))
+def _canonical_per_key(docs: DataFrame) -> DataFrame:
+    """(component, canonical_doc_id, n_members, canonical_len) per
+    fingerprint shared by two or more of ``docs`` (doc_id, text): the
+    group's smallest doc_id, its longest text (ties to the lowest
+    doc_id) and its size, from one group-by."""
+    pick = F.max(F.struct(F.length("text").alias("n_len"), (-F.col("doc_id")).alias("neg_id")))
     return (
-        members.withColumn("rn", F.row_number().over(pick))
-        .withColumn("n_members", F.count(F.lit(1)).over(W.partitionBy("component")))
-        .filter(F.col("rn") == 1)
+        docs.groupBy(ops_text.fingerprint("text").alias("fp"))
+        .agg(
+            F.min("doc_id").alias("component"),
+            F.count(F.lit(1)).alias("n_members"),
+            pick.alias("__pick"),
+        )
+        .filter(F.col("n_members") > 1)
         .select(
             "component",
-            F.col("doc_id").alias("canonical_doc_id"),
+            (-F.col("__pick.neg_id")).alias("canonical_doc_id"),
             "n_members",
-            F.col("n_len").cast("long").alias("canonical_len"),
+            F.col("__pick.n_len").cast("long").alias("canonical_len"),
         )
     )
+
+
+def dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Canonical-document selection per exact-duplicate cluster: keep
+    one representative per cluster — the longest text, ties broken by
+    lowest doc_id — and drop singletons. This is the step that turns
+    duplicate groups into an actual keep/drop decision in a
+    training-data pipeline.
+
+    The key is an equality key (the normalized-text fingerprint), and
+    equality is transitive, so the groups of the key are its clusters:
+    one group-by on the fingerprint gives the component (``min(doc_id)``),
+    the member count and the canonical pick (``max(struct(n_len,
+    -doc_id))``), with no pair set, no component pass and no window
+    (:func:`_canonical_per_key`). Pairs plus connected components are
+    for similarity keys, where A~B and B~C do not make A~C;
+    ``dedup_clusters`` exercises that path. The scan stays spread: the
+    regex fingerprint is per-row work that pays for the shuffle."""
+    return _canonical_per_key(_with_duplicates(load(spark, sf_dir, "documents", spread=True)))
 
 
 DEDUP_CANONICAL_SQL = r"""

@@ -161,11 +161,11 @@ FROM monthly
 # (reference src/pipelines/gold/orders_by_state.sql:20-85)
 # ---------------------------------------------------------------------------
 def orders_by_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load(spark, sf_dir, "orders", spread=True)
+    orders = load(spark, sf_dir, "orders")
     customer = load(spark, sf_dir, "customer")
     nation = load(spark, sf_dir, "nation")
     region = load(spark, sf_dir, "region")
-    lineitem = load(spark, sf_dir, "lineitem", spread=True)
+    lineitem = load(spark, sf_dir, "lineitem")
 
     # J3: per-order item totals, pre-aggregated at order grain before the
     # join (reference gold/orders_by_state.sql:20-26). Shuffles lineitem
@@ -450,8 +450,8 @@ GROUP BY s_name
 # (reference src/pipelines/gold/category_performance.sql:20-61)
 # ---------------------------------------------------------------------------
 def category_performance_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = load(spark, sf_dir, "lineitem", spread=True)
-    orders = load(spark, sf_dir, "orders", spread=True)
+    lineitem = load(spark, sf_dir, "lineitem")
+    orders = load(spark, sf_dir, "orders")
     part = load(spark, sf_dir, "part")
 
     monthly = (
@@ -670,7 +670,7 @@ FROM customer
 def datetime_function_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from olist_lakehouse_2_0_spark.functions.cleansing import delivery_days
 
-    orders = load(spark, sf_dir, "orders", spread=True)
+    orders = load(spark, sf_dir, "orders")
     ts_str = F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss")
     return orders.select(
         "o_orderkey",
@@ -705,7 +705,7 @@ FROM orders
 # via row_number window, the pattern AUTO CDC dedup builds on (§2.5 note).
 # ---------------------------------------------------------------------------
 def top_parts_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = load(spark, sf_dir, "lineitem", spread=True)
+    lineitem = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     part_rev = (
         lineitem.join(
@@ -750,7 +750,7 @@ WHERE rnk <= 3
 # operators/expectations.py).
 # ---------------------------------------------------------------------------
 def valid_orders_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load(spark, sf_dir, "orders", spread=True)
+    orders = load(spark, sf_dir, "orders")
     return orders.filter(
         F.col("o_orderkey").isNotNull()
         & F.col("o_custkey").isNotNull()
@@ -789,7 +789,7 @@ WHERE o_orderkey IS NOT NULL
 # this is the batch profiling twin.
 # ---------------------------------------------------------------------------
 def dq_violation_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem", spread=True)
+    li = load(spark, sf_dir, "lineitem")
     rules = {
         "orderkey_not_null": F.col("l_orderkey").isNotNull(),
         "quantity_range": F.col("l_quantity").between(1, 50),
@@ -861,7 +861,7 @@ def dq_drop_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         expect_or_drop,
     )
 
-    li = load(spark, sf_dir, "lineitem", spread=True)
+    li = load(spark, sf_dir, "lineitem")
     rules = [
         expect_or_drop("discount_low", F.col("l_discount") <= 0.05),
         expect_or_drop("quantity_cap", F.col("l_quantity") <= 30),
@@ -2369,7 +2369,7 @@ def dq_aggregate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         aggregate_gate_report,
     )
 
-    orders = load(spark, sf_dir, "orders", spread=True)
+    orders = load(spark, sf_dir, "orders")
     checks = {
         "row_count_min": F.count(F.lit(1)) >= 1,
         "orderkey_never_null": F.sum(F.col("o_orderkey").isNull().cast("int"))

@@ -47,7 +47,7 @@ from olist_lakehouse_2_0_spark.queries.relational import MONEY, MONEY_SUM, RATE
 def daily_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily revenue with a 7-day moving average, 7-day moving max and
     a running cumulative total (ROWS BETWEEN frame specs)."""
-    orders = load(spark, sf_dir, "orders", spread=True)
+    orders = load(spark, sf_dir, "orders")
     daily = (
         orders.filter(F.col("o_orderdate").isNotNull())
         .groupBy(F.col("o_orderdate").cast("date").alias("order_date"))
@@ -107,7 +107,7 @@ def segment_spend_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     full ranking family over a deterministic (spend DESC, custkey)
     total order — ties broken by key so every rank function hashes
     identically across engines."""
-    orders = load(spark, sf_dir, "orders", spread=True)
+    orders = load(spark, sf_dir, "orders")
     customer = load(spark, sf_dir, "customer")
     spend = orders.groupBy("o_custkey").agg(
         F.sum(F.col("o_totalprice").cast(MONEY)).cast(MONEY_SUM).alias("spend")
@@ -224,7 +224,7 @@ def daily_orders_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max (one tiny 1-row aggregate, sequence-exploded to #days
     rows), so no fact-scale data feeds the spine; the spine LEFT-joins
     the per-day aggregate."""
-    orders = load(spark, sf_dir, "orders", spread=True)
+    orders = load(spark, sf_dir, "orders")
     daily = (
         orders.filter(F.col("o_orderdate").isNotNull())
         .groupBy(F.col("o_orderdate").cast("date").alias("order_date"))

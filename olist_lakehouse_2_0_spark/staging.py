@@ -27,6 +27,8 @@ import atexit
 import shutil
 import tempfile
 
+from olist_lakehouse_2_0_spark.catalog import forget_schemas_under
+
 #: Live roots retained per tag. 2 = current + one grace generation for
 #: a still-unconsumed lazy result over the previous root.
 KEEP_ROOTS = 2
@@ -47,11 +49,14 @@ atexit.register(_cleanup_all)
 def staging_dir(tag: str) -> str:
     """Fresh staging root for ``tag``. Deletes the oldest root staged
     under the same tag once ``KEEP_ROOTS`` are live (see module
-    docstring for the lazy-reader grace contract) and registers the
-    new one for exit cleanup."""
+    docstring for the lazy-reader grace contract), together with the
+    schema-memo entries under it, and registers the new one for exit
+    cleanup."""
     roots = _ACTIVE.setdefault(tag, [])
     while len(roots) >= KEEP_ROOTS:
-        shutil.rmtree(roots.pop(0), ignore_errors=True)
+        old = roots.pop(0)
+        shutil.rmtree(old, ignore_errors=True)
+        forget_schemas_under(old)
     root = tempfile.mkdtemp(prefix=f"{tag}_")
     roots.append(root)
     return root

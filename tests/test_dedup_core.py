@@ -75,3 +75,53 @@ def test_winnow_overlap_pairs_keeps_print_at_max_fp_df(spark):
 
     assert pairs(3) == {(1, 2): 1.0, (1, 3): 1.0, (2, 3): 1.0}
     assert pairs(2) == {}
+
+
+def test_canonical_per_key_matches_pairs_components_window(spark):
+    """``dedup_canonical``'s one group-by on the fingerprint picks what
+    the pair path picked (equal-key pairs → ``dedup_components(cliques=True)``
+    → length join → rank windows): the longest text, ties to the lowest
+    doc_id, the same ``n_members``, singletons dropped."""
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
+
+    from olist_lakehouse_2_0_spark.operators import text as ops_text
+    from olist_lakehouse_2_0_spark.operators.dedup import (
+        _equal_key_pairs,
+        dedup_components,
+    )
+    from olist_lakehouse_2_0_spark.queries.llm_queries import _canonical_per_key
+
+    docs = spark.createDataFrame(
+        [
+            # a 3-member group whose longest text is not the lowest id
+            (7, "the cat sat"), (3, "The  cat sat"), (5, " the cat  sat "),
+            # a length tie: the lower id wins
+            (9, "Dog Runs "), (4, " dog runs"),
+            # unique fingerprints: singletons, dropped
+            (1, "alpha"), (2, "beta beta"), (6, "gamma"),
+        ],
+        "doc_id long, text string",
+    )
+    fp = docs.select(
+        "doc_id", F.length("text").alias("n_len"), ops_text.fingerprint("text").alias("fp")
+    )
+    members = dedup_components(_equal_key_pairs(fp, "doc_id", "fp"), cliques=True).join(
+        fp.select("doc_id", "n_len"), "doc_id"
+    )
+    pick = W.partitionBy("component").orderBy(F.desc("n_len"), F.asc("doc_id"))
+    expected = (
+        members.withColumn("rn", F.row_number().over(pick))
+        .withColumn("n_members", F.count(F.lit(1)).over(W.partitionBy("component")))
+        .filter(F.col("rn") == 1)
+        .select(
+            "component",
+            F.col("doc_id").alias("canonical_doc_id"),
+            "n_members",
+            F.col("n_len").cast("long").alias("canonical_len"),
+        )
+    )
+    got = _canonical_per_key(docs)
+    assert got.dtypes == expected.dtypes
+    assert sorted(got.collect()) == sorted(expected.collect())
+    assert sorted(tuple(r) for r in got.collect()) == [(3, 5, 3, 14), (4, 4, 2, 9)]
