@@ -979,9 +979,17 @@ def semdedup(
     :func:`kmeans_centroids`) -> map-side nearest-centroid assignment
     against one broadcast packed codebook -> self-equi-join on
     centroid_id with ``id_a < id_b`` -> JVM zip_with/aggregate cosine
-    -> left_anti of the drop set. No Python in any per-row path; the
-    only shuffles are the centroid_id self-join and the anti-join on
-    the id.
+    -> left_anti of the broadcast drop set. No Python in any per-row
+    path; the only shuffles are the centroid_id self-join and the drop
+    set's distinct.
+
+    The drop set is broadcast, not left to AQE: it is the distinct
+    ``id_b`` side of the above-threshold pairs (one id column, at most
+    the duplicated part of the corpus), the same bounded-output
+    assumption the ``pairs`` persist makes. Left to AQE, the anti-join
+    plans an id shuffle on the corpus side and drops it only when the
+    drop side's stage finishes first, so the plan would depend on
+    stage timing.
 
     ``num_clusters=None`` (the default) sizes the codebook to
     ``default_num_centroids`` = max(16, √n): with k≈√n balanced
@@ -1031,5 +1039,5 @@ def semdedup(
         .persist()
     )
     drops = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    survivors = corpus.join(drops, id_col, "left_anti")
+    survivors = corpus.join(F.broadcast(drops), id_col, "left_anti")
     return survivors, pairs

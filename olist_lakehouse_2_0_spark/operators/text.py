@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from olist_lakehouse_2_0_spark.fixedpoint import quantize
+
 #: Tiny per-language stopword marker sets for the n-gram/stopword
 #: language heuristic. Deliberately small: the heuristic's job is cheap
 #: bulk routing, not NLP-grade detection (fasttext-style models plug in
@@ -1334,10 +1336,8 @@ def bm25_topk(
     score_units, rank)`` for the ``k`` best-scoring documents per
     query, where ``score_units`` is the BM25 score in integer 1e-6
     units: each term's contribution ``idf * tf_saturation`` is
-    quantized to a BIGINT BEFORE the per-document sum, so the score is
-    an order-independent integer — no float-summation-order exposure
-    in the ranking or across engines (the bigram/unigram-LM
-    integer-log-units discipline).
+    quantized before the per-document sum (see ``fixedpoint``), so the
+    score is an order-independent integer.
 
     Plan shape: ONE tokenize pass feeds tf, document length, document
     frequency, and the corpus totals (persisted ``(doc, term, tf)``
@@ -1388,7 +1388,7 @@ def bm25_topk(
         F.col("__tf").cast("double")
         + F.lit(k1) * (F.lit(1.0) - F.lit(b) + F.lit(b) * rel_len)
     )
-    contrib_units = F.floor(idf * sat * F.lit(1e6) + F.lit(0.5)).cast("long")
+    contrib_units = quantize(idf * sat)
     scored = (
         matched.select(query_id, id_col, contrib_units.alias("__u"))
         .groupBy(query_id, id_col)

@@ -18,14 +18,11 @@ DateType -> timestamp. Decimal->double is a single correctly-rounded
 IEEE conversion of the already-quantized decimal on both engines, so
 values stay deterministic; it is NOT float accumulation.
 
-Residual hazard (hit once, at sf0.001, in round 2): when a double
-value lands EXACTLY on a decimal-cast tie boundary (....5 at the cast
-scale), Spark rounds half-up and DuckDB half-even — a one-ulp hash
-mismatch. Queries whose averages are exposed through a decimal cast
-accept this measure-zero risk; where a tie actually occurred
-(orders_by_state) the average is computed in exact integer units with
-explicit half-up rounding instead (the (2a+n) div 2n idiom — use it if
-another query ever trips).
+Residual hazard: a double that lands exactly on a decimal-cast tie
+rounds differently in the two engines (see ``fixedpoint``). Queries
+whose averages are exposed through a decimal cast accept this
+measure-zero risk; integer ratios, where ties are routine, go through
+``fixedpoint.ratio`` instead — use it if another query ever trips.
 
 Cache rule
 ----------

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from olist_lakehouse_2_0_spark.catalog import load
+from olist_lakehouse_2_0_spark.fixedpoint import ratio
 from olist_lakehouse_2_0_spark.queries.relational import MONEY, MONEY_SUM
 
 
@@ -238,18 +239,8 @@ def orders_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderstatus").alias("status"),
         F.col("o_totalprice").cast(MONEY).alias("price"),
     )
-    # avg in exact integer cents with explicit half-up rounding to 1e-6
-    # units (VERDICT r2 #8), in the OVERFLOW-SAFE quotient/remainder
-    # form: round_half_up(c*U/n) = (c div n)*U + (2*(c mod n)*U + n)
-    # div 2n. The naive (2cU + n) div 2n wraps int64 once group cents
-    # exceed ~4.6e14 (a ROLLUP grand total at large scale factors);
-    # here every intermediate is bounded by max(avg*U, 2*n*U) —
-    # overflow-free for any group with under ~4.6e14 ROWS.
-    avg_units = (
-        "(__cents div nullif(__cnt, 0)) * 10000"
-        " + (2 * (__cents % nullif(__cnt, 0)) * 10000 + __cnt)"
-        " div nullif(2 * __cnt, 0)"
-    )
+    # avg in exact integer cents (see fixedpoint): a ROLLUP grand total
+    # holds every order's cents.
     return (
         base.rollup("order_year", "status")
         .agg(
@@ -259,7 +250,8 @@ def orders_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("price").alias("__cnt"),
         )
         .withColumn(
-            "avg_order_value", F.expr(avg_units).cast("double") / F.lit(1e6)
+            "avg_order_value",
+            ratio("__cents", "__cnt", 10000).cast("double") / F.lit(1e6),
         )
         .drop("__cents", "__cnt")
     )

@@ -33,6 +33,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from olist_lakehouse_2_0_spark.catalog import load
+from olist_lakehouse_2_0_spark.fixedpoint import ratio
 from olist_lakehouse_2_0_spark.queries.relational import MONEY, MONEY_SUM
 
 
@@ -179,15 +180,7 @@ def orders_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("priority"),
         F.col("o_totalprice").cast(MONEY).alias("price"),
     )
-    # Exact integer-cent half-up average in the overflow-safe
-    # quotient/remainder form (see orders_rollup for the derivation —
-    # the naive (2cU+n) div 2n wraps int64 on CUBE grand totals at
-    # large scale factors).
-    avg_units = (
-        "(__cents div nullif(__cnt, 0)) * 10000"
-        " + (2 * (__cents % nullif(__cnt, 0)) * 10000 + __cnt)"
-        " div nullif(2 * __cnt, 0)"
-    )
+    # avg in exact integer cents (see fixedpoint).
     return (
         base.cube("status", "priority")
         .agg(
@@ -197,7 +190,8 @@ def orders_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("price").alias("__cnt"),
         )
         .withColumn(
-            "avg_order_value", F.expr(avg_units).cast("double") / F.lit(1e6)
+            "avg_order_value",
+            ratio("__cents", "__cnt", 10000).cast("double") / F.lit(1e6),
         )
         .drop("__cents", "__cnt")
     )

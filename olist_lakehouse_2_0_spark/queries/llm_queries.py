@@ -19,10 +19,11 @@ from __future__ import annotations
 import os
 import zlib
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from olist_lakehouse_2_0_spark.catalog import load
+from olist_lakehouse_2_0_spark.fixedpoint import quantize, ratio
 from olist_lakehouse_2_0_spark.localrel import arrow_local_relation
 from olist_lakehouse_2_0_spark.operators import text as ops_text
 from olist_lakehouse_2_0_spark.operators.dedup import (
@@ -144,11 +145,11 @@ FROM derived
 def doc_quality_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gold-style rollup of text quality per (source, lang)."""
     stats = text_stats(spark, sf_dir)
-    # avg_tokens: integer-exact half-up (2a+n) div 2n at 1e-6 units
-    # (VERDICT r2 #8). avg_quality stays a double mean of quality
-    # scores: quality is a sum of non-dyadic doubles, so landing
-    # EXACTLY on a decimal tie boundary is a genuine measure-zero
-    # event (unlike integer/cents ratios, which hit ties routinely).
+    # avg_tokens: integer 1e-6 units (see fixedpoint). avg_quality
+    # stays a double mean of quality scores: quality is a sum of
+    # non-dyadic doubles, so landing EXACTLY on a decimal tie boundary
+    # is a genuine measure-zero event (unlike integer/cents ratios,
+    # which hit ties routinely).
     return (
         stats.groupBy("source", "lang")
         .agg(
@@ -162,14 +163,7 @@ def doc_quality_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "avg_tokens",
-            # overflow-safe quotient/remainder half-up form (see
-            # analytics.orders_rollup for the derivation)
-            F.expr(
-                "(total_tokens div nullif(n_docs, 0)) * 1000000"
-                " + (2 * (total_tokens % nullif(n_docs, 0)) * 1000000"
-                "    + n_docs) div nullif(2 * n_docs, 0)"
-            ).cast("double")
-            / F.lit(1e6),
+            ratio("total_tokens", "n_docs", 1000000).cast("double") / F.lit(1e6),
         )
     )
 
@@ -1305,8 +1299,7 @@ def embedding_neardup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket (structural recall), the remaining corpus is near-orthogonal
     random vectors with no incidental pairs at this threshold, so the
     LSH output equals the brute-force pair set the oracle computes.
-    cosine is quantized with floor(x*1e6+0.5) — pure IEEE ops both
-    engines compute identically."""
+    cosine is quantized to 1e-6 units (see ``fixedpoint``)."""
     emb = load(spark, sf_dir, "embeddings", spread=True).select(
         "vec_id", "embedding"
     )
@@ -1317,7 +1310,7 @@ def embedding_neardup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.select(
         "id_a",
         "id_b",
-        (F.floor(F.col("cosine") * 1e6 + F.lit(0.5)) / 1e6).alias("cosine_q"),
+        (quantize(F.col("cosine")) / 1e6).alias("cosine_q"),
     )
 
 
@@ -1388,14 +1381,10 @@ def bm25_doc_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 lexical top-k (operators/text.py::bm25_topk) for
     three fixed multi-term queries over the documents corpus — the
     sparse-retrieval leg beside the dense ANN family. Every term
-    contribution is quantized to integer 1e-6 units BEFORE the
-    per-document sum (order-independent integer score), ranking ties
-    break on doc_id, and the oracle mirrors the arithmetic
-    expression-for-expression. Residual cross-engine exposure: the idf
-    LN is libm-dependent, so a 1-ulp divergence landing within ~1e-10
-    of the floor boundary could shift one unit — the same accepted
-    risk as the 1e6-quantized LM logprobs (bigram/unigram), guarded by
-    the tri-scale sweep rather than eliminated."""
+    contribution is quantized to integer 1e-6 units before the
+    per-document sum (see ``fixedpoint``, including the libm caveat on
+    the idf ``ln``), ranking ties break on doc_id, and the oracle
+    mirrors the arithmetic expression-for-expression."""
     docs = load(spark, sf_dir, "documents", spread=True).select(
         "doc_id", "text"
     )
@@ -1425,12 +1414,11 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Buettcher, SIGIR 2009) of the sparse BM25 leg and the dense
     brute-force-cosine leg — the standard two-leg production retrieval
     stack, composed entirely from this repo's operators. Each leg
-    contributes ``round(1e6 / (60 + rank))`` per retrieved doc,
-    computed with the exact half-up INTEGER idiom ``(2*1000000 +
-    (60+rank)) div (2*(60+rank))`` — the fused score is a pure-integer
-    sum with zero cross-engine float exposure (the dense leg's cosine
-    ORDERING is IEEE-identical sequential folds, already hash-proven
-    by ``embedding_topk_bruteforce``). doc_id and vec_id share an id
+    contributes ``round(1e6 / (60 + rank))`` per retrieved doc as a
+    half-up integer ratio (see ``fixedpoint``), so the fused score is a
+    pure-integer sum (the dense leg's cosine ORDERING is IEEE-identical
+    sequential folds, already hash-proven by
+    ``embedding_topk_bruteforce``). doc_id and vec_id share an id
     space in the testdata, standing in for a corpus with both text and
     embedding columns."""
     from olist_lakehouse_2_0_spark.operators.text import bm25_topk
@@ -1459,7 +1447,7 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=20,
     ).select("query_id", F.col("corpus_id").alias("doc_id"), "rank")
     legs = sparse.unionByName(dense)
-    rrf_units = F.expr("(2*1000000 + (60 + rank)) div (2*(60 + rank))")
+    rrf_units = ratio("1", "60 + rank", 1000000)
     fused = (
         legs.select("query_id", "doc_id", rrf_units.alias("__u"))
         .groupBy("query_id", "doc_id")
@@ -1589,11 +1577,11 @@ def doc_novelty_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     document. One explode + one df groupBy + one join back on the
     64-bit shingle hash — the same linear shapes as the dedup family,
     no pairwise work at all, so it scales where pair enumeration
-    can't. ``novelty_ppm`` is the exact half-up integer ratio
-    ``(n_shingles - n_shared) / n_shingles`` in 1e-6 units — no float
-    division either engine could round differently. The oracle
-    recomputes over raw string shingles; equality holds unless
-    xxhash64 collides (the jaccard_dups-established trust model)."""
+    can't. ``novelty_ppm`` is the half-up integer ratio
+    ``(n_shingles - n_shared) / n_shingles`` in 1e-6 units (see
+    ``fixedpoint``). The oracle recomputes over raw string shingles;
+    equality holds unless xxhash64 collides (the
+    jaccard_dups-established trust model)."""
     sh = hashed_shingles(
         load(spark, sf_dir, "documents", spread=True).select("doc_id", "text"),
         "doc_id",
@@ -1610,11 +1598,7 @@ def doc_novelty_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("__df") >= 2).cast("long")).alias("n_shared"),
         )
         .withColumn(
-            "novelty_ppm",
-            F.expr(
-                "(2*(n_shingles - n_shared)*1000000 + n_shingles)"
-                " div (2*n_shingles)"
-            ),
+            "novelty_ppm", ratio("n_shingles - n_shared", "n_shingles", 1000000)
         )
     )
 
@@ -2563,70 +2547,92 @@ GROUP BY doc_id
 """
 
 
+# ---------------------------------------------------------------------------
+# Corpus-LM core: tf per (keys, gram) -> log-prob table in 1e-6 units ->
+# per-key (n, sum of tf * logp_q). The unigram, bigram, Kneser-Ney,
+# CCNet and DSIR scorers share it. Nothing here persists: each caller
+# persists what its own plan reads more than once.
+# ---------------------------------------------------------------------------
+
+
+def _gram_tf(
+    docs: DataFrame, grams: Column, gram: str, keys: tuple[str, ...] = ("doc_id",)
+) -> DataFrame:
+    """(*keys, gram, tf): occurrences of each element of ``grams`` per
+    ``keys``, so a join on ``gram`` carries one row per distinct gram
+    per doc, not one per occurrence."""
+    return (
+        docs.select(*keys, F.explode(grams).alias(gram))
+        .groupBy(*keys, gram)
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+
+
+def _unigram_logp(counts: DataFrame) -> DataFrame:
+    """(token, logp_q): ``log(c / n)`` in 1e-6 units from ``counts``
+    (token, c); the corpus total ``n`` reaches the plan as a broadcast
+    scalar."""
+    total = counts.agg(F.sum("c").alias("n"))
+    return counts.crossJoin(F.broadcast(total)).select(
+        "token",
+        quantize(
+            F.log(F.col("c").cast("double")) - F.log(F.col("n").cast("double"))
+        ).alias("logp_q"),
+    )
+
+
+def _logp_sums(
+    tf: DataFrame,
+    logp: DataFrame,
+    gram: str,
+    keys: tuple[str, ...] = ("doc_id",),
+    n: str = "n_tokens",
+) -> DataFrame:
+    """(*keys, n, sum_logp_q): sum of tf and of tf * logp_q per
+    ``keys`` over ``tf`` joined to ``logp`` (gram, logp_q). Both are
+    integer sums, so order-independent at any parallelism."""
+    return (
+        tf.join(logp, gram)
+        .groupBy(*keys)
+        .agg(
+            F.sum("tf").cast("long").alias(n),
+            F.sum(F.col("tf") * F.col("logp_q")).cast("long").alias("sum_logp_q"),
+        )
+    )
+
+
+def _avg_logprob(sum_q: Column, n: Column) -> Column:
+    """Mean log-prob from a 1e-6-unit sum over ``n`` grams."""
+    return sum_q.cast("double") / (n.cast("double") * F.lit(1e6))
+
+
+def _doc_avg_logprob(tf: DataFrame, logp: DataFrame, gram: str, n: str) -> DataFrame:
+    """(doc_id, n, avg_logprob): each doc's mean log-prob over its
+    ``n`` grams."""
+    return _logp_sums(tf, logp, gram, n=n).select(
+        "doc_id", n, _avg_logprob(F.col("sum_logp_q"), F.col(n)).alias("avg_logprob")
+    )
+
+
 def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-level unigram language-model scoring: train token
     frequencies over the whole corpus, then score each document by its
     average token log-probability — the classic cheap LM-quality signal
     for training-data filtering (low scores = gibberish / rare-token
-    soup).
+    soup). Log-probs are in 1e-6 units (see ``fixedpoint``).
 
-    Scale design: term frequencies aggregate per (doc, token) first, so
-    the token-key join carries one row per distinct token per doc, not
-    one per occurrence. The tf relation feeds three consumers (the
-    scoring join, the vocabulary counts, and via those the corpus
-    total), so it is persisted explicitly — one tokenize+shuffle pass
-    over the corpus instead of three (exchange reuse can't be relied
-    on here: the explode subtrees canonicalize differently per
-    branch). The vocab counts are vocab-sized and persisted too; the
-    total reaches the plan as a broadcast scalar. Common-token key
+    Scale design: the tf relation feeds three consumers (the scoring
+    join, the vocabulary counts, and via those the corpus total), so
+    it is persisted explicitly — one tokenize+shuffle pass over the
+    corpus instead of three (exchange reuse can't be relied on here:
+    the explode subtrees canonicalize differently per branch). The
+    vocab counts are vocab-sized and persisted too. Common-token key
     skew ("the" joins against every doc) is AQE skew-split territory;
     no driver-side collection anywhere."""
     docs = load(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
-    tf = (
-        docs.select("doc_id", F.explode(ops_text.tokens("text")).alias("token"))
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
-    )
+    tf = _gram_tf(docs, ops_text.tokens("text"), "token").persist()
     counts = tf.groupBy("token").agg(F.sum("tf").alias("c")).persist()
-    total = counts.agg(F.sum("c").alias("n"))
-    # logp quantizes to an INTEGER number of 1e-6 units at the source,
-    # via floor(x*1e6 + 0.5) — pure IEEE multiply/add/floor that both
-    # engines compute bit-identically (engine-native double->decimal
-    # casts do NOT agree: BigDecimal shortest-repr vs multiply-and-
-    # round). After quantization all downstream arithmetic (tf x logp
-    # products, the per-doc sum) is exact integer math, so the result
-    # is order-independent at any parallelism. The unit is 1e-6, not
-    # 1e-9: log() itself is not guaranteed correctly rounded across
-    # libm implementations, and a 1-ulp input difference flips the
-    # quantized value with probability ~|x| * 1.1e-16 * Q per distinct
-    # key — ~1e-9 per key at Q=1e6 (negligible even at billions of
-    # distinct tokens) vs ~1e-6 at Q=1e9.
-    logp = counts.crossJoin(F.broadcast(total)).select(
-        "token",
-        F.floor(
-            (
-                F.log(F.col("c").cast("double"))
-                - F.log(F.col("n").cast("double"))
-            )
-            * 1e6
-            + 0.5
-        ).alias("logp_q"),
-    )
-    return (
-        tf.join(logp, "token")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("tf").alias("n_tokens"),
-            # tf x logp_q is exact integer math, so the sum is
-            # order-independent: identical at any parallelism and
-            # bit-equal to the single-threaded oracle.
-            (
-                F.sum(F.col("tf") * F.col("logp_q")).cast("double")
-                / (F.sum("tf").cast("double") * F.lit(1e6))
-            ).alias("avg_logprob"),
-        )
-    )
+    return _doc_avg_logprob(tf, _unigram_logp(counts), "token", "n_tokens")
 
 
 UNIGRAM_LOGPROB_SQL = r"""
@@ -2730,12 +2736,7 @@ def doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     docs = load(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
-    tf = (
-        docs.select("doc_id", F.explode(ops_text.tokens("text")).alias("token"))
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
-    )
+    tf = _gram_tf(docs, ops_text.tokens("text"), "token").persist()
     df_ = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     n_docs = tf.select("doc_id").distinct().agg(
         F.count(F.lit(1)).alias("n_docs")
@@ -2906,23 +2907,12 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     per doc; the conditional-probability table joins bigram counts to
     their prefix unigram counts on the token key (vocab²-bounded, AQE
     skew territory for stop-bigrams); V arrives as a broadcast scalar.
-    Log-probs quantize to integer 1e-6 units at the source (floor(x*1e6
-    + 0.5) — see unigram_logprob for the unit choice and the libm
-    1-ulp flip analysis), so every downstream product and sum is exact
-    integer math, order-independent at any parallelism."""
+    Log-probs are in 1e-6 units (see ``fixedpoint``)."""
     docs = load(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
     toks = docs.select("doc_id", F.explode(ops_text.tokens("text")).alias("token"))
     uc = toks.groupBy("token").agg(F.count(F.lit(1)).alias("c1")).persist()
     vocab = uc.agg(F.count(F.lit(1)).alias("vsize"))
-    bf = (
-        docs.select(
-            "doc_id",
-            F.explode(ops_text.word_ngrams("text", 2)).alias("bigram"),
-        )
-        .groupBy("doc_id", "bigram")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
-    )
+    bf = _gram_tf(docs, ops_text.word_ngrams("text", 2), "bigram").persist()
     bc = bf.groupBy("bigram").agg(F.sum("tf").cast("long").alias("c12"))
     lp = (
         bc.withColumn("__w1", F.split_part(F.col("bigram"), F.lit(" "), F.lit(1)))
@@ -2930,30 +2920,16 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(vocab))
         .select(
             "bigram",
-            F.floor(
-                (
-                    F.log(F.col("c12").cast("double") + F.lit(0.5))
-                    - F.log(
-                        F.col("c1").cast("double")
-                        + F.lit(0.5) * F.col("vsize").cast("double")
-                    )
+            quantize(
+                F.log(F.col("c12").cast("double") + F.lit(0.5))
+                - F.log(
+                    F.col("c1").cast("double")
+                    + F.lit(0.5) * F.col("vsize").cast("double")
                 )
-                * 1e6
-                + 0.5
             ).alias("logp_q"),
         )
     )
-    return (
-        bf.join(lp, "bigram")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("tf").cast("long").alias("n_bigrams"),
-            (
-                F.sum(F.col("tf") * F.col("logp_q")).cast("double")
-                / (F.sum("tf").cast("double") * F.lit(1e6))
-            ).alias("avg_logprob"),
-        )
-    )
+    return _doc_avg_logprob(bf, lp, "bigram", "n_bigrams")
 
 
 BIGRAM_LOGPROB_SQL = r"""
@@ -3103,24 +3079,13 @@ def kneser_ney_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrences (NOT raw unigram counts — they differ at document
     boundaries, where a final token has no successor). The probability
     expression is evaluated in IEEE doubles with an identical
-    operation tree on both engines, then log-quantized to integer
-    1e-6 units at the source (the repo's order-independence
-    discipline; same measure-zero cross-libm caveat as
-    ``unigram_logprob``), so per-doc sums are exact integers at any
-    parallelism. Trained on the corpus it scores, every scored bigram
-    exists in the table — no unseen-event branch."""
+    operation tree on both engines, then its log is quantized to 1e-6
+    units (see ``fixedpoint``). Trained on the corpus it scores, every
+    scored bigram exists in the table — no unseen-event branch."""
     docs = load(spark, sf_dir, "documents", spread=True).select(
         "doc_id", "text"
     )
-    bf = (
-        docs.select(
-            "doc_id",
-            F.explode(ops_text.word_ngrams("text", 2)).alias("bigram"),
-        )
-        .groupBy("doc_id", "bigram")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
-    )
+    bf = _gram_tf(docs, ops_text.word_ngrams("text", 2), "bigram").persist()
     bc = (
         bf.groupBy("bigram")
         .agg(F.sum("tf").cast("long").alias("c12"))
@@ -3149,27 +3114,9 @@ def kneser_ney_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         bc.join(prefix, "__w1")
         .join(cont, "__w2")
         .crossJoin(F.broadcast(btypes))
-        .select(
-            "bigram",
-            F.floor(F.log(p) * 1e6 + F.lit(0.5)).cast("long").alias("logp_q"),
-        )
+        .select("bigram", quantize(F.log(p)).alias("logp_q"))
     )
-    return (
-        bf.join(lp, "bigram")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("tf").cast("long").alias("n_bigrams"),
-            F.sum(F.col("tf") * F.col("logp_q")).cast("long").alias("__slp"),
-        )
-        .select(
-            "doc_id",
-            "n_bigrams",
-            (
-                F.col("__slp").cast("double")
-                / (F.col("n_bigrams").cast("double") * F.lit(1e6))
-            ).alias("avg_logprob"),
-        )
-    )
+    return _doc_avg_logprob(bf, lp, "bigram", "n_bigrams")
 
 
 KNESER_NEY_LOGPROB_SQL = r"""
@@ -3696,48 +3643,24 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     each language's documents by LM score and split into head/middle/
     tail terciles — the standard corpus-quality stratification before
     sampling). A corpus-trained unigram LM scores every document
-    (integer 1e-6-unit log-probs — the repo's order-independence
-    discipline, see ``unigram_logprob``); within each language,
+    (the ``unigram_logprob`` table, 1e-6 units); within each language,
     ``ntile(3)`` over (avg logprob DESC, doc_id) assigns buckets, and
     the rollup exposes per-(lang, bucket) document/token mass and the
     exact-integer bucket-level average logprob.
 
-    Scale: tf aggregates per (doc, token) before the vocab join (one
-    row per distinct token per doc); bucket assignment replicates
-    NTILE's arithmetic over the distributed two-pass rank — no
-    per-lang window funnel (a language partition is corpus/|langs|
-    rows); every sum that crosses partitions is integer. The per-doc
-    ordering metric is a single IEEE division of two integers — bit-
-    equal on any engine, so bucket assignment is deterministic."""
+    Scale: bucket assignment replicates NTILE's arithmetic over the
+    distributed two-pass rank — no per-lang window funnel (a language
+    partition is corpus/|langs| rows); every sum that crosses
+    partitions is integer. The per-doc ordering metric is a single
+    IEEE division of two integers — bit-equal on any engine, so bucket
+    assignment is deterministic."""
     docs = load(spark, sf_dir, "documents", spread=True).select(
         "doc_id", "lang", "text"
     )
-    tf = (
-        docs.select("doc_id", F.explode(ops_text.tokens("text")).alias("token"))
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
-    )
-    counts = tf.groupBy("token").agg(F.sum("tf").alias("c"))
-    total = counts.agg(F.sum("c").alias("n"))
-    logp = counts.crossJoin(F.broadcast(total)).select(
-        "token",
-        F.floor(
-            (
-                F.log(F.col("c").cast("double"))
-                - F.log(F.col("n").cast("double"))
-            )
-            * 1e6
-            + 0.5
-        ).alias("logp_q"),
-    )
+    tf = _gram_tf(docs, ops_text.tokens("text"), "token").persist()
+    logp = _unigram_logp(tf.groupBy("token").agg(F.sum("tf").alias("c")))
     scored = (
-        tf.join(logp, "token")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("tf").alias("n_tokens"),
-            F.sum(F.col("tf") * F.col("logp_q")).alias("sum_logp_q"),
-        )
+        _logp_sums(tf, logp, "token")
         .join(docs.select("doc_id", "lang"), "doc_id")
         .withColumn(
             "metric",
@@ -3780,10 +3703,9 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_tokens").alias("n_tokens"),
-            (
-                F.sum("sum_logp_q").cast("double")
-                / (F.sum("n_tokens").cast("double") * F.lit(1e6))
-            ).alias("bucket_avg_logprob"),
+            _avg_logprob(F.sum("sum_logp_q"), F.sum("n_tokens")).alias(
+                "bucket_avg_logprob"
+            ),
         )
         .orderBy("lang", "bucket")
     )
@@ -3842,23 +3764,13 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw documents (weight DESC, doc_id tiebreak) are the ones
     importance resampling would pull toward the target distribution.
 
-    Log-probs quantize to integer 1e-6 units (the repo discipline), so
-    per-doc weights are exact integer sums — order-independent at any
-    parallelism; the final /1e6 exposes a deterministic double. Vocab
-    size and corpus totals reach the plan as broadcast scalars; no
-    driver collect."""
+    Log-ratios are in 1e-6 units (see ``fixedpoint``), so per-doc
+    weights are exact integer sums. Vocab size and corpus totals reach
+    the plan as broadcast scalars; no driver collect."""
     docs = load(spark, sf_dir, "documents", spread=True).select(
         "doc_id", "source", "text"
     )
-    tf = (
-        docs.select(
-            "doc_id",
-            "source",
-            F.explode(ops_text.tokens("text")).alias("token"),
-        )
-        .groupBy("doc_id", "source", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
+    tf = _gram_tf(docs, ops_text.tokens("text"), "token", ("doc_id", "source"))
     is_target = F.col("source") == "src0"
     by_token = tf.groupBy("token").agg(
         F.sum(F.when(is_target, F.col("tf")).otherwise(F.lit(0))).alias("c_t"),
@@ -3873,25 +3785,15 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokens one side never saw.
     ratio_q = by_token.crossJoin(F.broadcast(totals)).select(
         "token",
-        F.floor(
-            (
-                F.log((F.col("c_t") + 1).cast("double"))
-                - F.log((F.col("n_t") + F.col("v")).cast("double"))
-                - F.log((F.col("c_r") + 1).cast("double"))
-                + F.log((F.col("n_r") + F.col("v")).cast("double"))
-            )
-            * 1e6
-            + 0.5
-        ).alias("ratio_q"),
+        quantize(
+            F.log((F.col("c_t") + 1).cast("double"))
+            - F.log((F.col("n_t") + F.col("v")).cast("double"))
+            - F.log((F.col("c_r") + 1).cast("double"))
+            + F.log((F.col("n_r") + F.col("v")).cast("double"))
+        ).alias("logp_q"),
     )
-    raw_scored = (
-        tf.filter(~is_target)
-        .join(ratio_q, "token")
-        .groupBy("doc_id", "source")
-        .agg(
-            F.sum("tf").alias("n_tokens"),
-            F.sum(F.col("tf") * F.col("ratio_q")).alias("sum_ratio_q"),
-        )
+    raw_scored = _logp_sums(
+        tf.filter(~is_target), ratio_q, "token", keys=("doc_id", "source")
     )
     from pyspark.sql.window import Window
 
@@ -3901,9 +3803,9 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # window exists anywhere in this path; the row_number window runs
     # over 25 rows.
     top = raw_scored.orderBy(
-        F.col("sum_ratio_q").desc(), F.col("doc_id")
+        F.col("sum_logp_q").desc(), F.col("doc_id")
     ).limit(25)
-    w = Window.orderBy(F.col("sum_ratio_q").desc(), F.col("doc_id"))
+    w = Window.orderBy(F.col("sum_logp_q").desc(), F.col("doc_id"))
     out = (
         top.withColumn("rank", F.row_number().over(w))
         .select(
@@ -3911,7 +3813,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "source",
             "n_tokens",
-            (F.col("sum_ratio_q").cast("double") / F.lit(1e6)).alias(
+            (F.col("sum_logp_q").cast("double") / F.lit(1e6)).alias(
                 "log_importance"
             ),
         )

@@ -24,6 +24,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from olist_lakehouse_2_0_spark.catalog import _fs, load
+from olist_lakehouse_2_0_spark.fixedpoint import ratio
 
 MONEY = "decimal(12,2)"  # input cast for exact money arithmetic
 MONEY_SUM = "decimal(18,2)"  # output type for money sums
@@ -63,15 +64,10 @@ def daily_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast(RATE)
             .alias("finished_rate_pct"),
         )
-        # avg over exact cents with explicit half-up rounding — the
-        # engine-native double->DECIMAL(18,6) cast diverged on a
-        # .xxxxx5 tie at sf0.1 (see registry hazard note).
         .withColumn(
             "avg_order_value",
-            F.expr(
-                "(cast(total_revenue * 100 as bigint) * 20000 + total_orders)"
-                " div nullif(2 * total_orders, 0)"
-            ).cast("double")
+            ratio("cast(total_revenue * 100 as bigint)", "total_orders", 10000)
+            .cast("double")
             / F.lit(1e6),
         )
         .select(
@@ -194,15 +190,7 @@ def orders_by_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(order_totals, F.col("o_orderkey") == F.col("l_orderkey"), "left")
         .withColumn("region_group", region_group)
     )
-    # avg_order_item_value: exact integer-cent arithmetic with explicit
-    # half-up integer rounding to 1e-6 units. A double AVG cast to
-    # DECIMAL(18,6) hit a cross-engine tie at sf0.001 (....0740625
-    # rounds HALF_UP in Spark's decimal cast, half-even in DuckDB's).
-    # round-half-up(c*1e4/n) in the overflow-safe quotient/remainder
-    # form — (c div n)*1e4 + (2*(c mod n)*1e4 + n) div 2n — identical
-    # integer math in both engines with every intermediate bounded by
-    # max(avg*1e4, 2n*1e4), so no int64 wrap at any group size (the
-    # naive (2c*1e4+n) div 2n wraps past ~4.6e14 group cents).
+    # avg_order_item_value in exact integer cents (see fixedpoint).
     cents = F.sum((F.col("order_item_total") * 100).cast("long"))
     cnt = F.count("order_item_total")
     return (
@@ -220,14 +208,7 @@ def orders_by_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "avg_order_item_value",
-            (
-                F.expr(
-                    "(__cents div nullif(__cnt, 0)) * 10000"
-                    " + (2 * (__cents % nullif(__cnt, 0)) * 10000"
-                    "    + __cnt) div nullif(2 * __cnt, 0)"
-                ).cast("double")
-                / F.lit(1e6)
-            ),
+            ratio("__cents", "__cnt", 10000).cast("double") / F.lit(1e6),
         )
         .select(
             "nation",
@@ -375,10 +356,7 @@ def seller_performance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     total_rev = F.sum(F.col("l_extendedprice").cast(MONEY))
     n_orders = F.countDistinct("l_orderkey")
-    # Averages via exact integer cents with explicit half-up rounding
-    # to 1e-6 ((2a+n) div 2n) — the sf0.1 cross-scale check caught both
-    # engine-native decimal casts on a .xxxxx5 tie (Spark half-up,
-    # DuckDB half-even). See the registry docstring hazard note.
+    # Averages in exact integer cents (see fixedpoint).
     return (
         joined.groupBy(F.col("s_name").alias("seller_name"))
         .agg(
@@ -394,18 +372,11 @@ def seller_performance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("__cents", (F.col("total_revenue") * 100).cast("long"))
         .withColumn(
             "avg_order_revenue",
-            F.expr(
-                "(__cents * 20000 + total_orders)"
-                " div nullif(2 * total_orders, 0)"
-            ).cast("double")
-            / F.lit(1e6),
+            ratio("__cents", "total_orders", 10000).cast("double") / F.lit(1e6),
         )
         .withColumn(
             "avg_item_price",
-            F.expr(
-                "(__cents * 20000 + total_items_sold)"
-                " div nullif(2 * total_items_sold, 0)"
-            ).cast("double")
+            ratio("__cents", "total_items_sold", 10000).cast("double")
             / F.lit(1e6),
         )
         .select(

@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 #: and drift under 1000-way parallelism; SURVEY.md §7.4).
 VALUE = "decimal(10,2)"
 VALUE_SUM = "decimal(18,2)"
-AVG6 = "decimal(18,6)"
 
 
 def tumbling_window_agg(
